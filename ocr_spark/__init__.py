@@ -22,3 +22,7 @@ pipeline) as an idiomatic Spark DataFrame engine:
 """
 
 __version__ = "0.1.0"
+
+from ocr_spark import _worker
+
+_worker.install()

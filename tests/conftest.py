@@ -33,3 +33,14 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many tests the missing reference data skipped, every run."""
+    reason = "reference data absent"
+    n = sum(
+        1 for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple) and r.longrepr[2].endswith(reason)
+    )
+    if n:
+        terminalreporter.write_sep("=", f"{n} tests skipped: {reason}", yellow=True)

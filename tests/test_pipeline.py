@@ -20,7 +20,7 @@ from ocr_spark.kernels import (
     split_completion,
     DeterministicTokenizer,
 )
-from ocr_spark.pipeline import DEFAULT_VOCAB, extract_conversations
+from ocr_spark.pipeline import DEFAULT_VOCAB, extract_conversations, extract_turns
 from ocr_spark.synth import transcripts
 
 N_CONVS = 150
@@ -87,10 +87,12 @@ def input_rows(spark):
     return [r.asDict() for r in df.collect()]
 
 
-def test_per_turn_text_equality(spark, input_rows):
-    """Spark pipeline output == pure-kernel oracle, byte-for-byte."""
+@pytest.mark.parametrize("extract", [extract_conversations, extract_turns],
+                         ids=lambda f: f.__name__)
+def test_per_turn_text_equality(spark, input_rows, extract):
+    """Both extraction paths == pure-kernel oracle, byte-for-byte."""
     golden = _golden_rows(input_rows)
-    df = extract_conversations(transcripts(spark, N_CONVS, seed=42))
+    df = extract(transcripts(spark, N_CONVS, seed=42))
     got = _spark_rows(df)
     assert len(got) == len(golden)
     for g, o in zip(got, golden):
