@@ -213,72 +213,6 @@ def bench_cc_star_chain(spark, n_edges: int = 10_000) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# streaming assembler throughput (VERDICT r3 #8)
-# ---------------------------------------------------------------------------
-
-def bench_stream_assemble(spark, n_convs: int = 20_000, n_files: int = 16,
-                          files_per_batch: int = 4) -> dict:
-    """Sustained turns/s through the stateful conversation assembler.
-
-    The assembler (applyInPandasWithState, EOC-marker-gated) is
-    correctness-tested on small splits; this measures its state-store
-    cost at bench scale: the synthetic corpus + markers is dropped as
-    ``n_files`` JSONL files and drained with availableNow at
-    ``files_per_batch`` per micro-batch, so conversations genuinely
-    cross state-store boundaries across ~n_files/files_per_batch
-    micro-batches.  Reported turns/s EXCLUDES the marker control rows.
-
-    Two configurations per round (round-5 profile, BENCH.md §6): the
-    4-micro-batch drain (state genuinely crosses micro-batch
-    boundaries — the correctness-shaped number) and a single-batch
-    drain of the same files (the throughput-shaped number: the
-    assembler's cost is per-micro-batch state machinery, so trigger
-    sizing is the 4x lever; profile in scripts/profile_assembler.py).
-    """
-    from ocr_spark.streaming import run_assemble_stream, with_eoc_markers
-    from ocr_spark.synth import transcripts
-
-    tmp = tempfile.mkdtemp(
-        prefix="ocr_bench_stream_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    inp = os.path.join(tmp, "in")
-    out = os.path.join(tmp, "out")
-    try:
-        t = transcripts(spark, n_convs)
-        n_turns = t.count()
-        # parquet drop files: keeps source parsing out of the number —
-        # this section measures the STATE-STORE + assembly cost
-        with_eoc_markers(t).repartition(n_files).write.mode(
-            "overwrite").parquet(inp)
-        t0 = time.time()
-        pending = run_assemble_stream(spark, inp, out,
-                                      max_files=files_per_batch, fmt="parquet")
-        sec = round(time.time() - t0, 3)
-        out_rows = spark.read.parquet(os.path.join(out, "data")).count()
-        assert out_rows == n_turns and pending == 0, (
-            f"stream drain incomplete: {out_rows}/{n_turns} rows, "
-            f"{pending} conversations still buffered"
-        )
-        # tuned config: every file in ONE micro-batch — one state-store
-        # load/commit cycle instead of n_files/files_per_batch
-        out1 = os.path.join(tmp, "out1")
-        t0 = time.time()
-        pending1 = run_assemble_stream(spark, inp, out1,
-                                       max_files=n_files, fmt="parquet")
-        sec1 = round(time.time() - t0, 3)
-        out_rows1 = spark.read.parquet(os.path.join(out1, "data")).count()
-        assert out_rows1 == n_turns and pending1 == 0
-        return {"convs": n_convs, "turns": n_turns, "sec": sec,
-                "turns_per_sec": round(n_turns / sec, 1),
-                "micro_batches": n_files // files_per_batch,
-                "sec_single_batch": sec1,
-                "turns_per_sec_single_batch": round(n_turns / sec1, 1)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
 # main bench
 # ---------------------------------------------------------------------------
 
@@ -326,12 +260,10 @@ def main() -> None:
             query_secs[name] = round(dt, 3)
             total += dt
 
-    # -- section 1b: star-CC adversarial chain + streaming assembler ----
+    # -- section 1b: star-CC adversarial chain ----------------------------
     cc_star = None
-    stream_tp = None
     if not args.skip_queries:
         cc_star = bench_cc_star_chain(spark)
-        stream_tp = bench_stream_assemble(spark)
 
     # -- section 2+3: synth transcripts, throughput, scaling ------------
     tmp = tempfile.mkdtemp(
@@ -391,7 +323,6 @@ def main() -> None:
             "throughput": tp_4n,
             "scaling": scaling,
             "cc_star_chain": cc_star,
-            "stream_assemble": stream_tp,
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

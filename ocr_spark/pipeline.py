@@ -197,14 +197,11 @@ def _extract_batches(
     only remaining per-row Python is span materialization, and only on
     the rows a vectorized contains() pre-filter selects.
     """
-    import re as _re
-
     import numpy as np
 
     from ocr_spark.kernels.tokenizer import count_pieces_batch
 
-    vocab = list(vocab)
-    vocab_re = _re.compile("|".join(_re.escape(k) for k in vocab))
+    spans_of = _span_finder(vocab)
 
     for pdf in batches:
         lens = np.fromiter((len(x) for x in pdf["turn_idxs"]), dtype=np.int64,
@@ -281,20 +278,7 @@ def _extract_batches(
         )
         n_tokens = np.asarray(count_pieces_batch(tex_np)).astype("int32")
 
-        # spans: vocab-order-then-occurrence-order per turn.  ONE
-        # combined-alternation scan pre-filters the rows (instead of
-        # one pass per vocab key); only hit rows pay the per-key
-        # find_spans Python.
-        spans: list = [[] for _ in range(n)]
-        hit = texts.str.contains(vocab_re).to_numpy()
-        for i in np.nonzero(hit)[0]:
-            t = tex_np[i]
-            for k in vocab:
-                if k in t:
-                    spans[i].extend(
-                        {"key": k, "start": s, "end": e}
-                        for (s, e) in find_spans(t, k)
-                    )
+        spans = spans_of(texts)
 
         yield pd.DataFrame(
             {
@@ -388,8 +372,9 @@ def extract_turns(df: DataFrame, vocab: Sequence[str] | None = None) -> DataFram
 
     Native classify (X8/X2, zero shuffle) + the vectorized span and
     token-count pandas UDFs.  Row-identical to the render path for any
-    input (see module docstring): this is both the 10^12-turn scale
-    path and the reroute target for oversized conversations.
+    input (see module docstring): this is the 10^12-turn scale path,
+    the streaming path (streaming.run_stream) and the reroute target
+    for oversized conversations.
     """
     vocab = list(vocab or DEFAULT_VOCAB)
     c = classify_turns(df.select("conv_id", "turn_idx", "role", "text"))
@@ -459,21 +444,22 @@ def classify_turns(df: DataFrame) -> DataFrame:
     )
 
 
-def span_udf(vocab: Sequence[str]):
-    """Vectorized pandas UDF: all vocab-key char spans per text (X6).
+def _span_finder(vocab: Sequence[str]):
+    """Span materialization shared by both extraction paths (X6).
 
-    Same shape as the render path's span stage (_extract_batches): a
-    vectorized ``str.contains`` pre-filter per vocab key selects the
-    rows, and Python span materialization runs only on the hits —
-    vocab keys are rare, so the hot loop stays in pandas' C engine.
+    Returns ``spans_of(texts)``: for each text, every vocab-key char
+    span, in vocab order then occurrence order.  ONE combined-
+    alternation ``str.contains`` scan pre-filters the rows (instead of
+    one pass per vocab key), and only hit rows pay the per-key
+    find_spans Python — vocab keys are rare, so the hot loop stays in
+    pandas' C engine.  Null texts have no spans.
     """
     import re as _re
 
     vocab = list(vocab)
     vocab_re = _re.compile("|".join(_re.escape(k) for k in vocab))
 
-    @F.pandas_udf(SPAN_TYPE)
-    def _spans(texts: pd.Series) -> pd.Series:
+    def spans_of(texts: pd.Series) -> list:
         import numpy as np
 
         spans: list = [[] for _ in range(len(texts))]
@@ -489,7 +475,19 @@ def span_udf(vocab: Sequence[str]):
                             {"key": k, "start": s, "end": e}
                             for (s, e) in find_spans(t, k)
                         )
-        return pd.Series(spans, index=texts.index)
+        return spans
+
+    return spans_of
+
+
+def span_udf(vocab: Sequence[str]):
+    """Vectorized pandas UDF: all vocab-key char spans per text (X6),
+    computed by the render path's span stage (:func:`_span_finder`)."""
+    spans_of = _span_finder(vocab)
+
+    @F.pandas_udf(SPAN_TYPE)
+    def _spans(texts: pd.Series) -> pd.Series:
+        return pd.Series(spans_of(texts), index=texts.index)
 
     return _spans
 

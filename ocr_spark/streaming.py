@@ -4,25 +4,26 @@ The reference is pure batch (SURVEY.md §2.7); its closest analogs are
 step-wise metric logging and periodic checkpoint/resume.  This module
 is the engine's stream-ingest path for the same per-turn semantics:
 
-- :func:`stream_classify` wires the **per-turn native path**
-  (``classify_turns`` + span marking) as a stateless streaming
-  transformation: no shuffle, no state store, so it runs at scan
-  throughput and restarts exactly-once from the sink checkpoint.
-- :func:`run_stream` drives it with ``trigger(availableNow=True)`` +
-  ``foreachBatch``: each micro-batch writes extraction output AND a
-  per-batch lineage row (batch id, turn count, ok/fallback counters,
-  wall-time) — the streaming twin of lineage.CheckpointedExtraction.
-  foreachBatch itself is only at-least-once, so both writes are
-  batch_id-keyed overwrites (idempotent): a crash between the data
-  write and the checkpoint commit replays the batch into the same
-  ``batch_id=<id>`` directory, and the end-to-end result stays
-  exactly-once (file-source offsets are tracked in the checkpoint WAL).
+- :func:`run_stream` runs :func:`pipeline.extract_turns` (native
+  classify + span and token-count UDFs) on a file-source stream as a
+  stateless transformation: no shuffle, no state store, and the rows
+  it writes are ``EXTRACT_SCHEMA`` rows identical to the batch
+  extraction of the same turns.  It drains with
+  ``trigger(availableNow=True)`` + ``foreachBatch``: each micro-batch
+  writes extraction output AND a per-batch lineage row (turn count,
+  ok/fallback counters, wall-time) whose counters are observed on the
+  data write itself — the streaming twin of
+  lineage.CheckpointedExtraction.  foreachBatch itself is only
+  at-least-once, so both writes are batch_id-keyed overwrites
+  (idempotent): a crash between the data write and the checkpoint
+  commit replays the batch into the same ``batch_id=<id>`` directory,
+  and the end-to-end result stays exactly-once (file-source offsets
+  are tracked in the checkpoint WAL).
 
-Conversation-level extraction (the render path) needs all turns of a
-conversation and is therefore a batch concern; streaming emits per-turn
-rows immediately and conversations are assembled downstream once their
-turn set is complete (the reference never renders a partial
-conversation either).
+Every extraction column depends only on its own turn (an assistant row
+implies its conversation has an assistant turn), so a conversation
+whose turns arrive in different micro-batches needs no buffering: each
+turn's row is final when it is written.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -40,7 +41,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import DEFAULT_VOCAB, classify_turns, span_udf
+from ocr_spark.pipeline import extract_turns
 
 #: Canonical transcript schema (BASELINE.json input_hint); streaming
 #: sources must declare it explicitly (no inference on streams).
@@ -72,13 +73,6 @@ def read_transcript_stream(
     )
 
 
-def stream_classify(stream: DataFrame, vocab=None) -> DataFrame:
-    """Stateless per-turn extraction on a stream (native path + spans)."""
-    return classify_turns(stream).withColumn(
-        "char_spans", span_udf(list(vocab or DEFAULT_VOCAB))(F.col("text"))
-    )
-
-
 def run_stream(
     spark: SparkSession,
     input_dir: str,
@@ -96,7 +90,7 @@ def run_stream(
     lineage_dir = os.path.join(output_dir, "lineage")
     ckpt_dir = os.path.join(output_dir, "_checkpoint")
 
-    extracted = stream_classify(read_transcript_stream(spark, input_dir), vocab)
+    extracted = extract_turns(read_transcript_stream(spark, input_dir), vocab)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a crash after the write but
@@ -106,21 +100,22 @@ def run_stream(
         # a replay overwrites its own output instead of duplicating it
         # (the replayed batch has identical rows: file-source offsets
         # come from the checkpoint WAL).  Readers of the parent dir get
-        # batch_id back as a discovered partition column.
+        # batch_id back as a discovered partition column.  The lineage
+        # counters are observed on the data write: same job, no cache.
         t0 = time.time()
-        batch_df.persist()
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(data_dir, f"batch_id={int(batch_id)}")
-        )
-        agg = batch_df.agg(
-            F.count("*").alias("n_turns"),
+        obs = Observation()
+        batch_df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_turns"),
             F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
             F.sum((F.col("status") == "fallback").cast("long")).alias("n_fallback"),
-        ).collect()[0]
-        batch_df.unpersist()
+        ).write.mode("overwrite").parquet(
+            os.path.join(data_dir, f"batch_id={int(batch_id)}")
+        )
+        m = obs.get
         spark.createDataFrame(
-            [(agg["n_turns"] or 0, agg["n_ok"] or 0,
-              agg["n_fallback"] or 0, round(time.time() - t0, 3), time.time())],
+            [(m["n_turns"] or 0, m["n_ok"] or 0,
+              m["n_fallback"] or 0, round(time.time() - t0, 3), time.time())],
             "n_turns long, n_ok long, n_fallback long, "
             "wall_sec double, committed_at double",
         ).coalesce(1).write.mode("overwrite").parquet(
@@ -136,276 +131,6 @@ def run_stream(
     if await_termination:
         q.awaitTermination()
     return q
-
-
-#: State carried per conversation between micro-batches: the buffered
-#: turns as three parallel primitive arrays (same layout rationale as
-#: pipeline.conversations — cheap through Arrow) plus the expected turn
-#: count once the end-of-conversation marker has been seen (-1 before).
-#: SCHEMA VERSION NOTE: ``n_expected`` was added in round 3 (marker
-#: gating); Spark's state store pins the state schema at checkpoint
-#: creation, so a stream checkpointed under the old 3-field schema
-#: cannot resume on this code — drain the old checkpoint with the old
-#: code (or reprocess the source) and start a fresh checkpoint dir.
-_ASSEMBLE_STATE_SCHEMA = (
-    "turn_idxs array<int>, roles array<string>, texts array<string>, n_expected int"
-)
-
-#: Output of the stateful assembly stage: one row per COMPLETED
-#: conversation, same parallel-array layout as pipeline.conversations,
-#: consumed by the stateless extraction mapInPandas that follows it.
-_ASSEMBLED_CONV_SCHEMA = (
-    "conv_id string, turn_idxs array<int>, roles array<string>, "
-    "texts array<string>"
-)
-
-#: Role of the explicit end-of-conversation marker row.  The producer
-#: emits one marker per conversation when it closes it, with
-#: ``turn_idx`` = the total number of real turns; the marker is a
-#: control row, never part of the assembled conversation.
-EOC_ROLE = "__eoc__"
-
-
-def with_eoc_markers(df: DataFrame) -> DataFrame:
-    """Append one end-of-conversation marker row per conversation.
-
-    For producers that write drop-files from a complete corpus: the
-    marker carries the conversation's turn count in ``turn_idx``
-    (schema-compatible with the transcript table; text/tool/ts null).
-    """
-    markers = df.groupBy("conv_id").agg(
-        F.count("*").cast("int").alias("turn_idx")
-    ).select(
-        "conv_id", "turn_idx",
-        F.lit(EOC_ROLE).alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-    )
-    return df.unionByName(markers)
-
-
-def stream_assemble_extract(
-    stream: DataFrame, vocab=None, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """Custom stateful operator: assemble conversations ACROSS
-    micro-batches, then run the full render-path extraction per
-    completed conversation (``applyInPandasWithState``).
-
-    The stateless streaming path (stream_classify) emits per-turn rows
-    immediately; this operator provides the conversation-level
-    semantics on a stream: turns buffer in the state store keyed by
-    conv_id until the conversation COMPLETES, then the buffered turns
-    run through the same Arrow kernel driver as the batch pipeline
-    (pipeline._extract_batches) and the state is dropped, so state
-    size is bounded by in-flight (incomplete) conversations only.
-
-    Completion is gated on an EXPLICIT terminal signal: the
-    :data:`EOC_ROLE` marker row carrying the expected turn count
-    (``with_eoc_markers`` derives them for batch producers).  The r2
-    heuristic — emit once any buffered turn has role ``assistant`` —
-    fired early on k-turn conversations (multiple assistant turns) and
-    on any conversation whose assistant turn wasn't in the last
-    micro-batch, emitting a premature fragment plus a duplicate-
-    conv_id remainder (ADVICE r2).  With the marker + count, emission
-    happens exactly once, regardless of how turns interleave across
-    micro-batches or how many assistant turns a conversation has.
-
-    ``idle_timeout_ms`` (optional) arms a processing-time timeout per
-    conversation: a conversation that receives no new turns for that
-    long — a producer crashed before emitting its marker — is flushed
-    through the same kernel path (its rows carry the kernel's normal
-    per-turn semantics: a flush with no assistant turn classifies as
-    ``fallback``) instead of pinning the state store forever.
-    CAVEAT: use it with a continuous micro-batch trigger
-    (``processingTime``) — timeouts are evaluated per micro-batch, and
-    a ``Trigger.AvailableNow`` drain combined with pending
-    processing-time timeouts keeps scheduling batches without ever
-    firing them (observed on Spark 4.1: the drain never terminates),
-    which is why :func:`run_assemble_stream` does not expose the
-    option.  Without it, marker-less conversations simply stay
-    buffered.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ocr_spark.pipeline import DEFAULT_VOCAB, EXTRACT_SCHEMA, _extract_batches
-
-    vocab = list(vocab or DEFAULT_VOCAB)
-
-    # The stateful operator ONLY assembles: it emits one row of
-    # parallel turn arrays per completed conversation.  Extraction runs
-    # downstream in a stateless mapInPandas, where Arrow re-batches
-    # many conversations per kernel call — applyInPandasWithState
-    # invokes its function once per GROUP, so running the kernel inside
-    # it would pay per-conversation kernel setup (measured ~10x slower
-    # at bench scale, round 4); this split restores the batch
-    # pipeline's kernel batching bit-identically.
-    def assemble(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        (conv_id,) = key
-
-        def conv_row(turn_idxs, roles, texts):
-            order = sorted(range(len(turn_idxs)), key=lambda i: turn_idxs[i])
-            return iter([pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "turn_idxs": [[turn_idxs[i] for i in order]],
-                    "roles": [[roles[i] for i in order]],
-                    "texts": [[texts[i] for i in order]],
-                }
-            )])
-
-        if state.hasTimedOut:
-            turn_idxs, roles, texts, _ = state.get
-            state.remove()
-            return conv_row(list(turn_idxs), list(roles), list(texts))
-
-        turn_idxs, roles, texts, n_expected = (
-            ([*state.get[0]], [*state.get[1]], [*state.get[2]], state.get[3])
-            if state.exists
-            else ([], [], [], -1)
-        )
-        for pdf in pdfs:
-            for ti, ro, tx in zip(pdf["turn_idx"], pdf["role"], pdf["text"]):
-                if ro == EOC_ROLE:
-                    n_expected = int(ti)
-                else:
-                    turn_idxs.append(int(ti))
-                    roles.append(ro)
-                    texts.append(tx)
-        if n_expected >= 0 and len(turn_idxs) >= n_expected:
-            state.remove()
-            return conv_row(turn_idxs, roles, texts)
-        state.update((turn_idxs, roles, texts, n_expected))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        return iter([])
-
-    assembled = (
-        stream.select("conv_id", "turn_idx", "role", "text")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            assemble,
-            outputStructType=_ASSEMBLED_CONV_SCHEMA,
-            stateStructType=_ASSEMBLE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if idle_timeout_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
-    return assembled.mapInPandas(
-        lambda it: _extract_batches(it, vocab), schema=EXTRACT_SCHEMA
-    )
-
-
-#: Spark's on-heap default state store.  At 10^12-turn scale the
-#: assembler's state (all IN-FLIGHT conversations' buffered turns) can
-#: exceed executor heap during a backlog catch-up; RocksDB keeps state
-#: on local disk with a block cache instead.  Class is bundled with
-#: Spark 4.x — no extra jar.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def run_assemble_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    vocab=None,
-    max_files: int = 1,
-    fmt: str = "json",
-    rocksdb: bool = False,
-):
-    """Drain a turn-file drop directory through the stateful
-    conversation assembler into parquet (one file per micro-batch via
-    the checkpointed sink).  ``max_files=1`` forces one input file per
-    micro-batch so conversations split across files genuinely cross
-    the state-store boundary.  Deliberately no ``idle_timeout_ms``
-    pass-through: availableNow + processing-time timeouts never
-    terminates (see stream_assemble_extract).
-
-    Returns the number of conversations STILL BUFFERED after the drain
-    (read back from the state store) and warns when it is non-zero:
-    completion is marker-gated, so a producer that never emits
-    :data:`EOC_ROLE` rows would otherwise drain "successfully" with
-    every conversation parked in state and ZERO output rows — silent
-    data loss.  A non-zero count is legitimate mid-pipeline (more
-    drop-files are coming); at end-of-input it means the producer must
-    emit markers (``with_eoc_markers``) or the deployment needs the
-    idle-timeout flush on a continuous trigger.  Returns -1 (with a
-    distinct RuntimeWarning) if the state-store readback itself fails
-    for any reason other than the documented empty-input case — the
-    pending count is then UNKNOWN, not zero."""
-    import warnings
-
-    extracted = stream_assemble_extract(
-        read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files),
-        vocab,
-    )
-    ckpt = os.path.join(output_dir, "_checkpoint")
-    # ``rocksdb=True`` selects the disk-backed state store for this
-    # query (the 10^12-turn deployment default; see ROCKSDB_PROVIDER).
-    # The provider is a session conf captured at query START and then
-    # pinned by the checkpoint, so set-and-restore around .start() is
-    # race-free for this query and side-effect-free for later ones;
-    # resuming an existing checkpoint keeps ITS provider regardless.
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    if rocksdb:
-        spark.conf.set(conf_key, ROCKSDB_PROVIDER)
-    try:
-        q = (
-            extracted.writeStream.format("parquet")
-            .option("path", os.path.join(output_dir, "data"))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if rocksdb:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-    q.awaitTermination()
-    try:
-        pending = spark.read.format("statestore").load(ckpt).count()
-    except Exception as exc:  # noqa: BLE001 — narrowed by message below
-        # Only the documented no-committed-batch case may be silenced
-        # (empty input directory → nothing can be buffered).  Any OTHER
-        # readback failure must not silently disable the data-loss
-        # warning this readback exists to provide (ADVICE r3).
-        msg = f"{type(exc).__name__}: {exc}"
-        if "STDS_COMMITTED_BATCH_UNAVAILABLE" in msg or (
-            "CANNOT_LOAD_STATE_STORE" in msg and "empty" in msg.lower()
-        ):
-            pending = 0
-        else:
-            warnings.warn(
-                "run_assemble_stream: state-store readback failed for an "
-                f"unexpected reason — the pending-conversation data-loss "
-                f"check is UNAVAILABLE for this drain ({msg})",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return -1
-    if pending:
-        warnings.warn(
-            f"run_assemble_stream: {pending} conversation(s) remain buffered "
-            f"in the state store after the drain (no end-of-conversation "
-            f"marker seen yet). If this is the end of the input, the "
-            f"producer must emit EOC_ROLE marker rows (see with_eoc_markers) "
-            f"or the stream needs idle_timeout_ms on a continuous trigger.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return pending
 
 
 def stream_turn_rate(

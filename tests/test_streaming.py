@@ -31,13 +31,6 @@ def _turns(conv_id: str, variant: int) -> list[dict]:
     ]
 
 
-def _eoc(conv_id: str, n_turns: int) -> dict:
-    from ocr_spark.streaming import EOC_ROLE
-
-    return {"conv_id": conv_id, "turn_idx": n_turns, "role": EOC_ROLE,
-            "text": None, "tool": None, "ts": None}
-
-
 @pytest.fixture()
 def dirs(tmp_path):
     inp = tmp_path / "in"
@@ -49,8 +42,10 @@ def dirs(tmp_path):
 def test_stream_drains_and_writes_lineage(spark, dirs):
     inp, out = dirs
     rows = [t for i in range(20) for t in _turns(f"c{i:03d}", i % 3)]
-    _write_jsonl(os.path.join(inp, "batch0.jsonl"), rows)
-
+    _write_jsonl(os.path.join(inp, "batch0.jsonl"), rows[:24])
+    run_stream(spark, inp, out)
+    # a restart picks up the next drop file as a new micro-batch
+    _write_jsonl(os.path.join(inp, "batch1.jsonl"), rows[24:])
     run_stream(spark, inp, out)
 
     data = spark.read.parquet(os.path.join(out, "data"))
@@ -62,6 +57,15 @@ def test_stream_drains_and_writes_lineage(spark, dirs):
     tot = lin.agg(F.sum("n_turns").alias("t"), F.sum("n_fallback").alias("f")).collect()[0]
     assert tot["t"] == len(rows)
     assert tot["f"] > 0  # planted extractor misses surface as fallbacks
+
+    # each lineage row counts exactly its own batch directory's rows
+    per_batch = {r["batch_id"]: r["count"]
+                 for r in data.groupBy("batch_id").count().collect()}
+    lin_rows = lin.collect()
+    assert sorted(per_batch) == sorted(r["batch_id"] for r in lin_rows) == [0, 1]
+    for r in lin_rows:
+        assert r["n_turns"] == per_batch[r["batch_id"]]
+        assert r["n_ok"] + r["n_fallback"] == r["n_turns"]
 
 
 def test_stream_resume_is_exactly_once(spark, dirs):
@@ -89,264 +93,37 @@ def test_stream_resume_is_exactly_once(spark, dirs):
 
 
 def test_stream_spans_match_batch_path(spark, dirs):
+    """run_stream writes the batch extraction's rows: each conversation's
+    turns are split across two drop files drained by two run_stream
+    calls (a restart), so the halves land in different micro-batches,
+    and the stream's rows still equal extract_conversations over the
+    same turns — including a conversation with two assistant turns."""
+    from ocr_spark.pipeline import EXTRACT_SCHEMA, extract_conversations
+    from ocr_spark.streaming import TRANSCRIPT_SCHEMA
+
     inp, out = dirs
-    _write_jsonl(os.path.join(inp, "a.jsonl"), _turns("c0", 0))
+    convs = [_turns(f"c{i}", i % 3) for i in range(6)]
+    convs.append(_turns("m0", 1) + [
+        dict(t, turn_idx=t["turn_idx"] + 2) for t in _turns("m0", 0)
+    ])
+    _write_jsonl(os.path.join(inp, "a.jsonl"),
+                 [t for c in convs for t in c[:len(c) // 2]])
     run_stream(spark, inp, out)
+    _write_jsonl(os.path.join(inp, "b.jsonl"),
+                 [t for c in convs for t in c[len(c) // 2:]])
+    run_stream(spark, inp, out)
+
     data = spark.read.parquet(os.path.join(out, "data"))
-    row = data.filter(F.col("role") == "user").collect()[0]
+    assert {r["batch_id"] for r in data.select("batch_id").distinct().collect()} == {0, 1}
+    got = data.drop("batch_id")
+    assert got.schema == EXTRACT_SCHEMA
+    want = extract_conversations(spark.read.schema(TRANSCRIPT_SCHEMA).json(inp))
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+    row = got.filter((F.col("conv_id") == "c0") & (F.col("role") == "user")).collect()[0]
     spans = [(s["key"], s["start"], s["end"]) for s in row["char_spans"]]
     assert ("City 50337", 5, 15) in spans
-
-
-def test_stateful_assembly_across_microbatches(spark, dirs):
-    """applyInPandasWithState conversation assembly: each conversation's
-    turns are SPLIT across two input files and maxFilesPerTrigger=1
-    forces them into different micro-batches — turns must buffer in the
-    state store and the assembled extraction output must equal the
-    batch pipeline over the same turns."""
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType, TimestampType,
-    )
-
-    from ocr_spark.pipeline import extract_conversations
-    from ocr_spark.streaming import run_assemble_stream
-
-    inp, out = dirs
-    n = 30
-    sys_txt = "You are a geography assistant."
-    rows = []
-    for i in range(n):
-        a = ["Akureyri is North of City 50337.", "4200 km", "i am not sure"][i % 3]
-        rows.append([
-            {"conv_id": f"s{i:03d}", "turn_idx": 0, "role": "system",
-             "text": sys_txt, "tool": None, "ts": "2024-01-01T00:00:00"},
-            {"conv_id": f"s{i:03d}", "turn_idx": 1, "role": "user",
-             "text": f"From City 50337 to Akureyri, how far? ({i})", "tool": None,
-             "ts": "2024-01-01T00:00:01"},
-            {"conv_id": f"s{i:03d}", "turn_idx": 2, "role": "assistant", "text": a,
-             "tool": None, "ts": "2024-01-01T00:00:02"},
-        ])
-    # file a: system+user turns only; file b: the terminal assistant
-    # turns; file c: the end-of-conversation markers (turn_idx = turn
-    # count) — completion crosses TWO state-store boundaries
-    _write_jsonl(os.path.join(inp, "a_prefix.jsonl"),
-                 [t for conv in rows for t in conv[:2]])
-    _write_jsonl(os.path.join(inp, "b_final.jsonl"),
-                 [t for conv in rows for t in conv[2:]])
-    _write_jsonl(os.path.join(inp, "c_markers.jsonl"),
-                 [_eoc(conv[0]["conv_id"], len(conv)) for conv in rows])
-
-    run_assemble_stream(spark, inp, out, max_files=1)
-
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["role"], r["clean_text"],
-         r["block_class"], r["answer"], r["status"], r["n_tokens"])
-        for r in spark.read.parquet(os.path.join(out, "data")).collect()
-    )
-
-    schema = StructType([
-        StructField("conv_id", StringType()), StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()), StructField("text", StringType()),
-        StructField("tool", StringType()), StructField("ts", TimestampType()),
-    ])
-    batch_in = spark.createDataFrame(
-        [(t["conv_id"], t["turn_idx"], t["role"], t["text"], None, None)
-         for conv in rows for t in conv],
-        schema,
-    )
-    want = sorted(
-        (r["conv_id"], r["turn_idx"], r["role"], r["clean_text"],
-         r["block_class"], r["answer"], r["status"], r["n_tokens"])
-        for r in extract_conversations(batch_in).collect()
-    )
-    assert got == want
-    assert len(got) == 3 * n
-
-
-def test_stateful_assembly_multi_assistant_no_premature_emit(spark, dirs):
-    """ADVICE r2 regression: a k-turn conversation with MULTIPLE
-    assistant turns, whose first assistant turn arrives in an early
-    micro-batch, must NOT be emitted prematurely (the old heuristic
-    completed on any buffered assistant turn, producing a fragment
-    plus a duplicate-conv_id remainder).  Completion now waits for the
-    end-of-conversation marker + full turn count."""
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType, TimestampType,
-    )
-
-    from ocr_spark.pipeline import extract_conversations
-    from ocr_spark.streaming import run_assemble_stream
-
-    inp, out = dirs
-    n = 12
-    rows = []
-    for i in range(n):
-        rows.append([
-            {"conv_id": f"k{i:03d}", "turn_idx": 0, "role": "system",
-             "text": "You are a geography assistant.", "tool": None,
-             "ts": "2024-01-01T00:00:00"},
-            {"conv_id": f"k{i:03d}", "turn_idx": 1, "role": "user",
-             "text": f"From City 50337 to Akureyri, how far? ({i})", "tool": None,
-             "ts": "2024-01-01T00:00:01"},
-            {"conv_id": f"k{i:03d}", "turn_idx": 2, "role": "assistant",
-             "text": "4200 km", "tool": None, "ts": "2024-01-01T00:00:02"},
-            {"conv_id": f"k{i:03d}", "turn_idx": 3, "role": "user",
-             "text": "And the direction?", "tool": None,
-             "ts": "2024-01-01T00:00:03"},
-            {"conv_id": f"k{i:03d}", "turn_idx": 4, "role": "assistant",
-             "text": "Akureyri is North of City 50337.", "tool": None,
-             "ts": "2024-01-01T00:00:04"},
-        ])
-    # first assistant turn lands in micro-batch 1 of 3: the old
-    # any-assistant heuristic would emit a 3-turn fragment here
-    _write_jsonl(os.path.join(inp, "a.jsonl"),
-                 [t for conv in rows for t in conv[:3]])
-    _write_jsonl(os.path.join(inp, "b.jsonl"),
-                 [t for conv in rows for t in conv[3:]])
-    _write_jsonl(os.path.join(inp, "c.jsonl"),
-                 [_eoc(conv[0]["conv_id"], len(conv)) for conv in rows])
-
-    run_assemble_stream(spark, inp, out, max_files=1)
-
-    data = spark.read.parquet(os.path.join(out, "data"))
-    # exactly one row per (conv, turn): no premature fragment, no dup
-    assert data.count() == 5 * n
-    dup = (data.groupBy("conv_id", "turn_idx").count()
-           .filter(F.col("count") > 1).count())
-    assert dup == 0
-
-    schema = StructType([
-        StructField("conv_id", StringType()), StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()), StructField("text", StringType()),
-        StructField("tool", StringType()), StructField("ts", TimestampType()),
-    ])
-    batch_in = spark.createDataFrame(
-        [(t["conv_id"], t["turn_idx"], t["role"], t["text"], None, None)
-         for conv in rows for t in conv],
-        schema,
-    )
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["role"], r["clean_text"],
-         r["block_class"], r["answer"], r["status"])
-        for r in data.collect()
-    )
-    want = sorted(
-        (r["conv_id"], r["turn_idx"], r["role"], r["clean_text"],
-         r["block_class"], r["answer"], r["status"])
-        for r in extract_conversations(batch_in).collect()
-    )
-    assert got == want
-
-
-def test_stateful_assembly_idle_timeout_flushes_markerless(spark, dirs):
-    """A conversation whose producer died before its EOC marker must
-    not pin the state store forever: with idle_timeout_ms set on a
-    continuous micro-batch trigger, the idle conversation is flushed
-    through the kernel path once no new turns arrive for the window
-    (the deployment shape for this feature — see the
-    stream_assemble_extract docstring for why availableNow drains
-    don't evaluate pending timeouts)."""
-    import time as _time
-
-    from ocr_spark.streaming import read_transcript_stream, stream_assemble_extract
-
-    inp, out = dirs
-    # orphan: system+user only, no marker, producer gone
-    _write_jsonl(os.path.join(inp, "a_orphan.jsonl"), [
-        {"conv_id": "orph0", "turn_idx": 0, "role": "system",
-         "text": "You are a geography assistant.", "tool": None,
-         "ts": "2024-01-01T00:00:00"},
-        {"conv_id": "orph0", "turn_idx": 1, "role": "user",
-         "text": "From City 50337 to Akureyri, how far?", "tool": None,
-         "ts": "2024-01-01T00:00:01"},
-    ])
-    data_dir = os.path.join(out, "data")
-    extracted = stream_assemble_extract(
-        read_transcript_stream(spark, inp), idle_timeout_ms=300
-    )
-    q = (
-        extracted.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        n = 0
-        while _time.time() < deadline:
-            try:
-                n = (spark.read.parquet(data_dir)
-                     .filter(F.col("conv_id") == "orph0").count())
-            except Exception:
-                n = 0  # sink directory not created yet
-            if n:
-                break
-            _time.sleep(0.5)
-    finally:
-        q.stop()
-    data = spark.read.parquet(data_dir)
-    orph = data.filter(F.col("conv_id") == "orph0")
-    # both buffered turns flushed, exactly once, with their texts; no
-    # assistant turn ever arrived so nothing classifies as direction/
-    # distance (fallback is an assistant-turn property)
-    assert orph.count() == 2
-    assert {r["role"] for r in orph.collect()} == {"system", "user"}
-    assert {r["block_class"] for r in orph.collect()} == {"other"}
-
-
-def test_assemble_drain_reports_pending_markerless(spark, dirs):
-    """Code-review r3: a marker-less corpus must not drain 'green' with
-    zero output and no signal.  run_assemble_stream returns the count
-    of still-buffered conversations (state-store readback) and warns."""
-    import warnings
-
-    from ocr_spark.streaming import run_assemble_stream
-
-    inp, out = dirs
-    rows = _turns("m0", 0)  # trailing assistant turn but NO marker
-    _write_jsonl(os.path.join(inp, "a.jsonl"), rows)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        pending = run_assemble_stream(spark, inp, out)
-    assert pending == 1
-    assert any("remain buffered" in str(x.message) for x in w)
-
-    # the marker arrives in a later drop-file: conversation completes,
-    # nothing pending, no warning
-    _write_jsonl(os.path.join(inp, "b.jsonl"), [_eoc("m0", len(rows))])
-    with warnings.catch_warnings(record=True) as w2:
-        warnings.simplefilter("always")
-        pending2 = run_assemble_stream(spark, inp, out)
-    assert pending2 == 0
-    assert not any("remain buffered" in str(x.message) for x in w2)
-    data = spark.read.parquet(os.path.join(out, "data"))
-    assert data.count() == len(rows)
-
-
-def test_assemble_drain_empty_input_reports_zero(spark, dirs):
-    """A drain over an empty drop directory commits no micro-batch, so
-    the statestore readback has no committed batch to read — that must
-    surface as pending == 0, not as a crash."""
-    from ocr_spark.streaming import run_assemble_stream
-
-    inp, out = dirs
-    assert run_assemble_stream(spark, inp, out) == 0
-
-
-def test_with_eoc_markers_counts(spark):
-    """with_eoc_markers appends one marker per conversation with
-    turn_idx = turn count, schema-compatible with the transcript table."""
-    from ocr_spark.streaming import EOC_ROLE, with_eoc_markers
-    from ocr_spark.synth import transcripts
-
-    t = transcripts(spark, 20, skew=False)
-    marked = with_eoc_markers(t)
-    assert marked.schema == t.schema
-    m = marked.filter(F.col("role") == EOC_ROLE)
-    assert m.count() == 20
-    assert {r["turn_idx"] for r in m.collect()} == {3}
 
 
 def test_windowed_aggregation_with_watermark(spark, dirs, tmp_path):
@@ -395,45 +172,6 @@ def test_windowed_aggregation_with_watermark(spark, dirs, tmp_path):
     )
     assert got == want
     assert len({w for (w, _, _, _) in got}) == 3  # three event-time hours
-
-
-def test_stateful_assembly_rocksdb_store_matches_default(spark, dirs, tmp_path):
-    """rocksdb=True must be a pure storage swap: same assembled output
-    as the default (on-heap) state store across the same multi-file
-    drain, and the pending-state readback still reports 0.  The
-    provider conf is set-and-restored around query start, so the
-    session conf is left untouched afterward."""
-    from ocr_spark.streaming import ROCKSDB_PROVIDER, run_assemble_stream
-
-    inp, out = dirs
-    rows = [t for i in range(12) for t in _turns(f"r{i:02d}", i % 3)]
-    # split turns and markers across files so state genuinely persists
-    # between micro-batches inside RocksDB
-    _write_jsonl(os.path.join(inp, "a.jsonl"), rows[::2])
-    _write_jsonl(os.path.join(inp, "b.jsonl"), rows[1::2])
-    _write_jsonl(os.path.join(inp, "c.jsonl"),
-                 [_eoc(f"r{i:02d}", 2) for i in range(12)])
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(conf_key, None)
-    pending = run_assemble_stream(spark, inp, out, max_files=1, rocksdb=True)
-    assert pending == 0
-    assert spark.conf.get(conf_key, None) == before
-
-    # the checkpoint metadata proves RocksDB actually ran the query
-    import glob
-    meta = ""
-    for f in glob.glob(os.path.join(out, "_checkpoint", "offsets", "*")):
-        meta += open(f).read()
-    assert "RocksDBStateStoreProvider" in meta
-
-    out2 = str(tmp_path / "out_default")
-    run_assemble_stream(spark, inp, out2, max_files=1)
-    key = lambda r: (r["conv_id"], r["turn_idx"], r["clean_text"],
-                     r["block_class"], r["answer"], r["status"], r["n_tokens"])
-    a = sorted(map(key, spark.read.parquet(os.path.join(out, "data")).collect()))
-    b = sorted(map(key, spark.read.parquet(os.path.join(out2, "data")).collect()))
-    assert a == b and len(a) == len(rows)
 
 
 def test_stream_dedup_exact_across_batches_and_restarts(spark, dirs):
@@ -753,7 +491,7 @@ def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
 
 def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     """The full composed streaming job (VERDICT r4 item 6): source ->
-    stateful assembler + extraction -> streaming exact-dedup of the
+    per-turn extraction (run_stream) -> streaming exact-dedup of the
     extracted rows -> keyed CDC MERGE sink, with the event-time
     windowed aggregation running off the same source.  Each stage is
     individually pinned elsewhere; this drains the COMPOSITION in two
@@ -772,12 +510,11 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     from ocr_spark.streaming import (
         TRANSCRIPT_SCHEMA,
         read_transcript_stream,
-        run_assemble_stream,
         stream_turn_rate,
     )
 
     inp, out = dirs
-    outA = os.path.join(out, "stageA")           # assembled + extracted
+    outA = os.path.join(out, "stageA")           # extracted
     outB = os.path.join(out, "stageB")           # deduped
     outC = os.path.join(out, "stageC")           # windowed agg
     table = os.path.join(out, "final_table")     # CDC MERGE target
@@ -861,8 +598,7 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
         bdf.write.mode("overwrite").parquet(os.path.join(outC, "data"))
 
     def drain_all(kill_mid=False):
-        pending = run_assemble_stream(spark, inp, outA, max_files=1)
-        assert pending == 0
+        run_stream(spark, inp, outA)
         drain_stage_b(kill_mid=kill_mid)
         qd = (
             spark.readStream.schema(dedup_schema)
@@ -889,8 +625,6 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     # ---- phase 1: convs 0-8 ----------------------------------------------
     _write_jsonl(os.path.join(inp, "p1_turns.jsonl"),
                  [t for c in convs[:9] for t in c])
-    _write_jsonl(os.path.join(inp, "p1_markers.jsonl"),
-                 [_eoc(c[0]["conv_id"], len(c)) for c in convs[:9]])
     drain_all()
     n_phase1 = spark.read.parquet(os.path.join(table)).count()
     assert n_phase1 == 9 * 2
@@ -899,8 +633,6 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     replay = convs[:6]
     _write_jsonl(os.path.join(inp, "p2_turns.jsonl"),
                  [t for c in convs[9:] + replay for t in c])
-    _write_jsonl(os.path.join(inp, "p2_markers.jsonl"),
-                 [_eoc(c[0]["conv_id"], len(c)) for c in convs[9:] + replay])
     drain_all(kill_mid=True)
 
     # ---- final pins --------------------------------------------------------
