@@ -44,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.pipeline import extract_conversations
+from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
 
 MANIFEST = "_manifest.json"
 
@@ -77,6 +77,11 @@ def _write_manifest(output_dir: str, manifest: dict) -> None:
 
 @dataclass
 class BucketStats:
+    """One bucket's lineage row.  ``n_rerouted`` keeps its name for
+    existing lineage tables: it counts the bucket's conversations over
+    ``MAX_RENDER_TURNS`` turns, which the render path assembles in
+    turn-index chunks."""
+
     bucket: int
     n_convs: int
     n_turns: int
@@ -161,21 +166,23 @@ class CheckpointedExtraction:
     def _commit_bucket(self, b: int) -> BucketStats:
         t0 = time.time()
         part = self.spark.read.parquet(os.path.join(self.staged_dir, f"bucket={b}"))
-        guard_stats: dict = {}
-        out = extract_conversations(part, stats_out=guard_stats).persist()
+        out = extract_conversations(part).persist()
         self.writer.write_bucket_data(out, b)
-        agg = out.agg(
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.count("*").alias("n_turns"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
-            F.sum((F.col("status") == "fallback").cast("long")).alias("n_fallback"),
-        ).collect()[0]
+        # one counter job: per-conversation counts, then one global row
+        agg = (
+            out.groupBy("conv_id").agg(
+                F.count("*").alias("n"),
+                F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
+                F.sum((F.col("status") == "fallback").cast("long")).alias("fallback"),
+            ).agg(
+                F.count("conv_id").alias("n_convs"),
+                F.sum("n").alias("n_turns"),
+                F.sum("ok").alias("n_ok"),
+                F.sum("fallback").alias("n_fallback"),
+                F.sum((F.col("n") > MAX_RENDER_TURNS).cast("long")).alias("n_rerouted"),
+            ).collect()[0]
+        )
         out.unpersist()
-        # skew-guard lineage: how many conversations in this bucket were
-        # rerouted off the collect_list render path — taken from the
-        # guard's own pre-pass (recomputing it here doubled the bucket's
-        # pre-pass scan for a number the guard already had)
-        n_rerouted = guard_stats.get("n_rerouted", 0)
         wall = time.time() - t0
         st = BucketStats(
             bucket=b,
@@ -183,7 +190,7 @@ class CheckpointedExtraction:
             n_turns=agg["n_turns"] or 0,
             n_ok=agg["n_ok"] or 0,
             n_fallback=agg["n_fallback"] or 0,
-            n_rerouted=n_rerouted,
+            n_rerouted=agg["n_rerouted"] or 0,
             wall_sec=round(wall, 3),
         )
 

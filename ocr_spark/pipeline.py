@@ -4,7 +4,7 @@ Two execution paths over the canonical transcript table
 ``(conv_id, turn_idx, role, text, tool, ts)``:
 
 1. :func:`extract_conversations` — the conversation-render path.
-   One shuffle (``groupBy(conv_id)`` with a JVM-side
+   One shuffle (``groupBy(conv_id, turn-index chunk)`` with a JVM-side
    ``sort_array(collect_list(struct(...)))`` so turn order is stable
    regardless of input partitioning), then a single Arrow-batched
    ``mapInPandas`` that runs the pure kernels: merge system turn
@@ -23,18 +23,18 @@ Skew: :func:`salted_repartition` spreads giant conversations across
 ``salt_mod`` sub-partitions while ``sortWithinPartitions`` keeps turn
 order stable within each salted group (north_rule "salted keys for
 skewed long conversations").  Per-turn extraction is salting-safe.
-The render path is guarded against the one skew shape AQE cannot
-split — a single conversation whose ``collect_list`` row would be
-enormous: :func:`extract_conversations` first finds oversized
-conv_ids with a conv_id-only count pre-pass (columnar scan of one
-dictionary-encoded column; map-side partial counts, tiny shuffle)
-and routes them to :func:`extract_turns`, the zero-shuffle per-turn
-mirror whose output is row-identical (an assistant row implies its
-conversation has an assistant turn, so the render path's
-``comp_exists`` predicate is always true exactly where it matters —
-proven by test_giant_conversation_reroute's equality check).  The
-kernel additionally hard-fails if an over-cap conversation ever
-reaches assembly (defense in depth for plan regressions).
+The render path bounds its ``collect_list`` rows by construction:
+:func:`conversations` groups by ``(conv_id, floor(turn_idx /
+max_turns))``, so a giant conversation crosses the shuffle as bounded
+chunks and no pre-pass has to find it first (heavy-key splitting).
+Chunking leaves the output rows unchanged because every kernel column
+is per-turn: the one conversation-level predicate of the render split,
+"the completion exists", is read only on assistant rows, and an
+assistant row's chunk contains that assistant turn.  The kernel
+hard-fails on a row over ``max_turns`` turns, which only a duplicated
+``(conv_id, turn_idx)`` can produce.  The optional ``max_bytes`` guard
+finds byte-heavy conversations with a pre-pass and routes them to
+:func:`extract_turns`, the row-identical zero-shuffle mirror.
 """
 
 from __future__ import annotations
@@ -92,8 +92,21 @@ EXTRACT_SCHEMA = StructType(
 # conversation assembly (the one shuffle)
 # ---------------------------------------------------------------------------
 
-def conversations(df: DataFrame) -> DataFrame:
-    """Aggregate turns into one ordered row per conversation.
+#: Render-path row bound: :func:`conversations` assembles longer
+#: conversations in chunks of this many turns (north_rule "salted keys
+#: for skewed long conversations").  2^16 turns x ~100 B/turn keeps an
+#: assembled row well under 10 MB.
+MAX_RENDER_TURNS = 65536
+
+
+def conversations(df: DataFrame, max_turns: int | None = MAX_RENDER_TURNS) -> DataFrame:
+    """Aggregate turns into ordered rows of at most ``max_turns`` turns.
+
+    Groups by ``(conv_id, floor(turn_idx / max_turns))``: a conversation
+    of up to ``max_turns`` turns (numbered from 0) is one row, a longer
+    one is split into turn-index chunks, so no row exceeds the cap
+    unless ``(conv_id, turn_idx)`` repeats.  ``max_turns=None`` keeps
+    one row per conversation.
 
     ``sort_array`` on ``struct(turn_idx, role, text)`` sorts by the
     leading ``turn_idx`` field JVM-side — stable turn ordering (W1)
@@ -103,9 +116,12 @@ def conversations(df: DataFrame) -> DataFrame:
     lists, several times cheaper than materializing one Python dict
     per turn from an ``array<struct>`` column.
     """
+    keys = [F.col("conv_id")]
+    if max_turns is not None:
+        keys.append(F.floor(F.col("turn_idx") / max_turns))
     turns = F.sort_array(F.collect_list(F.struct("turn_idx", "role", "text")))
     return (
-        df.groupBy("conv_id")
+        df.groupBy(*keys)
         .agg(turns.alias("turns"))
         .select(
             "conv_id",
@@ -151,26 +167,19 @@ _DIR_RE = " North| South| East| West"
 #: (classify_completion -> ('other', fallback); $ would say 'distance').
 _DIST_RE = r"(?:km|ilometers|mi|iles)\Z"
 _ANSWER_RE = r"([A-E])"
-_MODEL_MARKER = "<start_of_turn>model\n"
-
-
-#: Render-path skew guard default: conversations above this many turns
-#: bypass ``collect_list`` assembly and run the per-turn mirror instead
-#: (north_rule "salted keys for skewed long conversations", completed).
-#: 2^16 turns x ~100 B/turn keeps the assembled row well under 10 MB.
-MAX_RENDER_TURNS = 65536
 
 
 def oversized_conv_ids(
     df: DataFrame, max_turns: int | None = MAX_RENDER_TURNS,
     max_bytes: int | None = None,
 ) -> DataFrame:
-    """conv_ids whose conversations exceed the render-assembly caps.
+    """conv_ids of conversations over ``max_turns`` turns or
+    ``max_bytes`` total text bytes.
 
-    The turn-count pre-pass projects ONLY conv_id (columnar scan of a
-    dictionary-encoded column; partial counts map-side).  ``max_bytes``
-    additionally bounds total text bytes per conversation — off by
-    default because it forces the pre-pass to read the text column.
+    :func:`extract_conversations` runs it for ``max_bytes`` only: its
+    turn bound holds by chunked assembly.  The turn-count form projects
+    ONLY conv_id (columnar scan of a dictionary-encoded column; partial
+    counts map-side); ``max_bytes`` forces it to read the text column.
     """
     aggs = [F.count("*").alias("n_turns")]
     if max_bytes is not None:
@@ -208,9 +217,9 @@ def _extract_batches(
                            count=len(pdf))
         if max_turns is not None and len(lens) and int(lens.max()) > max_turns:
             raise RuntimeError(
-                f"oversized conversation ({int(lens.max())} turns > cap "
-                f"{max_turns}) reached the render path — the reroute "
-                "pre-pass was bypassed or its plan regressed"
+                f"assembled row of {int(lens.max())} turns exceeds the cap "
+                f"{max_turns}: turn-index chunks hold at most {max_turns} "
+                "distinct turns, so the input repeats a (conv_id, turn_idx)"
             )
         n = int(lens.sum())
         if n == 0:
@@ -227,33 +236,12 @@ def _extract_batches(
         tex_np = texts.to_numpy()
         is_assistant = roles.eq("assistant").to_numpy()
 
-        # X3/X4 equivalence without materializing the render: the gemma
-        # render contains the model marker iff the conversation has an
-        # assistant turn or a payload itself contains the marker, so
-        # split_completion succeeds exactly when this predicate holds
-        # (the render/split kernels stay byte-pinned by their own
-        # golden tests and the x3/x4 catalog queries).  Per-conv any()
-        # via reduceat over the flat arrays; the payload-marker scan
-        # runs only on conversations with no assistant turn at all.
-        if (lens > 0).all():
-            begins = np.empty(len(lens), dtype=np.int64)
-            begins[0] = 0
-            np.cumsum(lens[:-1], out=begins[1:])
-            conv_has = np.bitwise_or.reduceat(is_assistant, begins)
-        else:  # zero-turn groups would corrupt reduceat segment bounds
-            conv_has = np.zeros(len(lens), dtype=bool)
-            pos = 0
-            for ci, ln in enumerate(lens):
-                if ln:
-                    conv_has[ci] = bool(is_assistant[pos:pos + ln].any())
-                pos += ln
-        for ci in np.nonzero(~conv_has)[0]:
-            conv_has[ci] = any(_MODEL_MARKER in t for t in pdf["texts"].iat[ci])
-        comp_exists = np.repeat(conv_has, lens)
-
-        active = is_assistant & comp_exists
-        # classification/extraction regexes run on the assistant subset
-        # only (they are masked to it anyway); scatter results back
+        # X3/X4 equivalence without materializing the render: the split
+        # completion exists whenever the conversation has an assistant
+        # turn, so it is read only on assistant rows, where it holds
+        # (the render/split kernels stay byte-pinned by their own golden
+        # tests and the x3/x4 catalog queries).  The classification and
+        # extraction regexes run on the assistant subset; scatter back.
         asst_idx = np.nonzero(is_assistant)[0]
         at = texts.iloc[asst_idx]
         has_dir = np.zeros(n, dtype=bool)
@@ -263,19 +251,15 @@ def _extract_batches(
         xor = has_dir ^ has_dist
 
         block_class = np.where(
-            active & xor & has_dir, "direction",
-            np.where(active & xor & has_dist, "distance", "other"),
+            is_assistant & xor & has_dir, "direction",
+            np.where(is_assistant & xor & has_dist, "distance", "other"),
         )
         ans = at.str.extract(_ANSWER_RE, expand=False)
         answer = np.full(n, None, dtype=object)
         answer[asst_idx] = ans.astype(object).where(ans.notna(), None).to_numpy()
         no_answer = np.full(n, True, dtype=bool)
         no_answer[asst_idx] = ans.isna().to_numpy()
-        answer = np.where(active, answer, None)
-        no_answer |= ~active
-        status = np.where(
-            is_assistant & (~comp_exists | (~xor & no_answer)), "fallback", "ok"
-        )
+        status = np.where(is_assistant & ~xor & no_answer, "fallback", "ok")
         n_tokens = np.asarray(count_pieces_batch(tex_np)).astype("int32")
 
         spans = spans_of(texts)
@@ -299,7 +283,7 @@ def _render_extract(
     base: DataFrame, vocab: list, num_partitions: int | None,
     max_turns: int | None,
 ) -> DataFrame:
-    convs = conversations(base)
+    convs = conversations(base, max_turns)
     if num_partitions:
         convs = convs.repartition(num_partitions, "conv_id")
     return convs.mapInPandas(
@@ -317,36 +301,29 @@ def extract_conversations(
 ) -> DataFrame:
     """The flagship extraction job (render path).  See module docstring.
 
-    Conversations above ``max_turns`` turns (or ``max_bytes`` total
-    text bytes, if set) are routed to the per-turn mirror
-    :func:`extract_turns` instead of ``collect_list`` assembly; output
-    rows are identical either way (module docstring, skew paragraph).
-    ``max_turns=None`` with ``max_bytes=None`` disables routing.
+    With the default arguments this is one scan, one hash exchange and
+    the ``mapInPandas`` kernel: :func:`conversations` assembles rows of
+    at most ``max_turns`` turns, so a giant conversation is rendered in
+    turn-index chunks with no pre-pass; output rows are identical to
+    whole-conversation assembly (``max_turns=None``).
 
-    The oversized set is resolved with a BOUNDED driver collect
-    (``limit(routed_isin_cap + 1)`` — never corpus-sized) so the
-    common cases stay cheap: NO oversized conversations -> the plain
-    single-shuffle render plan, zero join overhead (the kernel's
-    hard-fail stays as defense in depth); <= ``routed_isin_cap``
-    oversized -> two scan-level ``isin`` filters, which reach the
-    parquet reader as pushed predicates; only an adversarial corpus
-    with MORE than the cap falls back to the broadcast anti/semi join
-    pair.  The full join path previously ran unconditionally and cost
-    ~18% of the flagship job wall time at bench scale (measured r4) —
-    all of it AQE replan barriers and empty-broadcast probes for a
-    skew case that almost never fires.
-
-    ``stats_out``: pass a dict to receive ``n_rerouted`` (the oversized
-    conversation count the pre-pass already resolved) — lineage wants
-    the number and recomputing the pre-pass would double its scan.
+    ``max_bytes`` (off by default) also routes conversations over that
+    many total text bytes to the per-turn mirror :func:`extract_turns`.
+    It needs a pre-pass over the text column, resolved with a BOUNDED
+    driver collect (``limit(routed_isin_cap + 1)``): no heavy
+    conversation -> the plain render plan; <= ``routed_isin_cap`` ->
+    two scan-level ``isin`` filters, pushed to the parquet reader; more
+    -> a broadcast anti/semi join pair.  ``stats_out``: pass a dict to
+    receive ``n_rerouted``, the number of byte-rerouted conversations
+    (0 without ``max_bytes``).
     """
     vocab = list(vocab or DEFAULT_VOCAB)
     base = df.select("conv_id", "turn_idx", "role", "text")
     if stats_out is not None:
         stats_out["n_rerouted"] = 0
-    if max_turns is None and max_bytes is None:
-        return _render_extract(base, vocab, num_partitions, None)
-    big = oversized_conv_ids(base, max_turns, max_bytes)
+    if max_bytes is None:
+        return _render_extract(base, vocab, num_partitions, max_turns)
+    big = oversized_conv_ids(base, None, max_bytes)
     big_ids = [r["conv_id"] for r in big.limit(routed_isin_cap + 1).collect()]
     if not big_ids:
         return _render_extract(base, vocab, num_partitions, max_turns)
@@ -374,7 +351,7 @@ def extract_turns(df: DataFrame, vocab: Sequence[str] | None = None) -> DataFram
     token-count pandas UDFs.  Row-identical to the render path for any
     input (see module docstring): this is the 10^12-turn scale path,
     the streaming path (streaming.run_stream) and the reroute target
-    for oversized conversations.
+    for byte-heavy conversations (``max_bytes``).
     """
     vocab = list(vocab or DEFAULT_VOCAB)
     c = classify_turns(df.select("conv_id", "turn_idx", "role", "text"))

@@ -725,10 +725,9 @@ def pipeline_extract(spark, sf_dir):
     """Full extraction pipeline (X3+X4+X2+X6+X8 composed): per-turn
     clean text, char spans, block class, status, token counts.
 
-    The oracle is CLOSED-FORM over the derived 3-turn transcript shape
-    (every conversation has an assistant turn, so the kernel's
-    comp_exists predicate is identically true): block classification =
-    direction-XOR-distance regexes (train_cities.py:69-95), answer =
+    The oracle is CLOSED-FORM per turn (the kernel reads its
+    completion-exists predicate only on assistant rows, where it is
+    true): block classification = direction-XOR-distance regexes (train_cities.py:69-95), answer =
     first A-E char on assistant turns (utils.py:131-147), status
     mirrors the kernel's fallback rule, n_tokens the piece-count regex,
     n_spans the same position-scan as the x6_char_spans oracle (all

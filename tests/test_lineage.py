@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.lineage import CheckpointedExtraction, read_manifest
-from ocr_spark.pipeline import extract_conversations
+from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
 from ocr_spark.synth import transcripts
 
 N_CONVS = 200
@@ -74,17 +74,31 @@ def test_resumed_output_equals_single_run(spark, ckpt):
     assert _rows(resumed.read_output()) == _rows(single)
 
 
-def test_lineage_counters_conserve_turns(spark, ckpt):
+def test_lineage_counters_conserve_turns(spark, tmp_path):
+    """Counters equal the data, with one conversation over the render
+    cap: it is counted in ``n_rerouted`` and its turns are conserved."""
+    n = MAX_RENDER_TURNS + 1
+    i = F.col("id")
+    giant = spark.range(n).select(
+        F.lit("convgiant0").alias("conv_id"),
+        i.cast("int").alias("turn_idx"),
+        F.when(i % 2 == 1, F.lit("user")).otherwise(F.lit("assistant")).alias("role"),
+        F.concat((i % 90 * 100).cast("string"), F.lit(" km")).alias("text"),
+    )
+    t = transcripts(spark, N_CONVS, seed=42).select(*giant.columns).unionByName(giant)
+    ckpt = CheckpointedExtraction(spark, str(tmp_path / "run"), n_buckets=N_BUCKETS)
+    ckpt.stage_by_bucket(t)
     ckpt.run()
     lin = ckpt.read_lineage()
     totals = lin.agg(
         F.sum("n_turns").alias("t"), F.sum("n_ok").alias("ok"),
         F.sum("n_fallback").alias("fb"), F.sum("n_convs").alias("c"),
+        F.sum("n_rerouted").alias("r"),
     ).collect()[0]
-    t = transcripts(spark, N_CONVS, seed=42)
     assert totals["t"] == t.count()
     assert totals["ok"] + totals["fb"] == totals["t"]
-    assert totals["c"] == N_CONVS
+    assert totals["c"] == N_CONVS + 1
+    assert totals["r"] == 1
     assert lin.count() == N_BUCKETS
     assert all(r["wall_sec"] >= 0 for r in lin.collect())
 

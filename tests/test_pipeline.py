@@ -210,11 +210,12 @@ def test_salted_repartition_spreads_giant_conversations(spark):
 
 def test_giant_conversation_reroute(spark):
     """Render-path skew guard (VERDICT r3 #2, north_rule long-conv skew):
-    a 10^5-turn conversation never reaches collect_list assembly — the
-    pre-pass routes it to the per-turn mirror — and the guarded output
-    is row-identical to the unguarded render path across every branch
-    (direction / distance / answer / fallback / vocab spans)."""
-    from ocr_spark.pipeline import extract_conversations, oversized_conv_ids
+    a 10^5-turn conversation is assembled in bounded turn-index chunks,
+    and the chunked output is row-identical to whole-conversation
+    assembly across every branch (direction / distance / answer /
+    fallback / vocab spans).  A repeated (conv_id, turn_idx) that
+    overfills a chunk fails the kernel loudly."""
+    from ocr_spark.pipeline import conversations, oversized_conv_ids
 
     t = transcripts(spark, 60, seed=7).select("conv_id", "turn_idx", "role", "text")
     i = F.col("id")
@@ -242,10 +243,23 @@ def test_giant_conversation_reroute(spark):
             oversized_conv_ids(allt, max_turns=1000).collect()}
     assert over == {"convgiant0"}
 
-    # the guarded run COMPLETING proves the reroute held: the kernel
-    # hard-fails on any >cap conversation that reaches assembly
+    # chunked assembly: no row over the cap; the giant spans 100 rows
+    chunks = conversations(allt, 1000)
+    assert chunks.agg(F.max(F.size("turn_idxs"))).first()[0] <= 1000
+    assert chunks.filter(F.col("conv_id") == "convgiant0").count() == 100
+
+    # the guarded run COMPLETING proves the bound held: the kernel
+    # hard-fails on any assembled row over the cap
     guarded = extract_conversations(allt, max_turns=1000)
     ref = extract_conversations(allt, max_turns=None)
     assert guarded.count() == allt.count()
     assert guarded.exceptAll(ref).count() == 0
     assert ref.exceptAll(guarded).count() == 0
+
+    # four rows sharing one (conv_id, turn_idx) overfill a 3-turn chunk
+    dup = spark.createDataFrame(
+        [("convdup", 1, "assistant", f"{k}00 km") for k in range(4)],
+        "conv_id string, turn_idx int, role string, text string",
+    )
+    with pytest.raises(Exception, match=r"repeats a \(conv_id, turn_idx\)"):
+        extract_conversations(dup, max_turns=3).collect()

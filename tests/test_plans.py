@@ -45,8 +45,9 @@ def test_rendered_mt_is_single_shuffle(spark):
 
 
 def test_flagship_pipeline_is_single_shuffle(spark):
-    """extract_conversations (reroute guard off): one conv_id shuffle
-    feeding one Arrow mapInPandas — the north_rule hot-loop shape."""
+    """extract_conversations (one row per conversation): one conv_id
+    shuffle feeding one Arrow mapInPandas — the north_rule hot-loop
+    shape."""
     from ocr_spark.pipeline import extract_conversations
     from ocr_spark.synth import transcripts
 
@@ -58,34 +59,48 @@ def test_flagship_pipeline_is_single_shuffle(spark):
 
 
 def test_flagship_guard_resolves_to_cheapest_plan(spark):
-    """extract_conversations' oversized-conversation guard (round 4)
-    resolves via a bounded driver collect into one of three plans, each
-    pinned here: (a) no oversized conversations -> the plain
-    single-shuffle render plan, zero join/filter overhead; (b) a few ->
-    two scan-level isin filters, still no joins; (c) more than the
-    isin cap -> broadcast anti/semi joins, never a second shuffle of
-    the turn table."""
+    """extract_conversations' skew guards, each pinned here: (a) the
+    turn bound holds by chunked assembly, so building the plan starts
+    no Spark job and the plan keeps the single-shuffle render shape,
+    whatever ``max_turns`` is; the ``max_bytes`` guard resolves its
+    pre-pass via a bounded driver collect into (b) two scan-level isin
+    filters for a few heavy conversations, still no joins, or (c)
+    broadcast anti/semi joins past the isin cap, never a second
+    shuffle of the turn table."""
     from ocr_spark.pipeline import extract_conversations
     from ocr_spark.synth import transcripts
 
     t = transcripts(spark, 50, seed=42)
 
-    # (a) clean corpus: identical shape to the unguarded plan
-    plan = _plan(extract_conversations(t))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Join" not in plan and "MapInPandas" in plan
+    # (a) no pre-pass: no job at build time, one shuffle, no join/union
+    sc = spark.sparkContext
+    group = "flagship-guard-build"
+    sc.setJobGroup(group, group)
+    try:
+        plans = [_plan(extract_conversations(t)),
+                 _plan(extract_conversations(t, max_turns=5))]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "Join" not in plan and "Union" not in plan
+        assert plan.count("MapInPandas") == 1
 
-    # (b) some oversized (cap forced low): isin filters, no joins
-    plan = _plan(extract_conversations(t, max_turns=5))
+    # (b) a few byte-heavy conversations: isin filters, no joins
+    heaviest = (t.groupBy("conv_id").agg(F.sum(F.length("text")).alias("b"))
+                .orderBy(F.desc("b")).first())
+    max_bytes = heaviest["b"] - 1
+    plan = _plan(extract_conversations(t, max_bytes=max_bytes))
     assert "Join" not in plan
     assert plan.count("MapInPandas") >= 1  # render branch
     assert "Union" in plan  # + per-turn branch
     # membership filter on the routed ids (Catalyst rewrites a 1-item
     # isin to an equality predicate, so accept either spelling)
-    assert "Filter" in plan and "conv00000029" in plan
+    assert "Filter" in plan and heaviest["conv_id"] in plan
 
-    # (c) more oversized than the isin cap: broadcast anti/semi joins
-    plan = _plan(extract_conversations(t, max_turns=5, routed_isin_cap=0))
+    # (c) more heavy conversations than the isin cap: broadcast joins
+    plan = _plan(extract_conversations(t, max_bytes=max_bytes, routed_isin_cap=0))
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert "BroadcastHashJoin" in plan
     assert plan.count("LeftAnti") == 1 and plan.count("LeftSemi") == 1
