@@ -186,12 +186,13 @@ def bench_cc_star_chain(spark, n_edges: int = 10_000) -> dict:
     """Prove the O(log n) star-contraction claim with a measured number.
 
     A chain 0-1-2-...-n is the adversarial input for label propagation:
-    component diameter == corpus size, so the min-label loop needs
+    component diameter == corpus size, so min-label propagation needs
     ~n rounds while large-star/small-star contraction needs O(log n).
     Runs :func:`connected_components_star` on a 10^4-edge chain and
     reports the measured round count (the loop's own max_rounds=24
-    would raise if contraction were not logarithmic) plus a correctness
-    certificate: every node must land in cluster 0.
+    would raise if contraction were not logarithmic), the edge count
+    after each round pair, plus a correctness certificate: every node
+    must land in cluster 0.
     """
     from pyspark.sql import functions as F
 
@@ -209,6 +210,7 @@ def bench_cc_star_chain(spark, n_edges: int = 10_000) -> dict:
         f"chain CC wrong: {row['n']} nodes, max label {row['mx']}"
     )
     return {"chain_edges": n_edges, "rounds": stats["rounds"],
+            "edges": stats["edges"],
             "min_label_rounds_needed": n_edges, "sec": sec}
 
 

@@ -27,8 +27,10 @@ import ocr_spark.queries.corpus_ops  # noqa: F401
 # Round-5 sections (union matrix after r4: all 131 green at latest
 # check; the 69 r4-window entries now carry fresh evidence, so this
 # round's window refreshes the STALEST driver rows instead):
-# 1. implementation/oracle changed in round 5 (standing rule (a)):
-#    link_pagerank (mod-before-square link maps, ADVICE),
+# 1. implementation/oracle changed (standing rule (a)):
+#    dedup_clusters + dedup_cluster_sizes (connected components now by
+#    star contraction; the min-label loop and dedup_clusters_star are
+#    gone), and from round 5 link_pagerank (mod-before-square link maps),
 #    a16_range_window (session timezone pinned UTC under it),
 #    ann_ivf_probe + kmeans_train (empty-Arrow-batch UDF guards),
 # 2. every query whose latest driver row is r1/r2 (40 entries — the
@@ -36,9 +38,10 @@ import ocr_spark.queries.corpus_ops  # noqa: F401
 #    every session and scripts/full_correctness.py now commits a
 #    full-catalog snapshot per round, but the driver's own record
 #    should rotate back over them),
-# 3. the remaining 6 slots: the heaviest r3-latest entries
-#    (dedup_clusters, simhash_hamming_pairs, dedup_minhash_lsh_pairs,
-#    embedding_neardup, udf_grouped_map, udf_grouped_agg).
+# 3. 5 more named slots: the heaviest r3-latest entries
+#    (simhash_hamming_pairs, dedup_minhash_lsh_pairs, embedding_neardup,
+#    udf_grouped_map, udf_grouped_agg).  The list names 49 entries; the
+#    50th slot falls to the first entry in registration order.
 # Rotated out (all r4-green, pytest parity every run +
 # CORRECTNESS_FULL_r5.json): the r4-new families (agent, CCNet, BPE,
 # DOM, n-gram) and the r4-changed five.
@@ -49,16 +52,16 @@ _DRIVER_PRIORITY = [
     "c4_quality_filter", "url_normalize", "dedup_keep_best",
     "dsir_importance", "seq_len_histogram", "semdedup", "bloom_prefilter",
     "hll_distinct",
-    # -- 1: implementation/oracle changed in round 5 ----------------------
+    # -- 1: implementation/oracle changed ---------------------------------
+    "dedup_clusters", "dedup_cluster_sizes",
     "link_pagerank", "a16_range_window", "ann_ivf_probe", "kmeans_train",
     # -- 1b: plans changed by the round-5 gram-builder binding
     #    (pipeline_ops.bind_words, BENCH.md §3e — standing rule (a);
     #    results bit-identical under pytest parity, but the driver
     #    should re-check every query whose executed plan changed) ---------
     "dedup_ngram_jaccard", "minhash_jaccard_est", "dedup_incremental",
-    "dedup_clusters_star", "dedup_cluster_sizes", "contamination_check",
-    "topk_ngrams", "winnowing_fingerprint", "dedup_span_ngram",
-    "exact_substr_excise", "text_repetition", "lm_bigram_score",
+    "contamination_check", "topk_ngrams", "winnowing_fingerprint",
+    "dedup_span_ngram", "exact_substr_excise", "text_repetition", "lm_bigram_score",
     "ccnet_head_middle_tail",
     # -- 2: latest driver evidence is r1/r2 -------------------------------
     "a10_kl_divergence", "a5_topk_per_group", "a8_cumlogsum",
@@ -80,8 +83,8 @@ _DRIVER_PRIORITY = [
     "x3_render", "x4_marker_split", "x6_char_spans",
     "x8_block_classify",
     # -- 3: heaviest r3-latest entries ------------------------------------
-    "dedup_clusters", "simhash_hamming_pairs", "dedup_minhash_lsh_pairs",
-    "embedding_neardup", "udf_grouped_map", "udf_grouped_agg",
+    "simhash_hamming_pairs", "dedup_minhash_lsh_pairs", "embedding_neardup",
+    "udf_grouped_map", "udf_grouped_agg",
 ]
 
 

@@ -35,7 +35,8 @@ memory, but distributed: pair counts aggregate with partial sums, the
 top-1 is a TakeOrderedAndProject (no global sort), and the merge is a
 map-side replace.  The collected top pair is one scalar row per
 iteration — the same legitimate driver-side loop certificate as
-kmeans_train's codebook and dedup_clusters' convergence check.
+kmeans_train's codebook and the (count, hash-sum) fingerprint that
+connected_components_star observes per round.
 """
 
 from __future__ import annotations

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.queries.catalog import ORACLES, QUERIES, _register, _t
@@ -434,75 +434,16 @@ def dedup_clusters(spark, sf_dir):
     the step that turns candidate pairs into a keep/drop decision
     (keep == cluster_id, drop the rest).
 
-    Iterative min-label propagation: each round joins the edge list
-    with current labels and takes the per-node min; labels only
-    decrease, so ``sum(labels)`` is a convergence certificate and the
-    fixpoint (min reachable id) is deterministic regardless of round
-    count or partitioning — it is exactly what the oracle's recursive
-    CTE computes.  Rounds = component diameter; at 100 TB the same
-    loop runs with the alternating large-star/small-star optimization
-    (O(log n) rounds) and a checkpoint per round, but near-dup
-    components are overwhelmingly tiny so the plain loop is the right
-    default."""
+    The components come from :func:`connected_components_star`
+    (O(log n) round pairs whatever the component diameter); its
+    component-min fixpoint is exactly what the oracle's recursive CTE
+    computes.  Only nodes that HAVE edges go through the contraction:
+    singletons (the vast majority of a deduped corpus) can never
+    change label, so they join back in one anti-join at the end."""
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    edges = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .unionAll(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .persist()
-    )
-    # Propagate only over nodes that HAVE edges: singletons (the vast
-    # majority of a deduped corpus) can never change label, so they
-    # join back in one anti-join at the end instead of riding along
-    # through every iteration.
-    labels = (
-        edges.select(F.col("s").alias("doc_id")).distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id"))
-        .persist()
-    )
-    # Labels only decrease, so sum(cluster_id) is a strict convergence
-    # certificate: iterate to the FIXPOINT (sum unchanged), never a
-    # fixed round count — a component with diameter d needs d rounds,
-    # and returning early would silently disagree with the oracle's
-    # recursive-CTE min-reachable fixpoint.  The cap is a diagnostic
-    # backstop only (64 rounds >> any real near-dup component; at that
-    # depth raise instead of returning wrong labels).
-    max_rounds = 64
-    converged = False
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    for _ in range(max_rounds):
-        prop = (
-            edges.join(labels, edges["s"] == labels["doc_id"])
-            .groupBy(F.col("d").alias("nid"))
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        # localCheckpoint (not just persist) truncates the lineage each
-        # round — without it the logical plan doubles per iteration and
-        # replanning dominates the loop by round 4
-        new_labels = (
-            labels.join(prop, labels["doc_id"] == prop["nid"], "left")
-            .select(
-                labels["doc_id"],
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        new_sum = new_labels.agg(F.sum("cluster_id")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters: min-label propagation did not reach its "
-            f"fixpoint within {max_rounds} rounds (component diameter "
-            f"> {max_rounds}); refusing to return unconverged labels"
-        )
+    edges = pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
+    labels = connected_components_star(edges)
     singletons = docs.join(
         labels.select("doc_id"), "doc_id", "left_anti"
     ).select("doc_id", F.col("doc_id").alias("cluster_id"))
@@ -514,71 +455,72 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log n) rounds in the component DIAMETER-independent
-    sense, vs the min-label loop's O(diameter) rounds.  This is the
-    100 TB path for the pathological case the plain loop handles
-    poorly: a long chain of pairwise near-dups (diameter ~ corpus
-    size) converges here in a handful of rounds.
+    Beyond") — O(log n) round pairs, independent of the component
+    diameter: a long chain of pairwise near-dups (diameter ~ corpus
+    size) converges in a handful of rounds.
 
     ``edges``: two columns ``(s, d)`` — undirected edges in either or
     both orientations; self-loops ignored.  Returns ``(doc_id,
     cluster_id)`` for every node APPEARING IN EDGES, cluster_id = the
-    component's minimum id (identical to the min-label fixpoint and to
-    the recursive-CTE oracle).
+    component's minimum id (what the recursive-CTE oracle computes).
 
     Per round: large-star hangs every larger neighbor off its
-    neighborhood minimum, small-star re-hangs the not-larger ones; both
-    are one groupBy + one broadcast-free equi-join over the edge set.
-    Each round ends in an eager ``localCheckpoint`` — mandatory, not an
-    optimization: a star references its input plan TWICE (the
-    symmetrized set feeds both the min-aggregate and the join), so an
-    untruncated plan QUADRUPLES per round pair and analysis time blows
-    up exponentially by round ~3 (measured).  The superseded round's
-    checkpoint blocks are then released eagerly through the LogicalRDD
-    handle (best-effort; the context cleaner would get them eventually)
-    so executor block storage holds O(1) edge-set copies, not
-    O(rounds).  Convergence certificate: a stable (count, hash-sum)
-    fingerprint nominates a fixpoint, which is then CONFIRMED exactly
-    with one set-difference job on the final round (fingerprint
-    collisions cannot terminate the loop early); on the fixpoint every
-    node's edges point at its component min."""
-    e = (
-        edges.select(F.col("s").cast("long"), F.col("d").cast("long"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    neighborhood minimum, small-star re-hangs the not-larger ones; the
+    neighborhood minimum is a window over the symmetrized edge set
+    partitioned by node (one exchange, no join), and only small-star's
+    output is deduplicated.  Each round pair ends in an eager
+    ``localCheckpoint`` — mandatory, not an optimization: a star
+    references its input plan TWICE (the symmetrized set is the input
+    unioned with its mirror), so an untruncated plan QUADRUPLES per
+    round pair and analysis time blows up exponentially by round ~3.
+    The superseded round's checkpoint blocks are then released eagerly
+    through the LogicalRDD handle (best-effort; the context cleaner
+    would get them eventually) so executor block storage holds O(1)
+    edge-set copies, not O(rounds).  Convergence certificate: a (count, hash-sum)
+    fingerprint, observed in the checkpoint job itself (no extra job),
+    nominates a fixpoint when it is stable, which is then CONFIRMED
+    exactly with one set-difference job on the final round
+    (fingerprint collisions cannot terminate the loop early); on the
+    fixpoint every non-minimum node has one edge, to its component min.
+    No fixpoint within ``max_rounds`` round pairs raises.
+
+    ``stats``, if given, receives ``rounds`` (round pairs run) and
+    ``edges``: the distinct input edge count, then the edge count after
+    each round pair."""
 
     def _sym(df: DataFrame) -> DataFrame:
         return df.unionAll(df.select(F.col("d").alias("s"), F.col("s").alias("d")))
 
-    def _cert(df: DataFrame):
-        # multiset fingerprint: count + decimal sum of a bounded row
-        # hash (raw 64-bit sums overflow long under ANSI mode); a
-        # changed edge set colliding on both is vanishingly unlikely
-        row = df.agg(
+    def _checkpoint(df: DataFrame):
+        # multiset fingerprint observed on the checkpoint job: count +
+        # decimal sum of a bounded row hash (raw 64-bit sums overflow
+        # long under ANSI mode); a changed edge set colliding on both
+        # is vanishingly unlikely
+        obs = Observation()
+        cp = df.observe(
+            obs,
             F.count("*").alias("n"),
             F.sum(
                 F.pmod(F.xxhash64("s", "d"), F.lit(2**31)).cast("decimal(38,0)")
             ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        return cp, (m["n"], m["h"])
 
     def _star(df: DataFrame, large: bool) -> DataFrame:
-        sym = _sym(df)
-        m = sym.groupBy("s").agg(
-            F.least(F.min("d"), F.col("s")).alias("m")
+        sym = _sym(df).withColumn(
+            "m", F.least(F.min("d").over(Window.partitionBy("s")), F.col("s"))
         )
-        joined = sym.join(m, "s")
         if large:
             # hang strictly-larger neighbors off the neighborhood min
-            out = joined.filter(F.col("d") > F.col("s")).select(
+            # (d > s >= m: no self-loops).  No distinct() here: repeated
+            # edges change neither small-star's min nor its distinct()
+            return sym.filter(F.col("d") > F.col("s")).select(
                 F.col("d").alias("s"), F.col("m").alias("d"))
-        else:
-            # re-hang the center and its not-larger neighbors
-            out = joined.filter(F.col("d") <= F.col("s")).select(
-                F.col("d").alias("s"), F.col("m").alias("d"))
-            out = out.unionAll(m.select(F.col("s"), F.col("m").alias("d")))
+        # re-hang the center and its not-larger neighbors
+        out = sym.filter(F.col("d") <= F.col("s")).select(
+            F.col("d").alias("s"), F.col("m").alias("d"))
+        out = out.unionAll(sym.select(F.col("s"), F.col("m").alias("d")))
         return out.filter(F.col("s") != F.col("d")).distinct()
 
     def _release_checkpoint(df: DataFrame) -> None:
@@ -598,30 +540,31 @@ def connected_components_star(
         except Exception:
             pass  # context cleaner will reclaim it on GC instead
 
-    prev = _cert(e)
+    e, prev = _checkpoint(
+        edges.select(F.col("s").cast("long"), F.col("d").cast("long"))
+        .filter(F.col("s") != F.col("d"))
+        .distinct()
+    )
+    sizes = [prev[0]]
     converged = False
-    rounds = 0
     for _ in range(max_rounds):
-        rounds += 1
-        new_e = _star(_star(e, large=True), large=False).localCheckpoint(eager=True)
-        cur = _cert(new_e)
-        if cur == prev and new_e.exceptAll(e).isEmpty():
-            # fingerprint match confirmed EXACTLY (ADVICE r3): the
-            # (count, hash-sum) certificate is probabilistic, so the
-            # candidate fixpoint pays one extra set-difference job —
-            # counts are equal here and both sides are distinct(), so
-            # empty one-sided exceptAll proves set equality.  A
-            # colliding-but-changed edge set falls through and keeps
-            # iterating instead of returning wrong labels.
-            _release_checkpoint(e)
-            e = new_e
-            converged = True
-            break
+        new_e, cur = _checkpoint(_star(_star(e, large=True), large=False))
+        sizes.append(cur[0])
+        # fingerprint match confirmed EXACTLY: the (count, hash-sum)
+        # certificate is probabilistic, so the candidate fixpoint pays
+        # one extra set-difference job — counts are equal here and both
+        # sides are distinct(), so empty one-sided exceptAll proves set
+        # equality.  A colliding-but-changed edge set falls through and
+        # keeps iterating instead of returning wrong labels.
+        converged = cur == prev and new_e.exceptAll(e).isEmpty()
         _release_checkpoint(e)  # new_e is materialized; old round is dead
-        e = new_e
-        prev = cur
+        e, prev = new_e, cur
+        if converged:
+            break
     if stats is not None:
-        stats["rounds"] = rounds  # measured round-pairs (bench evidence)
+        # measured round pairs and per-round sizes (bench evidence)
+        stats["rounds"] = len(sizes) - 1
+        stats["edges"] = sizes
     if not converged:
         raise RuntimeError(
             f"connected_components_star: no fixpoint within {max_rounds} "
@@ -631,29 +574,6 @@ def connected_components_star(
     return sym.groupBy("s").agg(
         F.least(F.min("d"), F.col("s")).alias("cluster_id")
     ).select(F.col("s").alias("doc_id"), "cluster_id")
-
-
-@_register("dedup_clusters_star")
-def dedup_clusters_star(spark, sf_dir):
-    """Near-dup cluster assignment via star contraction (see
-    :func:`connected_components_star`) — the O(log n)-rounds scale
-    variant of ``dedup_clusters``; byte-identical labels (both compute
-    the component-min fixpoint, pinned by the shared oracle and
-    ``tests/test_graph.py``).  Singletons join back by anti-join, as
-    in the min-label variant."""
-    pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    edges = pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-    labels = connected_components_star(edges)
-    singletons = docs.join(
-        labels.select("doc_id"), "doc_id", "left_anti"
-    ).select("doc_id", F.col("doc_id").alias("cluster_id"))
-    return labels.unionByName(singletons)
-
-
-# star contraction computes the identical component-min fixpoint, so it
-# shares dedup_clusters' recursive-CTE oracle verbatim
-ORACLES["dedup_clusters_star"] = ORACLES["dedup_clusters"]
 
 
 @_register(
@@ -2101,11 +2021,11 @@ FROM per GROUP BY cnt""")
 def dedup_cluster_sizes(spark, sf_dir):
     """Near-dup family size histogram — the QA report every dedup run
     ships with (how much of the corpus sits in families of 2, of 10,
-    of 10^6...).  Composes the verified connected-components labels:
-    two tiny aggregations on top (per-cluster counts, then counts of
-    counts), both with map-side partials; the expensive subtree is
-    dedup_clusters itself, unchanged.  Oracle = the recursive-CTE
-    clusters oracle with the same two rollups appended."""
+    of 10^6...).  Composes the verified connected-components labels of
+    dedup_clusters (star contraction, O(log n) round pairs): two tiny
+    aggregations on top (per-cluster counts, then counts of counts),
+    both with map-side partials.  Oracle = the recursive-CTE clusters
+    oracle with the same two rollups appended."""
     per = (
         dedup_clusters(spark, sf_dir)
         .groupBy("cluster_id")

@@ -1,4 +1,9 @@
-"""connected_components_star correctness (the O(log n) CC variant)."""
+"""connected_components_star correctness: labels, per-round sizes and
+the loud failure when no fixpoint is reached.  It is the catalog's one
+connected-components algorithm (dedup_clusters and dedup_cluster_sizes
+run on it; their oracle parity is in tests/test_oracle_parity.py)."""
+
+import pytest
 
 from ocr_spark.queries.pipeline_ops import connected_components_star
 
@@ -24,14 +29,31 @@ def _union_find_minlabels(edges):
     return {x: find(x) for x in parent}
 
 
+def _path(spark):
+    return spark.createDataFrame([(i, i + 1) for i in range(40)], "s long, d long")
+
+
 def test_star_collapses_long_path(spark):
-    """A 41-node path (diameter 40) is the case the plain min-label
-    loop needs 40 rounds for; star contraction must converge inside
-    its round cap (O(log n)) and label every node with the path min."""
-    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "s long, d long")
-    out = connected_components_star(edges, max_rounds=10).toPandas()
+    """A 41-node path (diameter 40) is the case label propagation
+    needs 40 rounds for; star contraction must converge inside its
+    round cap (O(log n)) and label every node with the path min.  At
+    the fixpoint every non-minimum node keeps one edge, to the min."""
+    stats = {}
+    out = connected_components_star(
+        _path(spark), max_rounds=10, stats=stats
+    ).toPandas()
     assert set(out["doc_id"]) == set(range(41))
     assert set(out["cluster_id"]) == {0}
+    assert stats["edges"][0] == 40
+    assert stats["edges"][-1] == 41 - 1
+    assert len(stats["edges"]) == stats["rounds"] + 1
+
+
+def test_star_raises_without_fixpoint(spark):
+    """One round pair cannot contract the 41-node path: the loop must
+    raise rather than return unconverged labels."""
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components_star(_path(spark), max_rounds=1)
 
 
 def test_star_matches_union_find_on_mixed_graph(spark):
@@ -40,25 +62,15 @@ def test_star_matches_union_find_on_mixed_graph(spark):
     raw = [((k * 7919) % 60, (k * 104729) % 60) for k in range(45)]
     edges = [(s, d) for s, d in raw if s != d]
     want = _union_find_minlabels(edges)
+    stats = {}
     out = connected_components_star(
-        spark.createDataFrame(edges, "s long, d long")
+        spark.createDataFrame(edges, "s long, d long"), stats=stats
     ).toPandas()
     got = dict(zip(out["doc_id"], out["cluster_id"]))
     assert got == want
-
-
-def test_star_and_minlabel_agree_on_lsh_graph(spark):
-    """Both catalog variants must produce identical labels over the
-    real LSH candidate graph (they share one oracle; this pins them to
-    each other directly as well)."""
-    from ocr_spark.queries import QUERIES
-    from tests.conftest import SF_DIR_ORACLE
-
-    a = QUERIES["dedup_clusters"](spark, SF_DIR_ORACLE).toPandas()
-    b = QUERIES["dedup_clusters_star"](spark, SF_DIR_ORACLE).toPandas()
-    da = dict(zip(a["doc_id"], a["cluster_id"]))
-    db = dict(zip(b["doc_id"], b["cluster_id"]))
-    assert da == db
+    n_components = len(set(want.values()))
+    assert stats["edges"][-1] == len(want) - n_components
+    assert len(stats["edges"]) == stats["rounds"] + 1
 
 
 def test_pagerank_large_doc_ids_no_int64_wrap(spark, tmp_path):
