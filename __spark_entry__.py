@@ -20,10 +20,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     Full extraction pipeline over transcripts derived from the sf0.001
-    documents table: assemble conversations (one shuffle), run the
-    Arrow-batched kernel UDF (merge -> render -> split -> classify ->
-    extract -> spans), then aggregate per-role turn counts, mean
-    extracted-text length, and fallback counters.
+    documents table: per-turn extraction with no shuffle (native
+    classify + answer extraction, then the span and token-count Arrow
+    UDFs), then aggregate per-role turn counts, mean extracted-text
+    length, and fallback counters.
     """
     from pyspark.sql import functions as F
 

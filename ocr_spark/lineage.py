@@ -79,8 +79,8 @@ def _write_manifest(output_dir: str, manifest: dict) -> None:
 class BucketStats:
     """One bucket's lineage row.  ``n_rerouted`` keeps its name for
     existing lineage tables: it counts the bucket's conversations over
-    ``MAX_RENDER_TURNS`` turns, which the render path assembles in
-    turn-index chunks."""
+    ``MAX_RENDER_TURNS`` turns.  Extraction is per-turn, so these need
+    no special handling; the count reports the long-conversation skew."""
 
     bucket: int
     n_convs: int

@@ -32,8 +32,12 @@ import ocr_spark.queries.corpus_ops  # noqa: F401
 #    star contraction; the min-label loop and dedup_clusters_star are
 #    gone), and from round 5 link_pagerank (mod-before-square link maps),
 #    a16_range_window (session timezone pinned UTC under it),
-#    ann_ivf_probe + kmeans_train (empty-Arrow-batch UDF guards),
-# 2. every query whose latest driver row is r1/r2 (40 entries — the
+#    ann_ivf_probe + kmeans_train (empty-Arrow-batch UDF guards), and
+#    pipeline_extract + x6_char_spans + x13_token_count + w5_batch_pad
+#    (executed plans changed: the flagship is the zero-shuffle per-turn
+#    plan, and the span and token-count UDFs are Arrow UDFs),
+# 2. queries whose latest driver row is r1/r2 (40 entries: 15 named
+#    here, 24 rotated out as listed below, x6_char_spans in 1 — the
 #    r3/r4 windows rotated them out; pytest parity has covered them
 #    every session and scripts/full_correctness.py now commits a
 #    full-catalog snapshot per round, but the driver's own record
@@ -54,6 +58,7 @@ _DRIVER_PRIORITY = [
     "hll_distinct",
     # -- 1: implementation/oracle changed ---------------------------------
     "dedup_clusters", "dedup_cluster_sizes",
+    "pipeline_extract", "x6_char_spans", "x13_token_count", "w5_batch_pad",
     "link_pagerank", "a16_range_window", "ann_ivf_probe", "kmeans_train",
     # -- 1b: plans changed by the round-5 gram-builder binding
     #    (pipeline_ops.bind_words, BENCH.md §3e — standing rule (a);
@@ -65,9 +70,10 @@ _DRIVER_PRIORITY = [
     "ccnet_head_middle_tail",
     # -- 2: latest driver evidence is r1/r2 -------------------------------
     "a10_kl_divergence", "a5_topk_per_group", "a8_cumlogsum",
-    "a9_vector_mean",
-    # (twenty-one trivial r2-greens rotated back out to make room for the
-    #  corpus_ops entries and the 1b plan-changed set — j5_union,
+    # (twenty-four trivial r2-greens rotated back out to make room for the
+    #  corpus_ops entries, the 1b plan-changed set and the section-1
+    #  extraction queries — a9_vector_mean, stratified_sample,
+    #  w6_interpolation_sweep, j5_union,
     #  j7_dedup, p10_sanitize, w4_stride_sample, x6_span_count, a5_topk,
     #  a14_shift_compare, a1_grouped_accuracy, a2_rollup,
     #  a4_ratio_of_sums, a6_rolling_mean, a7_cumsum, j1_broadcast_lookup,
@@ -77,11 +83,9 @@ _DRIVER_PRIORITY = [
     #  every session by
     #  pytest parity + the committed full-catalog snapshot)
     "ann_cosine_topk", "dedup_exact", "dedup_minhash_signatures",
-    "j8_pairwise_cosine", "lang_id", "p1_turn_merge",
-    "stratified_sample", "text_quality",
-    "w6_interpolation_sweep", "x1_parse_imports", "x2_extract_answer",
-    "x3_render", "x4_marker_split", "x6_char_spans",
-    "x8_block_classify",
+    "j8_pairwise_cosine", "lang_id", "p1_turn_merge", "text_quality",
+    "x1_parse_imports", "x2_extract_answer", "x3_render",
+    "x4_marker_split", "x8_block_classify",
     # -- 3: heaviest r3-latest entries ------------------------------------
     "simhash_hamming_pairs", "dedup_minhash_lsh_pairs", "embedding_neardup",
     "udf_grouped_map", "udf_grouped_agg",

@@ -269,7 +269,7 @@ WHERE role = 'user' AND contains(text, 'City')
 def x6_span_count(spark, sf_dir):
     """X6 (relational form): non-overlapping occurrence count + first
     1-based char position of a key (char half of utils.py:160-196;
-    exact char spans incl. overlaps are produced by the pandas-UDF
+    exact char spans incl. overlaps are produced by the Arrow-UDF
     pipeline and pinned in pytest)."""
     t = derived_transcripts(spark, sf_dir).filter(
         (F.col("role") == "user") & F.col("text").contains("City")
@@ -751,7 +751,7 @@ FROM transcripts
 """),
 )
 def x13_token_count(spark, sf_dir):
-    """X13: deterministic tokenizer counts per turn (pandas UDF over
+    """X13: deterministic tokenizer counts per turn (Arrow UDF over
     count_pieces_batch; ``len(encode(t)) == len(_PIECE_RE.findall(t))``
     by construction, tokenizer.py count_tokens).  Oracle: the RE2
     mirror of _PIECE_RE — see the section comment above for why the
@@ -790,7 +790,7 @@ WHERE substr(text, CAST(i AS INTEGER), length(key)) = key
 def x6_char_spans(spark, sf_dir):
     """X6 exact form: every vocab-key occurrence with char offsets,
     overlaps included (utils.py:160-196).  One row per span; the
-    pandas-UDF find loop is oracle-checked against a DuckDB
+    Arrow-UDF find loop is oracle-checked against a DuckDB
     position-scan (ORACLES entry filled at import bottom)."""
     from ocr_spark.pipeline import span_udf, DEFAULT_VOCAB
 

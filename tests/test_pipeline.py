@@ -8,7 +8,9 @@ parallelism, SURVEY.md §5).
 """
 
 import pandas as pd
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from ocr_spark.kernels import (
@@ -101,9 +103,10 @@ def test_per_turn_text_equality(spark, input_rows, extract):
 
 def test_newline_terminated_distance_matches_kernel(spark):
     """'500 km\\n' must NOT classify as distance: the kernel's
-    endswith() sees the trailing newline, and the vectorized regex must
-    anchor with \\Z — Python-re $ also matches just before a trailing
-    newline and would silently diverge from the golden kernel."""
+    endswith() sees the trailing newline, and so must the native
+    endswith() of classify_turns — a regex anchored with Python-re $
+    would also match just before a trailing newline and silently
+    diverge from the golden kernel."""
     rows = [
         ("nl0", 0, "user", "From City 50337 to Akureyri, how far?"),
         ("nl0", 1, "assistant", "500 km\n"),
@@ -209,12 +212,11 @@ def test_salted_repartition_spreads_giant_conversations(spark):
 
 
 def test_giant_conversation_reroute(spark):
-    """Render-path skew guard (VERDICT r3 #2, north_rule long-conv skew):
-    a 10^5-turn conversation is assembled in bounded turn-index chunks,
-    and the chunked output is row-identical to whole-conversation
-    assembly across every branch (direction / distance / answer /
-    fallback / vocab spans).  A repeated (conv_id, turn_idx) that
-    overfills a chunk fails the kernel loudly."""
+    """Long-conversation skew (VERDICT r3 #2, north_rule): a
+    10^5-turn conversation needs no special handling on the zero-shuffle
+    flagship, which emits one row per input turn; the retired render
+    path's helpers still find it (turn-count pre-pass) and bound it
+    (turn-index chunked assembly)."""
     from ocr_spark.pipeline import conversations, oversized_conv_ids
 
     t = transcripts(spark, 60, seed=7).select("conv_id", "turn_idx", "role", "text")
@@ -248,18 +250,50 @@ def test_giant_conversation_reroute(spark):
     assert chunks.agg(F.max(F.size("turn_idxs"))).first()[0] <= 1000
     assert chunks.filter(F.col("conv_id") == "convgiant0").count() == 100
 
-    # the guarded run COMPLETING proves the bound held: the kernel
-    # hard-fails on any assembled row over the cap
-    guarded = extract_conversations(allt, max_turns=1000)
-    ref = extract_conversations(allt, max_turns=None)
-    assert guarded.count() == allt.count()
-    assert guarded.exceptAll(ref).count() == 0
-    assert ref.exceptAll(guarded).count() == 0
+    assert extract_conversations(allt).count() == allt.count()
 
-    # four rows sharing one (conv_id, turn_idx) overfill a 3-turn chunk
-    dup = spark.createDataFrame(
-        [("convdup", 1, "assistant", f"{k}00 km") for k in range(4)],
-        "conv_id string, turn_idx int, role string, text string",
-    )
-    with pytest.raises(Exception, match=r"repeats a \(conv_id, turn_idx\)"):
-        extract_conversations(dup, max_turns=3).collect()
+
+# ---------------------------------------------------------------------------
+# Arrow UDF equivalence fuzz: each UDF's function against its kernel
+# ---------------------------------------------------------------------------
+
+#: overlapping / adjacent keys, multi-byte (é, 中) and astral (😀, 𝔸)
+#: neighbours, and key fragments that must not count as hits
+_FUZZ_PIECES = ["City 50337", "City 5033", "City ", "couhpa", "aa", "a", "é", "中",
+                "😀", "𝔸", " ", "\n", "<end_of_turn>", "North", "x"]
+_fuzz_text = st.lists(st.sampled_from(_FUZZ_PIECES), max_size=12).map("".join) | st.text(
+    max_size=40)
+_fuzz_vocab = st.lists(
+    st.sampled_from(DEFAULT_VOCAB) | st.sampled_from(["aa", "a", "é中", "😀a", "City 5033"]),
+    min_size=1, max_size=8, unique=True,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.none() | _fuzz_text, max_size=16), _fuzz_vocab)
+def test_span_udf_equals_find_spans(texts, vocab):
+    """The Arrow span UDF == the per-key find_spans loop, row for row:
+    vocab order then occurrence order, overlaps included, null -> []."""
+    from ocr_spark.pipeline import span_udf
+
+    got = span_udf(vocab).func(pa.array(texts, pa.string())).to_pylist()
+    want = [
+        [] if t is None else
+        [{"key": k, "start": s, "end": e}
+         for k in vocab if k in t for (s, e) in find_spans(t, k)]
+        for t in texts
+    ]
+    assert got == want
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.none() | _fuzz_text, max_size=16))
+def test_token_count_udf_equals_count_tokens(texts):
+    """The Arrow token UDF == DeterministicTokenizer.count_tokens per
+    row (specials and astral code points included); null -> 0."""
+    from ocr_spark.pipeline import token_count_udf
+
+    tok = DeterministicTokenizer()
+    got = token_count_udf().func(pa.array(texts, pa.string()))
+    assert got.type == pa.int32()
+    assert got.to_pylist() == [0 if t is None else tok.count_tokens(t) for t in texts]

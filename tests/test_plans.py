@@ -45,65 +45,34 @@ def test_rendered_mt_is_single_shuffle(spark):
 
 
 def test_flagship_pipeline_is_single_shuffle(spark):
-    """extract_conversations (one row per conversation): one conv_id
-    shuffle feeding one Arrow mapInPandas — the north_rule hot-loop
-    shape."""
+    """extract_conversations is zero-shuffle: scan, native classify and
+    ONE ArrowEvalPython stage (span + token UDFs) — no conv_id exchange,
+    no mapInPandas, no join or union branch."""
     from ocr_spark.pipeline import extract_conversations
     from ocr_spark.synth import transcripts
 
-    plan = _plan(
-        extract_conversations(transcripts(spark, 50, seed=42), max_turns=None)
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "MapInPandas" in plan
+    plan = _plan(extract_conversations(transcripts(spark, 50, seed=42)))
+    assert "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    for node in ("MapInPandas", "Join", "Union"):
+        assert node not in plan
 
 
 def test_flagship_guard_resolves_to_cheapest_plan(spark):
-    """extract_conversations' skew guards, each pinned here: (a) the
-    turn bound holds by chunked assembly, so building the plan starts
-    no Spark job and the plan keeps the single-shuffle render shape,
-    whatever ``max_turns`` is; the ``max_bytes`` guard resolves its
-    pre-pass via a bounded driver collect into (b) two scan-level isin
-    filters for a few heavy conversations, still no joins, or (c)
-    broadcast anti/semi joins past the isin cap, never a second
-    shuffle of the turn table."""
+    """Building the flagship plan starts no Spark job: no pre-pass, no
+    driver collect."""
     from ocr_spark.pipeline import extract_conversations
     from ocr_spark.synth import transcripts
 
     t = transcripts(spark, 50, seed=42)
-
-    # (a) no pre-pass: no job at build time, one shuffle, no join/union
     sc = spark.sparkContext
     group = "flagship-guard-build"
     sc.setJobGroup(group, group)
     try:
-        plans = [_plan(extract_conversations(t)),
-                 _plan(extract_conversations(t, max_turns=5))]
+        _plan(extract_conversations(t))
         assert sc.statusTracker().getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    for plan in plans:
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "Join" not in plan and "Union" not in plan
-        assert plan.count("MapInPandas") == 1
-
-    # (b) a few byte-heavy conversations: isin filters, no joins
-    heaviest = (t.groupBy("conv_id").agg(F.sum(F.length("text")).alias("b"))
-                .orderBy(F.desc("b")).first())
-    max_bytes = heaviest["b"] - 1
-    plan = _plan(extract_conversations(t, max_bytes=max_bytes))
-    assert "Join" not in plan
-    assert plan.count("MapInPandas") >= 1  # render branch
-    assert "Union" in plan  # + per-turn branch
-    # membership filter on the routed ids (Catalyst rewrites a 1-item
-    # isin to an equality predicate, so accept either spelling)
-    assert "Filter" in plan and heaviest["conv_id"] in plan
-
-    # (c) more heavy conversations than the isin cap: broadcast joins
-    plan = _plan(extract_conversations(t, max_bytes=max_bytes, routed_isin_cap=0))
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("LeftAnti") == 1 and plan.count("LeftSemi") == 1
 
 
 def test_batch_packing_prefix_sum_is_bucketed(spark):
