@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
+from ocr_spark.session import one_row
 
 MANIFEST = "_manifest.json"
 
@@ -200,9 +201,10 @@ class CheckpointedExtraction:
         # directory with mode=overwrite (the Iceberg writer appends —
         # its snapshot log supplies the dedup there), so the retry
         # replaces the dangling row instead of double-counting.
-        lineage = self.spark.createDataFrame(
-            [(st.n_convs, st.n_turns, st.n_ok, st.n_fallback,
-              st.n_rerouted, st.wall_sec, time.time())],
+        lineage = one_row(
+            self.spark,
+            (st.n_convs, st.n_turns, st.n_ok, st.n_fallback,
+             st.n_rerouted, st.wall_sec, time.time()),
             "n_convs long, n_turns long, n_ok long, n_fallback long, "
             "n_rerouted long, wall_sec double, committed_at double",
         )

@@ -27,8 +27,10 @@ neither, and the benchmark's traced render layers still time them.
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -170,19 +172,27 @@ def extract_turns(df: DataFrame, vocab: Sequence[str] | None = None) -> DataFram
     :func:`extract_conversations`, the streaming path
     (streaming.run_stream) and the checkpointed batch path (lineage).
     """
-    vocab = list(vocab or DEFAULT_VOCAB)
+    spans, ntok = _extract_udfs(df.sparkSession.sparkContext, tuple(vocab or DEFAULT_VOCAB))
     c = classify_turns(df.select("conv_id", "turn_idx", "role", "text"))
     return c.select(
         "conv_id",
         F.col("turn_idx").cast("int").alias("turn_idx"),
         "role",
         F.col("text").alias("clean_text"),
-        span_udf(vocab)(F.col("text")).alias("char_spans"),
+        spans(F.col("text")).alias("char_spans"),
         "block_class",
         "answer",
         "status",
-        token_count_udf()(F.col("text")).alias("n_tokens"),
+        ntok(F.col("text")).alias("n_tokens"),
     )
+
+
+@functools.lru_cache(maxsize=8)
+def _extract_udfs(sc, vocab: tuple):
+    """The span and token UDFs of :func:`extract_turns`, built once per
+    (SparkContext, vocab): a UDF pickles its function on first use, and
+    every later plan reuses that pickle."""
+    return span_udf(vocab), token_count_udf()
 
 
 # ---------------------------------------------------------------------------
@@ -231,54 +241,91 @@ def classify_turns(df: DataFrame) -> DataFrame:
     status = F.when(
         is_assistant & (block_class == "other") & answer.isNull(), F.lit("fallback")
     ).otherwise(F.lit("ok"))
-    return (
-        df.withColumn("block_class", block_class)
-        .withColumn("answer", answer)
-        .withColumn("status", status)
+    return df.select(
+        "*", block_class.alias("block_class"), answer.alias("answer"), status.alias("status")
     )
+
+
+def _has_border(key: str) -> bool:
+    """True when a proper prefix of ``key`` is also its suffix, so two
+    occurrences can overlap (``aa`` twice in ``aaa``, ``aba`` in
+    ``ababa``).  A key without one never overlaps itself, and its
+    occurrences are exactly the separators of a left-to-right split."""
+    return any(key[:n] == key[-n:] for n in range(1, len(key)))
+
+
+def _re2_literal(key: str) -> str:
+    """An RE2 pattern that matches exactly the text ``key``: ASCII
+    letters and digits stand for themselves, every other code point is
+    written ``\\x{hex}``, so no character of the key (``\\``, ``\\E``,
+    ``|``, ``.``) can act as regex syntax."""
+    return "".join(c if c.isascii() and c.isalnum() else f"\\x{{{ord(c):x}}}" for c in key)
 
 
 def span_udf(vocab: Sequence[str]):
     """Arrow UDF: all vocab-key char spans per text (X6), in vocab order
     then occurrence order; a null text has no spans.
 
-    One ``match_substring`` per key, OR-ed, pre-filters the rows in
-    Arrow's C++ kernels (literal matches, so exactly Python's
-    ``k in t``); only hit rows pay the per-key :func:`find_spans`
-    Python, since vocab keys are rare.  The ``list<struct>`` result is
-    built from flat key/start/end arrays and int32 offsets, with no
-    per-span Python object and no pandas.
+    Equal row for row to the per-key :func:`find_spans` loop, with no
+    per-row Python for keys that cannot overlap themselves:
+
+    - one RE2 alternation of the escaped keys (``match_substring_regex``)
+      picks the rows holding any key;
+    - a key with no proper border (checked here, once) is located by
+      ``split_pattern`` over those rows: the j-th occurrence starts at
+      the summed ``utf8_length`` of the pieces before it plus
+      ``j * len(key)`` (code points, as Python's ``str.find`` counts);
+    - a self-overlapping key (``aa``) runs :func:`find_spans` on the
+      rows that contain it;
+    - spans are ordered by (row, vocab index, start) with ``np.lexsort``
+      and the ``list<struct>`` result is built from flat key/start/end
+      arrays and int32 offsets.  The empty key has no spans.
     """
     vocab = list(vocab)
+    keys = [(v, k) for v, k in enumerate(vocab) if k]
+    split_keys = [(v, k) for v, k in keys if not _has_border(k)]
+    scan_keys = [(v, k) for v, k in keys if _has_border(k)]
+    prefilter = "|".join(dict.fromkeys(_re2_literal(k) for _, k in keys))
+    key_names = pa.array(vocab, pa.string())
+    key_lens = np.array([len(k) for k in vocab], dtype=np.int64)
 
     @F.arrow_udf(SPAN_TYPE)
     def _spans(texts: pa.Array) -> pa.Array:
-        import numpy as np
-
-        hit = pa.array(np.zeros(len(texts), dtype=bool))
-        for k in vocab:
-            hit = pc.or_(hit, pc.match_substring(texts, k))
-        hit = hit.fill_null(False)
-        keys: list = []
-        starts: list = []
-        ends: list = []
-        counts = np.zeros(len(texts) + 1, dtype=np.int32)
-        rows = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
-        for i, t in zip(rows, texts.filter(hit).to_pylist()):
-            n0 = len(keys)
-            for k in vocab:
-                if k in t:
-                    for s, e in find_spans(t, k):
-                        keys.append(k)
-                        starts.append(s)
-                        ends.append(e)
-            counts[i + 1] = len(keys) - n0
+        found = [np.zeros((3, 0), np.int64)]  # (row, vocab index, start) columns
+        if prefilter:
+            hit = pc.match_substring_regex(texts, prefilter).fill_null(False)
+            hit_rows = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
+            hits = texts.filter(hit)
+            for v, k in split_keys:
+                pieces = pc.split_pattern(hits, k)
+                offs = pieces.offsets.to_numpy().astype(np.int64)
+                width = pc.utf8_length(pieces.flatten()).to_numpy().astype(np.int64) + len(k)
+                row = pc.list_parent_indices(pieces).to_numpy()
+                # the occurrence after piece p of row r starts at
+                # sum(width[offs[r]..p]) - len(k); a row's last piece has none
+                run = np.cumsum(width)
+                start = run - (run - width)[offs[:-1]][row] - len(k)
+                occ = np.ones(len(width), dtype=bool)
+                occ[offs[1:] - 1] = False
+                found.append(np.stack([hit_rows[row[occ]], np.full(int(occ.sum()), v), start[occ]]))
+            for v, k in scan_keys:
+                has = pc.match_substring(hits, k)
+                pairs = [(r, v, s)
+                         for r, t in zip(hit_rows[has.to_numpy(zero_copy_only=False)],
+                                         hits.filter(has).to_pylist())
+                         for s, _ in find_spans(t, k)]
+                found.append(np.array(pairs, np.int64).reshape(-1, 3).T)
+        rows, vidx, starts = np.concatenate(found, axis=1)
+        order = np.lexsort((starts, vidx, rows))
+        vidx, starts = vidx[order], starts[order]
         spans = pa.StructArray.from_arrays(
-            [pa.array(keys, pa.string()), pa.array(starts, pa.int32()),
-             pa.array(ends, pa.int32())],
+            [key_names.take(pa.array(vidx)), pa.array(starts, pa.int32()),
+             pa.array(starts + key_lens[vidx], pa.int32())],
             names=["key", "start", "end"],
         )
-        return pa.ListArray.from_arrays(pa.array(np.cumsum(counts, dtype=np.int32)), spans)
+        offsets = np.zeros(len(texts) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rows, minlength=len(texts)), out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets), spans)
 
     return _spans
 

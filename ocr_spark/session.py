@@ -10,8 +10,11 @@ cluster-size evidence).
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -51,12 +54,23 @@ def get_spark(
         .config("spark.local.dir",
                 "/dev/shm/ocr_spark_local" if os.path.isdir("/dev/shm") else "/tmp")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE's parallelism-first coalescing targets defaultParallelism
-        # partitions; at exactly 1 partition per core a 38-on-32 style
-        # remainder leaves most cores idle for a whole straggler wave
-        # (measured: 24% of the extraction stage).  4 waves of smaller
-        # tasks pack within ~3% of ideal, so target 4x cores.
+        # defaultParallelism sets the slice count of spark.range and
+        # parallelized lists (so the synthetic inputs' file layout) and
+        # the partition target of AQE's parallelism-first coalescing: at
+        # exactly 1 partition per core a 38-on-32 style remainder leaves
+        # most cores idle for a whole straggler wave (measured: 24% of
+        # a shuffled stage), while 4 waves of smaller tasks pack within
+        # ~3% of ideal, so target 4x cores.
         .config("spark.default.parallelism", str(4 * cores))
+        # The file-scan split floor would otherwise also be
+        # defaultParallelism: maxSplitBytes = max(openCost 4 MB,
+        # totalBytes / 4x cores), so small-file input gets one ~4 MB
+        # split per file (16 tasks for 16 files of ~82 KB on 4 cores),
+        # and each task of a zero-shuffle scan -> Python UDF -> sink
+        # stage costs a fixed ~75 ms of host CPU (4-core VM).  A floor of one
+        # split per core packs such input into one task per core; the
+        # 128 MB split cap still bounds the tasks of large input.
+        .config("spark.sql.files.minPartitionNum", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -96,3 +110,17 @@ def get_spark(
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver-provided parquet table (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def one_row(spark: SparkSession, values: Sequence, ddl: str) -> DataFrame:
+    """``values`` as a one-row, one-partition DataFrame of schema ``ddl``.
+
+    ``createDataFrame([row])`` slices its list into defaultParallelism
+    partitions, and writing it runs every (mostly empty) slice, seconds
+    per one-row write even after ``coalesce(1)``; a one-partition range
+    projected to typed literals is one tiny task.
+    """
+    fields = StructType.fromDDL(ddl).fields
+    return spark.range(1, numPartitions=1).select(
+        [F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, fields, strict=True)]
+    )

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ocr_spark.pipeline import extract_turns
+from ocr_spark.session import one_row
 
 #: Canonical transcript schema (BASELINE.json input_hint); streaming
 #: sources must declare it explicitly (no inference on streams).
@@ -113,12 +114,13 @@ def run_stream(
             os.path.join(data_dir, f"batch_id={int(batch_id)}")
         )
         m = obs.get
-        spark.createDataFrame(
-            [(m["n_turns"] or 0, m["n_ok"] or 0,
-              m["n_fallback"] or 0, round(time.time() - t0, 3), time.time())],
+        one_row(
+            spark,
+            (m["n_turns"] or 0, m["n_ok"] or 0,
+             m["n_fallback"] or 0, round(time.time() - t0, 3), time.time()),
             "n_turns long, n_ok long, n_fallback long, "
             "wall_sec double, committed_at double",
-        ).coalesce(1).write.mode("overwrite").parquet(
+        ).write.mode("overwrite").parquet(
             os.path.join(lineage_dir, f"batch_id={int(batch_id)}")
         )
 

@@ -258,13 +258,18 @@ def test_giant_conversation_reroute(spark):
 # ---------------------------------------------------------------------------
 
 #: overlapping / adjacent keys, multi-byte (é, 中) and astral (😀, 𝔸)
-#: neighbours, and key fragments that must not count as hits
+#: neighbours, key fragments that must not count as hits, regex
+#: metacharacters (the pre-filter is one regex over escaped keys), and
+#: self-overlapping keys (``aba``, ``kkk``: found per row, not by split)
 _FUZZ_PIECES = ["City 50337", "City 5033", "City ", "couhpa", "aa", "a", "é", "中",
-                "😀", "𝔸", " ", "\n", "<end_of_turn>", "North", "x"]
+                "😀", "𝔸", " ", "\n", "<end_of_turn>", "North", "x",
+                ".", "*", "|", "(", "\\", "\\E", "\\Q", "aba", "b", "kkk", "k"]
 _fuzz_text = st.lists(st.sampled_from(_FUZZ_PIECES), max_size=12).map("".join) | st.text(
     max_size=40)
 _fuzz_vocab = st.lists(
-    st.sampled_from(DEFAULT_VOCAB) | st.sampled_from(["aa", "a", "é中", "😀a", "City 5033"]),
+    st.sampled_from(DEFAULT_VOCAB) | st.sampled_from(
+        ["aa", "a", "é中", "😀a", "City 5033", ".", ".*", "a|b", "(", "\\", "\\E", "\\Qa\\E",
+         "aba", "kkk", ""]),
     min_size=1, max_size=8, unique=True,
 )
 

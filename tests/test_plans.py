@@ -7,6 +7,7 @@ broadcast, or an extra shuffle long before any timing would.
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import functions as F
 
@@ -73,6 +74,20 @@ def test_flagship_guard_resolves_to_cheapest_plan(spark):
         assert sc.statusTracker().getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_flagship_runs_one_scan_task_per_core_on_small_files(spark, tmp_path):
+    """16 small input files pack into at most one scan task per core:
+    the zero-shuffle flagship is one stage, so its task count is the
+    scan's split count, and each task costs fixed Python-worker time."""
+    from ocr_spark.pipeline import extract_conversations
+    from ocr_spark.synth import transcripts
+
+    d = str(tmp_path / "turns")
+    transcripts(spark, 400, seed=42).repartition(16).write.parquet(d)
+    assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 16
+    # the session fixture runs local[8]
+    assert extract_conversations(spark.read.parquet(d)).rdd.getNumPartitions() <= 8
 
 
 def test_batch_packing_prefix_sum_is_bucketed(spark):
