@@ -63,6 +63,11 @@ class SnapshotWriter:
     retry (a killed in-flight write followed by a re-commit of the same
     bucket must not duplicate rows) — that property, not atomicity of
     the write itself, is what the manifest protocol relies on.
+
+    ``write_bucket_data`` must also execute ``df`` exactly once: the
+    bucket's lineage counters are observed on that execution
+    (:func:`ocr_spark.lineage.observe_lineage`), and a writer that never
+    runs ``df`` leaves ``Observation.get`` blocked.
     """
 
     def write_bucket_data(self, df: DataFrame, bucket: int) -> None:

@@ -23,6 +23,9 @@ Iceberg writer would give us:
 - each bucket is extracted and written as one atomic commit:
   data parquet -> lineage row -> manifest update via atomic rename
   (the parquet+manifest pair plays the role of an Iceberg snapshot);
+  the lineage counters are observed on the data write itself
+  (:func:`observe_lineage`), so a commit runs no job beyond its two
+  writes and the staged bucket's footer read;
 - a restart reads the manifest and skips committed buckets — the
   anti-join-against-lineage resume of SURVEY.md §2.7.
 
@@ -41,7 +44,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
@@ -76,12 +79,37 @@ def _write_manifest(output_dir: str, manifest: dict) -> None:
     os.replace(tmp, p)
 
 
+def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with the lineage counters observed on the action that runs it.
+
+    The counters come from that same execution: no cache and no second
+    job.  ``Observation.get`` blocks until the action has run.
+    ``observe`` rejects DISTINCT aggregates, so conversations are
+    counted by their first turn (every producer numbers turns from 0,
+    see :func:`ocr_spark.pipeline.conversations`).
+    """
+    obs = Observation()
+    turn, status = F.col("turn_idx"), F.col("status")
+    return df.observe(
+        obs,
+        F.count_if(turn == 0).alias("n_convs"),
+        F.count(F.lit(1)).alias("n_turns"),
+        F.count_if(status == "ok").alias("n_ok"),
+        F.count_if(status == "fallback").alias("n_fallback"),
+        F.count_if(turn == MAX_RENDER_TURNS).alias("n_rerouted"),
+    ), obs
+
+
 @dataclass
 class BucketStats:
-    """One bucket's lineage row.  ``n_rerouted`` keeps its name for
-    existing lineage tables: it counts the bucket's conversations over
-    ``MAX_RENDER_TURNS`` turns.  Extraction is per-turn, so these need
-    no special handling; the count reports the long-conversation skew."""
+    """One bucket's lineage row, observed on its data write.
+
+    ``n_convs`` counts rows with ``turn_idx == 0``.  ``n_rerouted``
+    keeps its name for existing lineage tables: it counts rows with
+    ``turn_idx == MAX_RENDER_TURNS``, i.e. the bucket's conversations
+    over ``MAX_RENDER_TURNS`` turns.  Extraction is per-turn, so these
+    need no special handling; the count reports the long-conversation
+    skew."""
 
     bucket: int
     n_convs: int
@@ -167,33 +195,9 @@ class CheckpointedExtraction:
     def _commit_bucket(self, b: int) -> BucketStats:
         t0 = time.time()
         part = self.spark.read.parquet(os.path.join(self.staged_dir, f"bucket={b}"))
-        out = extract_conversations(part).persist()
+        out, obs = observe_lineage(extract_conversations(part))
         self.writer.write_bucket_data(out, b)
-        # one counter job: per-conversation counts, then one global row
-        agg = (
-            out.groupBy("conv_id").agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
-                F.sum((F.col("status") == "fallback").cast("long")).alias("fallback"),
-            ).agg(
-                F.count("conv_id").alias("n_convs"),
-                F.sum("n").alias("n_turns"),
-                F.sum("ok").alias("n_ok"),
-                F.sum("fallback").alias("n_fallback"),
-                F.sum((F.col("n") > MAX_RENDER_TURNS).cast("long")).alias("n_rerouted"),
-            ).collect()[0]
-        )
-        out.unpersist()
-        wall = time.time() - t0
-        st = BucketStats(
-            bucket=b,
-            n_convs=agg["n_convs"] or 0,
-            n_turns=agg["n_turns"] or 0,
-            n_ok=agg["n_ok"] or 0,
-            n_fallback=agg["n_fallback"] or 0,
-            n_rerouted=agg["n_rerouted"] or 0,
-            wall_sec=round(wall, 3),
-        )
+        st = BucketStats(bucket=b, **obs.get, wall_sec=round(time.time() - t0, 3))
 
         # lineage row first, then manifest: a crash between the two
         # leaves an uncommitted bucket with a dangling lineage row.  The

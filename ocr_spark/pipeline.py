@@ -31,7 +31,6 @@ import functools
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -44,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.kernels import find_spans, get_fn_names
+from ocr_spark.kernels import find_spans
 from ocr_spark.synth import CITY_IDS, FN_NAMES
 
 #: Default vocabulary for span marking: the 5 city codenames
@@ -328,16 +327,6 @@ def span_udf(vocab: Sequence[str]):
         return pa.ListArray.from_arrays(pa.array(offsets), spans)
 
     return _spans
-
-
-def fn_names_udf():
-    """Vectorized pandas UDF for the import parser (X1, utils.py:53-61)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _fns(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: get_fn_names(t) if t is not None else [])
-
-    return _fns
 
 
 def token_count_udf():

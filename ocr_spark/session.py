@@ -76,9 +76,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Parallelism-first AQE coalescing floors at minPartitionSize;
         # the 1m default collapses small compressed shuffles to a handful
-        # of tasks, strangling the Python-UDF (CPU-bound) stage that
-        # follows the conv_id shuffle.  64k keeps reduce-side parallelism
-        # ~= cores at bench scale and is a no-op at 100 TB where
+        # of tasks.  The flagship extraction does not shuffle; the
+        # catalog queries, dedup rounds and bucket staging do, and 64k
+        # keeps their reduce side ~= cores wide at test scale (kept, not
+        # measured on them).  It is a no-op at 100 TB, where
         # totalBytes/parallelism dominates the floor.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Pin the session timezone: events.ts is TIMESTAMP_NTZ and the
@@ -90,12 +91,11 @@ def get_spark(
         # UTC makes the cast a fixed-offset no-op everywhere.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size bounds pandas-UDF memory per task.  Swept at
-        # 4k/6k/10k/20k/40k on the 16.5M-turn render path (round 3,
-        # interleaved passes): 4k is ~10% faster than 10k AND far less
-        # run-to-run variable ([8.46,8.48,8.62] vs [9.47,12.14,9.66] s)
-        # — smaller batches keep the kernel's per-batch scratch arrays
-        # warm instead of repeatedly first-touching fresh pages.
+        # Arrow batch size bounds Arrow-UDF memory per task.  It is not a
+        # speed lever on the per-turn flagship: over 54,280 synth texts
+        # span_udf took 27.3 ms in 4,000-row batches and 24.0 ms in
+        # 10,000-row ones, token_count_udf 18.1 and 18.4 ms (4-core VM),
+        # so 4k stays for its smaller per-batch memory.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

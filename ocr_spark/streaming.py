@@ -31,7 +31,8 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -41,6 +42,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ocr_spark.lineage import observe_lineage
 from ocr_spark.pipeline import extract_turns
 from ocr_spark.session import one_row
 
@@ -104,20 +106,15 @@ def run_stream(
         # batch_id back as a discovered partition column.  The lineage
         # counters are observed on the data write: same job, no cache.
         t0 = time.time()
-        obs = Observation()
-        batch_df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
-            F.sum((F.col("status") == "fallback").cast("long")).alias("n_fallback"),
-        ).write.mode("overwrite").parquet(
+        observed, obs = observe_lineage(batch_df)
+        observed.write.mode("overwrite").parquet(
             os.path.join(data_dir, f"batch_id={int(batch_id)}")
         )
         m = obs.get
         one_row(
             spark,
-            (m["n_turns"] or 0, m["n_ok"] or 0,
-             m["n_fallback"] or 0, round(time.time() - t0, 3), time.time()),
+            (m["n_turns"], m["n_ok"], m["n_fallback"],
+             round(time.time() - t0, 3), time.time()),
             "n_turns long, n_ok long, n_fallback long, "
             "wall_sec double, committed_at double",
         ).write.mode("overwrite").parquet(
@@ -257,6 +254,31 @@ def stream_clean(stream: DataFrame, watermark: str | None = None) -> DataFrame:
     return out.dropDuplicates(["fp"])
 
 
+def _drain_to_parquet(spark: SparkSession, stream: DataFrame, output_dir: str) -> int:
+    """Append ``stream`` to ``output_dir/data`` in one availableNow drain,
+    checkpointed under ``output_dir/_checkpoint``; returns the rows
+    this drain emitted (the sink's row count after minus before)."""
+    data_dir = os.path.join(output_dir, "data")
+
+    def sink_rows() -> int:
+        try:
+            return spark.read.parquet(data_dir).count()
+        except AnalysisException:
+            return 0  # no micro-batch yet: no sink dir, or no file to infer from
+
+    before = sink_rows()
+    (
+        stream.writeStream.format("parquet")
+        .option("path", data_dir)
+        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return sink_rows() - before
+
+
 def run_clean_stream(
     spark: SparkSession,
     input_dir: str,
@@ -268,30 +290,8 @@ def run_clean_stream(
     """Drain a turn drop directory through the streaming clean pipeline
     into ``output_dir/data`` (same layout/contract as
     :func:`run_dedup_stream`); returns rows emitted by THIS drain."""
-    before = 0
-    data_dir = os.path.join(output_dir, "data")
-    try:
-        before = spark.read.parquet(data_dir).count()
-    except Exception:
-        pass  # first drain: no output yet
-    cleaned = stream_clean(
-        read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files),
-        watermark,
-    )
-    q = (
-        cleaned.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        after = spark.read.parquet(data_dir).count()
-    except Exception:
-        return 0  # empty input: zero micro-batches, sink dir never created
-    return after - before
+    stream = read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files)
+    return _drain_to_parquet(spark, stream_clean(stream, watermark), output_dir)
 
 
 def run_dedup_stream(
@@ -308,30 +308,8 @@ def run_dedup_stream(
     drains keep suppressing previously-seen content.  Returns the
     number of rows emitted by THIS drain (not the cumulative total).
     """
-    before = 0
-    data_dir = os.path.join(output_dir, "data")
-    try:
-        before = spark.read.parquet(data_dir).count()
-    except Exception:
-        pass  # first drain: no output yet
-    deduped = stream_dedup_exact(
-        read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files),
-        watermark,
-    )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        after = spark.read.parquet(data_dir).count()
-    except Exception:
-        return 0  # empty input: zero micro-batches, sink dir never created
-    return after - before
+    stream = read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files)
+    return _drain_to_parquet(spark, stream_dedup_exact(stream, watermark), output_dir)
 
 
 def stream_tool_enrich(

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.lineage import CheckpointedExtraction, read_manifest
+from ocr_spark.lineage import CheckpointedExtraction, bucket_of, read_manifest
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
 from ocr_spark.synth import transcripts
 
@@ -75,8 +75,9 @@ def test_resumed_output_equals_single_run(spark, ckpt):
 
 
 def test_lineage_counters_conserve_turns(spark, tmp_path):
-    """Counters equal the data, with one conversation over the render
-    cap: it is counted in ``n_rerouted`` and its turns are conserved."""
+    """Each bucket's counters equal its committed rows, with one
+    conversation over the render cap: it is counted in ``n_rerouted``
+    of its bucket only, and its turns are conserved."""
     n = MAX_RENDER_TURNS + 1
     i = F.col("id")
     giant = spark.range(n).select(
@@ -89,18 +90,65 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
     ckpt = CheckpointedExtraction(spark, str(tmp_path / "run"), n_buckets=N_BUCKETS)
     ckpt.stage_by_bucket(t)
     ckpt.run()
+    cols = ["n_convs", "n_turns", "n_ok", "n_fallback", "n_rerouted"]
     lin = ckpt.read_lineage()
-    totals = lin.agg(
-        F.sum("n_turns").alias("t"), F.sum("n_ok").alias("ok"),
-        F.sum("n_fallback").alias("fb"), F.sum("n_convs").alias("c"),
-        F.sum("n_rerouted").alias("r"),
-    ).collect()[0]
-    assert totals["t"] == t.count()
-    assert totals["ok"] + totals["fb"] == totals["t"]
-    assert totals["c"] == N_CONVS + 1
-    assert totals["r"] == 1
-    assert lin.count() == N_BUCKETS
+    got = {r["bucket"]: tuple(r[c] for c in cols) for r in lin.collect()}
+    per_conv = (
+        ckpt.read_output()
+        .groupBy("conv_id")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
+            F.sum((F.col("status") == "fallback").cast("long")).alias("fb"),
+        )
+        .withColumn("bucket", bucket_of(F.col("conv_id"), N_BUCKETS))
+    )
+    want = {
+        r["bucket"]: tuple(r[c] for c in cols)
+        for r in per_conv.groupBy("bucket").agg(
+            F.countDistinct("conv_id").alias("n_convs"),
+            F.sum("n").alias("n_turns"),
+            F.sum("ok").alias("n_ok"),
+            F.sum("fb").alias("n_fallback"),
+            F.sum((F.col("n") > MAX_RENDER_TURNS).cast("long")).alias("n_rerouted"),
+        ).collect()
+    }
+    assert got == want
+    assert len(got) == N_BUCKETS
+    assert sum(v[1] for v in got.values()) == t.count()
+    assert all(ok + fb == turns for _, turns, ok, fb, _ in got.values())
+    assert sum(v[0] for v in got.values()) == N_CONVS + 1
+    giant_bucket = per_conv.filter(F.col("conv_id") == "convgiant0").first()["bucket"]
+    assert {b: v[4] for b, v in got.items()} == {
+        b: int(b == giant_bucket) for b in range(N_BUCKETS)
+    }
     assert all(r["wall_sec"] >= 0 for r in lin.collect())
+
+
+def _jobs(spark, group, action):
+    """Run ``action()`` under job group ``group``; (its result, its job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_bucket_is_two_jobs_without_persist(spark, ckpt):
+    """A bucket commit runs the data write and the lineage row write on
+    top of reading its staged bucket (the parquet footer read is one
+    job), and nothing else: its counters are observed on the data
+    write, with no cached output and no counter job."""
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    bucket_dir = os.path.join(ckpt.staged_dir, "bucket=0")
+    _, read_jobs = _jobs(spark, "lineage-read", lambda: spark.read.parquet(bucket_dir))
+    st, commit_jobs = _jobs(spark, "lineage-commit", lambda: ckpt._commit_bucket(0))
+    assert commit_jobs - read_jobs == 2
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted_before
+    assert st.n_turns == ckpt.read_output().count() > 0
 
 
 def test_idempotent_rerun_is_noop(spark, ckpt):
