@@ -84,9 +84,10 @@ def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
 
     The counters come from that same execution: no cache and no second
     job.  ``Observation.get`` blocks until the action has run.
-    ``observe`` rejects DISTINCT aggregates, so conversations are
-    counted by their first turn (every producer numbers turns from 0,
-    see :func:`ocr_spark.pipeline.conversations`).
+    ``observe`` rejects DISTINCT aggregates, so ``n_convs`` and
+    ``n_rerouted`` are counted on single turn indexes (see
+    :class:`BucketStats`); they are exact only when each conversation's
+    ``turn_idx`` runs 0, 1, ..., n-1 with no gaps.
     """
     obs = Observation()
     turn, status = F.col("turn_idx"), F.col("status")
@@ -106,10 +107,15 @@ class BucketStats:
 
     ``n_convs`` counts rows with ``turn_idx == 0``.  ``n_rerouted``
     keeps its name for existing lineage tables: it counts rows with
-    ``turn_idx == MAX_RENDER_TURNS``, i.e. the bucket's conversations
-    over ``MAX_RENDER_TURNS`` turns.  Extraction is per-turn, so these
-    need no special handling; the count reports the long-conversation
-    skew."""
+    ``turn_idx == MAX_RENDER_TURNS``.  When each conversation's
+    ``turn_idx`` runs 0..n-1 with no gaps, these are the bucket's
+    conversations and its conversations over ``MAX_RENDER_TURNS``
+    turns.  Input that drops turns (e.g. the outputs of
+    ``streaming.run_dedup_stream`` / ``run_clean_stream``) breaks that:
+    a conversation without turn 0 is missed by ``n_convs``, and
+    ``n_rerouted`` follows the turn index, not the row count.
+    Extraction is per-turn, so long conversations need no special
+    handling; ``n_rerouted`` reports the long-conversation skew."""
 
     bucket: int
     n_convs: int
@@ -129,6 +135,11 @@ class CheckpointedExtraction:
         staged/bucket=<i>/...     input staged by bucket (one-time)
         data/bucket=<i>/...       extracted output per committed bucket
         lineage/...               parquet metrics table, appended per commit
+
+    Input contract: ``(conv_id, turn_idx, role, text)`` rows with each
+    conversation's ``turn_idx`` numbered 0..n-1 with no gaps.  The
+    extraction itself takes any numbering; the lineage ``n_convs`` and
+    ``n_rerouted`` counters rely on it (see :class:`BucketStats`).
     """
 
     def __init__(
@@ -162,7 +173,9 @@ class CheckpointedExtraction:
 
         Emulates Iceberg hidden partitioning: per-bucket jobs then scan
         only ``staged/bucket=<i>`` (directory partition pruning) rather
-        than re-reading the whole table per batch.
+        than re-reading the whole table per batch.  ``transcripts``
+        follows the class's input contract (turns 0..n-1, no gaps),
+        unchecked.
         """
         (
             transcripts.withColumn("bucket", bucket_of(F.col("conv_id"), self.n_buckets))

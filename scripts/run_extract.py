@@ -26,7 +26,11 @@ import time
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
+    ap.add_argument("--input", required=True,
+                    help="transcript parquet (conv_id, turn_idx, role, text); "
+                         "each conversation's turn_idx must run 0..n-1 with "
+                         "no gaps for the lineage n_convs/n_rerouted counters "
+                         "to be exact (deduplicated turn tables break this)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--resume", action="store_true",

@@ -54,12 +54,12 @@ def test_kill_restart_no_reprocessing(spark, ckpt):
 
     m2 = read_manifest(ckpt.output_dir)
     assert m2["committed"] == list(range(N_BUCKETS))
-    lineage2 = {
-        r["bucket"]: r["committed_at"] for r in resumed.read_lineage().collect()
-    }
+    rows2 = resumed.read_lineage().collect()
+    lineage2 = {r["bucket"]: r["committed_at"] for r in rows2}
     # committed buckets were not reprocessed: their lineage rows survive
-    # byte-identically (same commit timestamp), and exactly one row per bucket
-    assert len(lineage2) == N_BUCKETS
+    # byte-identically (same commit timestamp), and exactly one row per
+    # bucket (the dict alone would hide a second row for one bucket)
+    assert len(rows2) == len(lineage2) == N_BUCKETS
     for b, ts in lineage1.items():
         assert lineage2[b] == ts
 
@@ -91,8 +91,8 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
     ckpt.stage_by_bucket(t)
     ckpt.run()
     cols = ["n_convs", "n_turns", "n_ok", "n_fallback", "n_rerouted"]
-    lin = ckpt.read_lineage()
-    got = {r["bucket"]: tuple(r[c] for c in cols) for r in lin.collect()}
+    rows = ckpt.read_lineage().collect()
+    got = {r["bucket"]: tuple(r[c] for c in cols) for r in rows}
     per_conv = (
         ckpt.read_output()
         .groupBy("conv_id")
@@ -114,6 +114,7 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
         ).collect()
     }
     assert got == want
+    assert len(rows) == N_BUCKETS  # one lineage row per bucket, no duplicate
     assert sum(v[1] for v in got.values()) == t.count()
     assert all(ok + fb == turns for _, turns, ok, fb, _ in got.values())
     assert sum(v[0] for v in got.values()) == N_CONVS + 1
@@ -121,7 +122,7 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
     assert {b: v[4] for b, v in got.items()} == {
         b: int(b == giant_bucket) for b in range(N_BUCKETS)
     }
-    assert all(r["wall_sec"] >= 0 for r in lin.collect())
+    assert all(r["wall_sec"] >= 0 for r in rows)
 
 
 def _jobs(spark, group, action):
