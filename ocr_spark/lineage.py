@@ -25,7 +25,8 @@ Iceberg writer would give us:
   (the parquet+manifest pair plays the role of an Iceberg snapshot);
   the lineage counters are observed on the data write itself
   (:func:`observe_lineage`), so a commit runs no job beyond its two
-  writes and the staged bucket's footer read;
+  writes: the staged table is read once per run (one schema-inference
+  job) and each commit filters it to its bucket;
 - a restart reads the manifest and skips committed buckets — the
   anti-join-against-lineage resume of SURVEY.md §2.7.
 
@@ -48,7 +49,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
-from ocr_spark.session import one_row
 
 MANIFEST = "_manifest.json"
 
@@ -99,6 +99,22 @@ def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
         F.count_if(status == "fallback").alias("n_fallback"),
         F.count_if(turn == MAX_RENDER_TURNS).alias("n_rerouted"),
     ), obs
+
+
+def lineage_row(spark: SparkSession, counters: dict, wall_sec: float) -> DataFrame:
+    """One lineage row: the observed ``counters`` (longs, in their
+    order), then ``wall_sec`` and ``committed_at`` (epoch seconds, now).
+
+    The row is a one-partition range projected to literals:
+    ``createDataFrame([row])`` slices its list into defaultParallelism
+    partitions, and writing it runs every (mostly empty) slice, seconds
+    per one-row write even after ``coalesce(1)``.
+    """
+    return spark.range(1, numPartitions=1).select(
+        *(F.lit(v).cast("long").alias(k) for k, v in counters.items()),
+        F.lit(float(wall_sec)).alias("wall_sec"),
+        F.lit(time.time()).alias("committed_at"),
+    )
 
 
 @dataclass
@@ -157,6 +173,7 @@ class CheckpointedExtraction:
         # storage seam (ocr_spark.iceberg): parquet by default; pass an
         # IcebergSnapshotWriter when a real catalog + runtime jar exist
         self.writer = writer or ParquetSnapshotWriter(spark, output_dir)
+        self._staged: DataFrame | None = None
         os.makedirs(output_dir, exist_ok=True)
 
     # -- staging ---------------------------------------------------------
@@ -184,6 +201,15 @@ class CheckpointedExtraction:
             .partitionBy("bucket")
             .parquet(self.staged_dir)
         )
+        self._staged = None
+
+    def _staged_table(self) -> DataFrame:
+        """The staged table, read once per object: its schema inference
+        is one Spark job, and a ``bucket == b`` filter prunes the scan
+        to ``staged/bucket=<b>``."""
+        if self._staged is None:
+            self._staged = self.spark.read.parquet(self.staged_dir)
+        return self._staged
 
     # -- commit loop -----------------------------------------------------
     def pending_buckets(self) -> list[int]:
@@ -207,10 +233,11 @@ class CheckpointedExtraction:
 
     def _commit_bucket(self, b: int) -> BucketStats:
         t0 = time.time()
-        part = self.spark.read.parquet(os.path.join(self.staged_dir, f"bucket={b}"))
+        part = self._staged_table().filter(F.col("bucket") == b)
         out, obs = observe_lineage(extract_conversations(part))
         self.writer.write_bucket_data(out, b)
-        st = BucketStats(bucket=b, **obs.get, wall_sec=round(time.time() - t0, 3))
+        counters, wall_sec = obs.get, round(time.time() - t0, 3)
+        st = BucketStats(bucket=b, **counters, wall_sec=wall_sec)
 
         # lineage row first, then manifest: a crash between the two
         # leaves an uncommitted bucket with a dangling lineage row.  The
@@ -218,14 +245,7 @@ class CheckpointedExtraction:
         # directory with mode=overwrite (the Iceberg writer appends —
         # its snapshot log supplies the dedup there), so the retry
         # replaces the dangling row instead of double-counting.
-        lineage = one_row(
-            self.spark,
-            (st.n_convs, st.n_turns, st.n_ok, st.n_fallback,
-             st.n_rerouted, st.wall_sec, time.time()),
-            "n_convs long, n_turns long, n_ok long, n_fallback long, "
-            "n_rerouted long, wall_sec double, committed_at double",
-        )
-        self.writer.write_lineage_row(lineage, b)
+        self.writer.write_lineage_row(lineage_row(self.spark, counters, wall_sec), b)
 
         m = read_manifest(self.output_dir)
         m["n_buckets"] = self.n_buckets

@@ -30,6 +30,7 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 #: default compacted file size — parquet works best at 128M-1G; the
 #: default errs small so tests exercise multi-file output.
@@ -107,25 +108,51 @@ def compact_parquet_dir(
         }
 
     tmp = path.rstrip("/") + ".__compact_tmp"
-    bak = path.rstrip("/") + ".__compact_bak"
     shutil.rmtree(tmp, ignore_errors=True)
 
     df = spark.read.parquet(path)
     n_rows = df.count()
     df.repartition(int(n_out)).write.mode("overwrite").parquet(tmp)
 
-    # atomic-enough swap: both renames are metadata ops on one
-    # filesystem; a crash between them leaves <bak> present, which
-    # recover_compaction() resolves deterministically.
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    _swap_in(tmp, path)
 
     return {
         "path": path, "skipped": False, "rows": n_rows,
         "files_before": before_files, "files_after": _data_file_count(path),
         "bytes_before": before_bytes, "bytes_after": _data_bytes(path),
     }
+
+
+def _swap_in(new: str, live: str) -> None:
+    """Replace directory ``live`` with ``new``: rename ``live`` to
+    ``<live>.__compact_bak``, rename ``new`` to ``live``, delete the bak.
+
+    Both renames are metadata ops on one filesystem; a crash between
+    them leaves the bak and no live dir, which :func:`recover_compaction`
+    rolls back.  A missing ``new`` (a bucket emptied by deletes) removes
+    ``live``; a missing ``live`` (a new bucket) just renames ``new`` in.
+    """
+    bak = live.rstrip("/") + ".__compact_bak"
+    if os.path.isdir(live):
+        os.rename(live, bak)
+    if os.path.isdir(new):
+        os.rename(new, live)
+    shutil.rmtree(bak, ignore_errors=True)
+
+
+def _is_delete(delete_col: str):
+    """The tombstone flag, NULL read as false (an upsert)."""
+    return F.coalesce(F.col(delete_col), F.lit(False))
+
+
+def _change_stats(changes, delete_col: str) -> dict:
+    """Change, delete and upsert counts of one change batch (one job)."""
+    agg = changes.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(_is_delete(delete_col).cast("long")).alias("d"),
+    ).first()
+    n, d = agg["n"], agg["d"] or 0
+    return {"n_changes": n, "n_deletes": d, "n_upserts": n - d}
 
 
 def recover_compaction(path: str) -> str:
@@ -168,15 +195,12 @@ def merge_plan(target, changes, key: str, delete_col: str,
     the upsert side while its key still anti-joins the target row away
     — data loss disguised as a delete.
     """
-    from pyspark.sql import functions as F
-
     data_cols = target.columns
     ck = changes.select(key)
     if broadcast_changes:
         ck = F.broadcast(ck)
     kept = target.join(ck, on=key, how="left_anti")
-    is_delete = F.coalesce(F.col(delete_col), F.lit(False))
-    upserts = changes.filter(~is_delete).select(*data_cols)
+    upserts = changes.filter(~_is_delete(delete_col)).select(*data_cols)
     return kept.unionByName(upserts)
 
 
@@ -216,35 +240,20 @@ def merge_upsert(
     ``with_counts=False`` to skip them on tables where two extra scans
     matter.
     """
-    from pyspark.sql import functions as F
-
     recover_compaction(path)
     target = spark.read.parquet(path)
     merged = merge_plan(target, changes, key, delete_col, broadcast_changes)
 
-    is_delete = F.coalesce(F.col(delete_col), F.lit(False))
-    agg = changes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(is_delete.cast("long")).alias("d"),
-    ).first()
-    n_changes = agg["n"]
-    n_deletes = agg["d"] or 0
+    stats = _change_stats(changes, delete_col)
     rows_before = target.count() if with_counts else None
 
     tmp = path.rstrip("/") + ".__compact_tmp"
-    bak = path.rstrip("/") + ".__compact_bak"
     shutil.rmtree(tmp, ignore_errors=True)
     merged.write.mode("overwrite").parquet(tmp)
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    _swap_in(tmp, path)
 
     rows_after = spark.read.parquet(path).count() if with_counts else None
-    return {
-        "path": path, "rows_before": rows_before, "rows_after": rows_after,
-        "n_changes": n_changes, "n_deletes": n_deletes,
-        "n_upserts": n_changes - n_deletes,
-    }
+    return {"path": path, "rows_before": rows_before, "rows_after": rows_after, **stats}
 
 
 # ---------------------------------------------------------------------------
@@ -266,8 +275,6 @@ _BUCKET_MANIFEST = "_buckets.json"
 
 
 def _bucket_expr(key: str, n_buckets: int):
-    from pyspark.sql import functions as F
-
     return F.pmod(F.xxhash64(F.col(key).cast("string")),
                   F.lit(n_buckets)).cast("int")
 
@@ -339,8 +346,6 @@ def merge_upsert_cow(
     """
     import json as _json
 
-    from pyspark.sql import functions as F
-
     with open(os.path.join(path, _BUCKET_MANIFEST)) as f:
         meta = _json.load(f)
     key, n_buckets = meta["key"], int(meta["n_buckets"])
@@ -358,16 +363,10 @@ def merge_upsert_cow(
             _bucket_expr(key, n_buckets).alias("b")
         ).distinct().collect()
     )
-    agg = changes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.coalesce(F.col(delete_col), F.lit(False)).cast("long")
-              ).alias("d"),
-    ).first()
     stats = {
         "path": path, "n_buckets": n_buckets,
         "buckets_rewritten": changed,
-        "n_changes": agg["n"], "n_deletes": agg["d"] or 0,
-        "n_upserts": agg["n"] - (agg["d"] or 0),
+        **_change_stats(changes, delete_col),
     }
     if not changed:
         return stats
@@ -390,21 +389,10 @@ def merge_upsert_cow(
     merged.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets)) \
         .write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp)
 
-    # 4. per-bucket atomic swaps (two-rename protocol per bucket)
+    # 4. per-bucket atomic swaps (two-rename protocol per bucket);
+    # partitionBy writes no directory for a bucket emptied by deletes
     for b in changed:
-        live = os.path.join(path, f"{BUCKET_COL}={b}")
-        new = os.path.join(tmp, f"{BUCKET_COL}={b}")
-        bak = live + ".__compact_bak"
-        if not os.path.isdir(new):
-            # bucket emptied by deletes (or never materialized):
-            # partitionBy skips empty groups — drop the live dir
-            if os.path.isdir(live):
-                os.rename(live, bak)
-                shutil.rmtree(bak)
-            continue
-        if os.path.isdir(live):
-            os.rename(live, bak)
-        os.rename(new, live)
-        shutil.rmtree(bak, ignore_errors=True)
+        part = f"{BUCKET_COL}={b}"
+        _swap_in(os.path.join(tmp, part), os.path.join(path, part))
     shutil.rmtree(tmp, ignore_errors=True)
     return stats

@@ -10,11 +10,8 @@ cluster-size evidence).
 from __future__ import annotations
 
 import os
-from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import SparkSession
 
 
 def get_spark(
@@ -110,17 +107,3 @@ def get_spark(
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver-provided parquet table (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def one_row(spark: SparkSession, values: Sequence, ddl: str) -> DataFrame:
-    """``values`` as a one-row, one-partition DataFrame of schema ``ddl``.
-
-    ``createDataFrame([row])`` slices its list into defaultParallelism
-    partitions, and writing it runs every (mostly empty) slice, seconds
-    per one-row write even after ``coalesce(1)``; a one-partition range
-    projected to typed literals is one tiny task.
-    """
-    fields = StructType.fromDDL(ddl).fields
-    return spark.range(1, numPartitions=1).select(
-        [F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, fields, strict=True)]
-    )

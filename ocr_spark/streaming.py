@@ -8,17 +8,23 @@ is the engine's stream-ingest path for the same per-turn semantics:
   classify + span and token-count UDFs) on a file-source stream as a
   stateless transformation: no shuffle, no state store, and the rows
   it writes are ``EXTRACT_SCHEMA`` rows identical to the batch
-  extraction of the same turns.  It drains with
-  ``trigger(availableNow=True)`` + ``foreachBatch``: each micro-batch
-  writes extraction output AND a per-batch lineage row (turn count,
-  ok/fallback counters, wall-time) whose counters are observed on the
-  data write itself — the streaming twin of
-  lineage.CheckpointedExtraction.  foreachBatch itself is only
-  at-least-once, so both writes are batch_id-keyed overwrites
-  (idempotent): a crash between the data write and the checkpoint
-  commit replays the batch into the same ``batch_id=<id>`` directory,
-  and the end-to-end result stays exactly-once (file-source offsets
-  are tracked in the checkpoint WAL).
+  extraction of the same turns.
+- :func:`run_dedup_stream` and :func:`run_clean_stream` drain the
+  stateful exact-dedup and clean pipelines.
+
+All three drain through one ``trigger(availableNow=True)`` +
+``foreachBatch`` commit (:func:`_drain`): each micro-batch writes its
+rows AND a one-row lineage record (``lineage.lineage_row``) whose
+counters are observed on the data write itself, the streaming twin of
+lineage.CheckpointedExtraction.  ``run_stream`` observes the five
+``lineage.observe_lineage`` counters; dedup and clean observe their
+emitted row count (``n_turns``) and return its sum over the drain, so
+no drain re-reads its sink.  foreachBatch itself is only
+at-least-once, so both writes are batch_id-keyed overwrites
+(idempotent): a crash between the data write and the checkpoint
+commit replays the batch into the same ``batch_id=<id>`` directory,
+and the end-to-end result stays exactly-once (file-source offsets and
+dedup state are tracked in the checkpoint).
 
 Every extraction column depends only on its own turn (an assistant row
 implies its conversation has an assistant turn), so a conversation
@@ -31,9 +37,9 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -42,9 +48,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.lineage import observe_lineage
+from ocr_spark.lineage import lineage_row, observe_lineage
 from ocr_spark.pipeline import extract_turns
-from ocr_spark.session import one_row
 
 #: Canonical transcript schema (BASELINE.json input_hint); streaming
 #: sources must declare it explicitly (no inference on streams).
@@ -61,7 +66,7 @@ TRANSCRIPT_SCHEMA = StructType(
 
 
 def read_transcript_stream(
-    spark: SparkSession, input_dir: str, fmt: str = "json", max_files: int = 64
+    spark: SparkSession, input_dir: str, max_files: int = 64
 ) -> DataFrame:
     """File-source stream of transcript turns (JSONL drop directory).
 
@@ -69,31 +74,26 @@ def read_transcript_stream(
     directory doesn't produce one giant batch on catch-up.
     """
     return (
-        spark.readStream.format(fmt)
+        spark.readStream.format("json")
         .schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files)
         .load(input_dir)
     )
 
 
-def run_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    vocab=None,
-    await_termination: bool = True,
-):
-    """Drain all available input into ``output_dir`` with lineage.
+def _drain(
+    stream: DataFrame, output_dir: str, observe
+) -> tuple[StreamingQuery, dict[int, dict]]:
+    """Drain ``stream`` into ``output_dir`` in one availableNow query.
 
-    Layout: ``data/`` extraction rows, ``lineage/`` per-micro-batch
-    metrics, ``_checkpoint/`` Spark streaming WAL (the resume point).
-    Returns the query handle (already terminated if awaited).
+    Layout: ``data/batch_id=<id>/`` rows, ``lineage/batch_id=<id>/``
+    one row per micro-batch (the counters ``observe(df) -> (df,
+    Observation)`` gathers on the data write, then ``wall_sec`` and
+    ``committed_at``), ``_checkpoint/`` the Spark streaming WAL and
+    state (the resume point).  Returns the terminated query and the
+    counters of the micro-batches this drain committed, by batch id.
     """
-    data_dir = os.path.join(output_dir, "data")
-    lineage_dir = os.path.join(output_dir, "lineage")
-    ckpt_dir = os.path.join(output_dir, "_checkpoint")
-
-    extracted = extract_turns(read_transcript_stream(spark, input_dir), vocab)
+    committed: dict[int, dict] = {}
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a crash after the write but
@@ -103,33 +103,46 @@ def run_stream(
         # a replay overwrites its own output instead of duplicating it
         # (the replayed batch has identical rows: file-source offsets
         # come from the checkpoint WAL).  Readers of the parent dir get
-        # batch_id back as a discovered partition column.  The lineage
-        # counters are observed on the data write: same job, no cache.
+        # batch_id back as a discovered partition column.  The counters
+        # are observed on the data write: same job, no cache.
         t0 = time.time()
-        observed, obs = observe_lineage(batch_df)
-        observed.write.mode("overwrite").parquet(
-            os.path.join(data_dir, f"batch_id={int(batch_id)}")
-        )
-        m = obs.get
-        one_row(
-            spark,
-            (m["n_turns"], m["n_ok"], m["n_fallback"],
-             round(time.time() - t0, 3), time.time()),
-            "n_turns long, n_ok long, n_fallback long, "
-            "wall_sec double, committed_at double",
-        ).write.mode("overwrite").parquet(
-            os.path.join(lineage_dir, f"batch_id={int(batch_id)}")
-        )
+        part = f"batch_id={int(batch_id)}"
+        observed, obs = observe(batch_df)
+        observed.write.mode("overwrite").parquet(os.path.join(output_dir, "data", part))
+        counters = committed[int(batch_id)] = obs.get
+        row = lineage_row(batch_df.sparkSession, counters, round(time.time() - t0, 3))
+        row.write.mode("overwrite").parquet(os.path.join(output_dir, "lineage", part))
 
     q = (
-        extracted.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt_dir)
+        stream.writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
+    q.awaitTermination()
+    return q, committed
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n_turns")), obs
+
+
+def _drain_rows(stream: DataFrame, output_dir: str) -> int:
+    """:func:`_drain` counting rows; the rows this drain emitted."""
+    _, committed = _drain(stream, output_dir, _observe_rows)
+    return sum(c["n_turns"] for c in committed.values())
+
+
+def run_stream(spark: SparkSession, input_dir: str, output_dir: str, vocab=None) -> StreamingQuery:
+    """Drain all available input into ``output_dir`` with lineage.
+
+    Layout as :func:`_drain`; each lineage row carries the
+    ``lineage.observe_lineage`` counters, the columns of a bucket
+    commit's lineage row.  Returns the terminated query handle.
+    """
+    extracted = extract_turns(read_transcript_stream(spark, input_dir), vocab)
+    return _drain(extracted, output_dir, observe_lineage)[0]
 
 
 def stream_turn_rate(
@@ -146,18 +159,16 @@ def stream_turn_rate(
     inside the watermark still update their window (per-turn
     extraction is order-independent, so correctness only needs the
     window accounting, not global ordering)."""
-    from pyspark.sql import functions as SF
-
     return (
         stream.withWatermark("ts", watermark)
-        .groupBy(SF.window("ts", window_duration).alias("w"), SF.col("role"))
+        .groupBy(F.window("ts", window_duration).alias("w"), F.col("role"))
         .agg(
-            SF.count("*").alias("n_turns"),
-            SF.sum(SF.length("text")).alias("total_chars"),
+            F.count("*").alias("n_turns"),
+            F.sum(F.length("text")).alias("total_chars"),
         )
         .select(
-            SF.col("w.start").alias("window_start"),
-            SF.col("w.end").alias("window_end"),
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
             "role", "n_turns", "total_chars",
         )
     )
@@ -254,44 +265,18 @@ def stream_clean(stream: DataFrame, watermark: str | None = None) -> DataFrame:
     return out.dropDuplicates(["fp"])
 
 
-def _drain_to_parquet(spark: SparkSession, stream: DataFrame, output_dir: str) -> int:
-    """Append ``stream`` to ``output_dir/data`` in one availableNow drain,
-    checkpointed under ``output_dir/_checkpoint``; returns the rows
-    this drain emitted (the sink's row count after minus before)."""
-    data_dir = os.path.join(output_dir, "data")
-
-    def sink_rows() -> int:
-        try:
-            return spark.read.parquet(data_dir).count()
-        except AnalysisException:
-            return 0  # no micro-batch yet: no sink dir, or no file to infer from
-
-    before = sink_rows()
-    (
-        stream.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return sink_rows() - before
-
-
 def run_clean_stream(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     watermark: str | None = None,
     max_files: int = 1,
-    fmt: str = "json",
-):
+) -> int:
     """Drain a turn drop directory through the streaming clean pipeline
-    into ``output_dir/data`` (same layout/contract as
+    into ``output_dir`` (same layout/contract as
     :func:`run_dedup_stream`); returns rows emitted by THIS drain."""
-    stream = read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files)
-    return _drain_to_parquet(spark, stream_clean(stream, watermark), output_dir)
+    stream = read_transcript_stream(spark, input_dir, max_files=max_files)
+    return _drain_rows(stream_clean(stream, watermark), output_dir)
 
 
 def run_dedup_stream(
@@ -300,16 +285,17 @@ def run_dedup_stream(
     output_dir: str,
     watermark: str | None = None,
     max_files: int = 1,
-    fmt: str = "json",
-):
+) -> int:
     """Drain a turn drop directory through the streaming exact-dedup
-    into ``output_dir/data`` (append, one parquet dir per run), with
-    the state checkpoint under ``output_dir/_checkpoint`` so repeated
+    into ``output_dir`` (layout as :func:`_drain`: ``data/batch_id=<id>``
+    rows and an ``n_turns`` lineage row per micro-batch), with the
+    state checkpoint under ``output_dir/_checkpoint`` so repeated
     drains keep suppressing previously-seen content.  Returns the
-    number of rows emitted by THIS drain (not the cumulative total).
+    number of rows emitted by THIS drain (not the cumulative total):
+    the sum of its micro-batches' observed ``n_turns``.
     """
-    stream = read_transcript_stream(spark, input_dir, fmt=fmt, max_files=max_files)
-    return _drain_to_parquet(spark, stream_dedup_exact(stream, watermark), output_dir)
+    stream = read_transcript_stream(spark, input_dir, max_files=max_files)
+    return _drain_rows(stream_dedup_exact(stream, watermark), output_dir)
 
 
 def stream_tool_enrich(
@@ -370,8 +356,7 @@ def run_merge_stream(
     table_path: str,
     key: str = "conv_id",
     delete_col: str = "tool",
-    await_termination: bool = True,
-):
+) -> StreamingQuery:
     """CDC-style streaming MERGE sink: drain a stream of keyed change
     rows and apply each micro-batch to a parquet table with
     :func:`ocr_spark.maintenance.merge_upsert` (upsert on ``key``,
@@ -387,8 +372,6 @@ def run_merge_stream(
     a production CDC feed would carry an explicit op column — the
     ``delete_col == 'DELETE'`` encoding keeps the synthetic schema.
     """
-    from pyspark.sql.functions import col, lit
-
     from ocr_spark.maintenance import merge_upsert
 
     os.makedirs(os.path.dirname(table_path) or ".", exist_ok=True)
@@ -405,17 +388,14 @@ def run_merge_stream(
         # within one micro-batch, keys must be unique for MERGE: keep
         # the last row per key by max(turn_idx) (arrival-order proxy in
         # the synthetic feed)
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as SF
-
-        w = W.partitionBy(key).orderBy(SF.col("turn_idx").desc())
+        w = Window.partitionBy(key).orderBy(F.col("turn_idx").desc())
         latest = (
-            batch_df.withColumn("_rn", SF.row_number().over(w))
-            .filter(SF.col("_rn") == 1)
+            batch_df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
         with_flag = latest.withColumn(
-            "_deleted", col(delete_col) == lit("DELETE")
+            "_deleted", F.col(delete_col) == F.lit("DELETE")
         )
         merge_upsert(
             batch_df.sparkSession, table_path, with_flag,
@@ -430,6 +410,5 @@ def run_merge_stream(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q

@@ -7,12 +7,12 @@ On a cluster::
     python -c "from ocr_spark.deploy import package_zip; print(package_zip())"
     spark-submit --py-files <zip> scripts/run_extract.py \
         --input  <transcript parquet/iceberg path> \
-        --output <output dir> [--buckets 64] [--resume]
+        --output <output dir> [--buckets 64]
 
 The script only uses ``ocr_spark`` through the shipped zip (it does
 NOT assume the repo is on the executors' filesystem), runs the
 bucket-committed resumable pipeline from lineage.py, and prints a
-one-line JSON summary.  ``--resume`` on a partially-committed output
+one-line JSON summary.  Re-running on a partially-committed output
 dir skips committed buckets (the kill/restart path).
 """
 
@@ -33,10 +33,6 @@ def main() -> int:
                          "to be exact (deduplicated turn tables break this)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--resume", action="store_true",
-                    help="accepted for symmetry with the docs; resume is "
-                         "automatic (committed buckets are always skipped "
-                         "via the output dir's manifest)")
     ap.add_argument("--synth-convs", type=int, default=0,
                     help="generate a synthetic input of N convs instead of reading --input")
     ap.add_argument("--compact-target-mb", type=int, default=0,

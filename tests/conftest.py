@@ -22,6 +22,24 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(group, action)``: run ``action()`` under Spark job
+    group ``group`` in this thread; (its result, the group's job count)."""
+    sc = spark.sparkContext
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

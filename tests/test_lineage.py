@@ -125,28 +125,15 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
     assert all(r["wall_sec"] >= 0 for r in rows)
 
 
-def _jobs(spark, group, action):
-    """Run ``action()`` under job group ``group``; (its result, its job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_commit_bucket_is_two_jobs_without_persist(spark, ckpt):
-    """A bucket commit runs the data write and the lineage row write on
-    top of reading its staged bucket (the parquet footer read is one
-    job), and nothing else: its counters are observed on the data
-    write, with no cached output and no counter job."""
+def test_commit_bucket_is_two_jobs_without_persist(spark, ckpt, count_jobs):
+    """Once the run has read its staged table (the schema inference is
+    one job per run), a bucket commit runs the data write and the
+    lineage row write and nothing else: its counters are observed on
+    the data write, with no cached output and no counter job."""
     persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    bucket_dir = os.path.join(ckpt.staged_dir, "bucket=0")
-    _, read_jobs = _jobs(spark, "lineage-read", lambda: spark.read.parquet(bucket_dir))
-    st, commit_jobs = _jobs(spark, "lineage-commit", lambda: ckpt._commit_bucket(0))
-    assert commit_jobs - read_jobs == 2
+    ckpt._staged_table()
+    st, commit_jobs = count_jobs("lineage-commit", lambda: ckpt._commit_bucket(0))
+    assert commit_jobs == 2
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted_before
     assert st.n_turns == ckpt.read_output().count() > 0
 

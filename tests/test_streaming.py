@@ -31,6 +31,21 @@ def _turns(conv_id: str, variant: int) -> list[dict]:
     ]
 
 
+def _check_drain_lineage(spark, out, emitted, seen):
+    """Each lineage row of ``out`` counts its ``batch_id`` directory's
+    rows, one row per batch, and the batches not in ``seen`` (this
+    drain's) sum to ``emitted``; returns every batch id."""
+    per_batch = dict(
+        spark.read.parquet(os.path.join(out, "data")).groupBy("batch_id").count().collect()
+    )
+    rows = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    lin = {r["batch_id"]: r["n_turns"] for r in rows}
+    assert len(rows) == len(lin) and set(per_batch) <= set(lin)
+    assert lin == {b: per_batch.get(b, 0) for b in lin}
+    assert emitted == sum(n for b, n in lin.items() if b not in seen)
+    return set(lin)
+
+
 @pytest.fixture()
 def dirs(tmp_path):
     inp = tmp_path / "in"
@@ -39,7 +54,10 @@ def dirs(tmp_path):
     return str(inp), str(out)
 
 
-def test_stream_drains_and_writes_lineage(spark, dirs):
+def test_stream_drains_and_writes_lineage(spark, dirs, tmp_path):
+    from ocr_spark.lineage import CheckpointedExtraction
+    from ocr_spark.streaming import TRANSCRIPT_SCHEMA
+
     inp, out = dirs
     rows = [t for i in range(20) for t in _turns(f"c{i:03d}", i % 3)]
     _write_jsonl(os.path.join(inp, "batch0.jsonl"), rows[:24])
@@ -63,9 +81,24 @@ def test_stream_drains_and_writes_lineage(spark, dirs):
                  for r in data.groupBy("batch_id").count().collect()}
     lin_rows = lin.collect()
     assert sorted(per_batch) == sorted(r["batch_id"] for r in lin_rows) == [0, 1]
+    first_turns = dict(
+        data.filter(F.col("turn_idx") == 0).groupBy("batch_id").count().collect()
+    )
     for r in lin_rows:
         assert r["n_turns"] == per_batch[r["batch_id"]]
         assert r["n_ok"] + r["n_fallback"] == r["n_turns"]
+        assert r["n_convs"] == first_turns.get(r["batch_id"], 0)
+
+    # a bucket commit of the same turns writes the same lineage columns
+    # and, summed, the same counters
+    ck = CheckpointedExtraction(spark, str(tmp_path / "batch"), n_buckets=1)
+    ck.stage_by_bucket(spark.read.schema(TRANSCRIPT_SCHEMA).json(inp))
+    ck.run()
+    bucket_lin = ck.read_lineage().drop("bucket")
+    assert lin.drop("batch_id").schema == bucket_lin.schema
+    counters = ["n_convs", "n_turns", "n_ok", "n_fallback", "n_rerouted"]
+    total = lambda df: df.agg(*(F.sum(c).alias(c) for c in counters)).first()
+    assert total(lin) == total(bucket_lin)
 
 
 def test_stream_resume_is_exactly_once(spark, dirs):
@@ -195,6 +228,8 @@ def test_stream_dedup_exact_across_batches_and_restarts(spark, dirs):
     assert distinct_texts == want            # every distinct content once
     assert emitted == got.count() == len(want)
     assert got.groupBy("fp").count().filter(F.col("count") > 1).count() == 0
+    seen = _check_drain_lineage(spark, out, emitted, set())
+    assert seen == {0, 1}                    # max_files=1: one batch per file
 
     # restart: replay old content + one genuinely new turn
     c = _turns("c4", 0) + _turns("c5", 2)
@@ -202,6 +237,23 @@ def test_stream_dedup_exact_across_batches_and_restarts(spark, dirs):
     emitted2 = run_dedup_stream(spark, inp, out, max_files=1)
     assert emitted2 == 1                     # only the variant-2 answer is new
     assert spark.read.parquet(os.path.join(out, "data")).count() == len(want) + 1
+    assert _check_drain_lineage(spark, out, emitted2, seen) == {0, 1, 2}
+
+
+def test_dedup_drain_runs_no_job_outside_its_query(spark, dirs, count_jobs):
+    """With the sink already written, a dedup drain runs every Spark job
+    inside its streaming query (whose thread has its own job group):
+    the emitted count comes from the observed lineage, not from
+    recounting the sink before and after."""
+    from ocr_spark.streaming import run_dedup_stream
+
+    inp, out = dirs
+    _write_jsonl(os.path.join(inp, "a.jsonl"), _turns("c0", 0))
+    assert run_dedup_stream(spark, inp, out) == 2
+    _write_jsonl(os.path.join(inp, "b.jsonl"), _turns("c1", 1))
+    emitted, jobs = count_jobs("dedup-drain", lambda: run_dedup_stream(spark, inp, out))
+    assert emitted == 1                      # the user turn repeats c0's
+    assert jobs == 0
 
 
 def test_stream_sessionize_matches_batch_session_window(spark, dirs):
@@ -296,12 +348,14 @@ def test_stream_clean_normalize_before_dedup(spark, dirs):
     _write_jsonl(os.path.join(inp, "a.jsonl"), [mk("c0", raw)])
     emitted = run_clean_stream(spark, inp, out, max_files=1)
     assert emitted == 1
+    seen = _check_drain_lineage(spark, out, emitted, set())
 
     # second drain: the byte-variant is suppressed, the fresh one emits
     _write_jsonl(os.path.join(inp, "b.jsonl"),
                  [mk("c1", variant), mk("c2", fresh)])
     emitted2 = run_clean_stream(spark, inp, out, max_files=1)
     assert emitted2 == 1
+    assert len(_check_drain_lineage(spark, out, emitted2, seen)) == len(seen) + 1
     got = spark.read.parquet(os.path.join(out, "data"))
     assert got.count() == 2
     texts = {r["text"] for r in got.collect()}
