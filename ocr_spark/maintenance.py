@@ -9,7 +9,8 @@ overhead).  Real deployments run a table-maintenance pass (Iceberg's
 ``rewrite_data_files``); this module is the parquet-layout analog,
 kept deliberately simple and crash-safe:
 
-1. size the directory (driver-side listing of data files only),
+1. size the directory (one driver-side walk: data bytes, file count
+   and sub-target fragment count),
 2. rewrite into ``ceil(total_bytes / target_file_bytes)`` files via a
    ``repartition`` round-robin (NOT ``coalesce``: coalesce collapses
    upstream parallelism so a 10k-file read would be re-scanned by a
@@ -17,19 +18,27 @@ kept deliberately simple and crash-safe:
    parallelism, and compaction is a rewrite anyway),
 3. commit atomically: write to ``<dir>.__compact_tmp``, swap via two
    renames with the original kept at ``<dir>.__compact_bak`` until the
-   swap succeeds.
+   swap succeeds.  The row count is observed on the rewrite itself.
 
 Compaction is layout-only by contract: row multiset in == row multiset
 out (pinned by tests/test_maintenance.py, along with crash-window
 recovery via :func:`recover_compaction`).
+
+The keyed MERGE (:func:`merge_upsert_cow`) is the ``MERGE INTO``
+analog on a hash-bucketed snapshot (:func:`write_bucketed_snapshot`:
+``_bucket=K/`` directories plus a ``_buckets.json`` manifest): it
+rewrites only the buckets a change batch touches and swaps each one in
+with the same two-rename protocol, so :func:`recover_compaction`
+resolves a crash in the swap window for both operations.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: default compacted file size — parquet works best at 128M-1G; the
@@ -37,32 +46,20 @@ from pyspark.sql import functions as F
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
-def _data_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-def _data_file_count(path: str) -> int:
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def _small_file_count(path: str, threshold_bytes: int) -> int:
-    """Data files strictly smaller than ``threshold_bytes`` — the
+def _layout(path: str, threshold_bytes: int) -> tuple[int, int, int]:
+    """One walk of ``path``: (data bytes, parquet files, parquet files
+    strictly smaller than ``threshold_bytes``).  The last is the
     fragmentation signal compaction exists to remove."""
-    n = 0
+    n_bytes = n_files = n_small = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
+            size = os.path.getsize(os.path.join(root, f))
+            if not f.startswith(("_", ".")):
+                n_bytes += size
             if f.endswith(".parquet"):
-                if os.path.getsize(os.path.join(root, f)) < threshold_bytes:
-                    n += 1
-    return n
+                n_files += 1
+                n_small += size < threshold_bytes
+    return n_bytes, n_files, n_small
 
 
 def compact_parquet_dir(
@@ -91,15 +88,13 @@ def compact_parquet_dir(
     # fail with ENOTEMPTY on every subsequent attempt
     recover_compaction(path)
 
-    before_bytes = _data_bytes(path)
-    before_files = _data_file_count(path)
+    before_bytes, before_files, small_files = _layout(path, target_file_bytes)
     n_out = max(1, -(-before_bytes // max(target_file_bytes, 1)))
     # Skip on a FRAGMENTATION signal, not a size one: comparing file
     # count to ceil(bytes/target) mis-skips e.g. 1x5GB + 39 tiny files
     # at a 128MB target (n_out=41 > 40), exactly the small-file mess
     # this pass exists to remove.  Compact whenever enough sub-target
     # fragments exist; a directory of all >= target files is compact.
-    small_files = _small_file_count(path, target_file_bytes)
     if small_files < min_files_to_compact:
         return {
             "path": path, "skipped": True,
@@ -110,16 +105,19 @@ def compact_parquet_dir(
     tmp = path.rstrip("/") + ".__compact_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
 
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    df.repartition(int(n_out)).write.mode("overwrite").parquet(tmp)
+    # the row count is observed on the rewrite itself: no count job
+    obs = Observation()
+    spark.read.parquet(path).repartition(int(n_out)) \
+        .observe(obs, F.count(F.lit(1)).alias("rows")) \
+        .write.mode("overwrite").parquet(tmp)
 
     _swap_in(tmp, path)
 
+    after_bytes, after_files, _ = _layout(path, target_file_bytes)
     return {
-        "path": path, "skipped": False, "rows": n_rows,
-        "files_before": before_files, "files_after": _data_file_count(path),
-        "bytes_before": before_bytes, "bytes_after": _data_bytes(path),
+        "path": path, "skipped": False, "rows": obs.get["rows"],
+        "files_before": before_files, "files_after": after_files,
+        "bytes_before": before_bytes, "bytes_after": after_bytes,
     }
 
 
@@ -143,16 +141,6 @@ def _swap_in(new: str, live: str) -> None:
 def _is_delete(delete_col: str):
     """The tombstone flag, NULL read as false (an upsert)."""
     return F.coalesce(F.col(delete_col), F.lit(False))
-
-
-def _change_stats(changes, delete_col: str) -> dict:
-    """Change, delete and upsert counts of one change batch (one job)."""
-    agg = changes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(_is_delete(delete_col).cast("long")).alias("d"),
-    ).first()
-    n, d = agg["n"], agg["d"] or 0
-    return {"n_changes": n, "n_deletes": d, "n_upserts": n - d}
 
 
 def recover_compaction(path: str) -> str:
@@ -183,91 +171,38 @@ def recover_compaction(path: str) -> str:
     return "clean"
 
 
-def merge_plan(target, changes, key: str, delete_col: str,
-               broadcast_changes: bool = True):
-    """Build the merged DataFrame :func:`merge_upsert` writes.
+def merge_plan(target, changes, key: str, delete_col: str):
+    """Build the merged rows :func:`merge_upsert_cow` writes.
 
     Exposed separately so the no-target-shuffle plan shape can be
     asserted on the exact DataFrame the merge constructs
-    (tests/test_maintenance.py explains this, not a hand copy).  A
-    NULL ``delete_col`` is treated as false (an upsert): ``~NULL`` is
-    NULL, and a bare ``filter(~col)`` would silently drop the row from
-    the upsert side while its key still anti-joins the target row away
-    — data loss disguised as a delete.
+    (tests/test_maintenance.py explains this, not a hand copy).  The
+    target is NEVER shuffled: matched rows leave via one ``left_anti``
+    join against the broadcast change-key set, and the rewrite is a
+    scan + union + write.  A NULL ``delete_col`` is treated as false
+    (an upsert): ``~NULL`` is NULL, and a bare ``filter(~col)`` would
+    silently drop the row from the upsert side while its key still
+    anti-joins the target row away — data loss disguised as a delete.
     """
     data_cols = target.columns
-    ck = changes.select(key)
-    if broadcast_changes:
-        ck = F.broadcast(ck)
-    kept = target.join(ck, on=key, how="left_anti")
+    kept = target.join(F.broadcast(changes.select(key)), on=key, how="left_anti")
     upserts = changes.filter(~_is_delete(delete_col)).select(*data_cols)
     return kept.unionByName(upserts)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    changes,
-    key: str = "doc_id",
-    delete_col: str = "_deleted",
-    broadcast_changes: bool = True,
-    with_counts: bool = True,
-) -> dict:
-    """MERGE INTO analog on the parquet snapshot seam: apply one keyed
-    change batch — full-row upserts plus tombstone deletes — to a
-    parquet table as a single atomic snapshot swap (Iceberg
-    ``MERGE INTO`` / copy-on-write semantics, same two-rename protocol
-    as :func:`compact_parquet_dir`, so :func:`recover_compaction`
-    resolves a crash in the swap window for both operations).
-
-    ``changes`` carries the target's full schema plus a boolean
-    ``delete_col``: rows with it true remove their key from the table;
-    the rest — including rows where the flag is NULL — replace the
-    matching target row wholesale (or insert when the key is new).
-    Keys must be unique within a batch — enforce upstream;
-    last-writer-wins dedup belongs to the producer.
-
-    Shape at 100 TB: the target is NEVER shuffled — matched rows leave
-    via one ``left_anti`` join against the change-key set (broadcast by
-    default; pass ``broadcast_changes=False`` for change batches too
-    big to broadcast, letting AQE pick the join) — and the rewrite is a
-    scan + union + write.  Copy-on-write rewrites the whole table, the
-    honest cost of a parquet-only seam; a deployment with the Iceberg
-    runtime jar gets file-level overwrite through
-    ``iceberg.IcebergSnapshotWriter`` instead.  Change-batch stats come
-    from ONE aggregate over ``changes``; the before/after table counts
-    cost one scan of each snapshot and are observability-only — pass
-    ``with_counts=False`` to skip them on tables where two extra scans
-    matter.
-    """
-    recover_compaction(path)
-    target = spark.read.parquet(path)
-    merged = merge_plan(target, changes, key, delete_col, broadcast_changes)
-
-    stats = _change_stats(changes, delete_col)
-    rows_before = target.count() if with_counts else None
-
-    tmp = path.rstrip("/") + ".__compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_in(tmp, path)
-
-    rows_after = spark.read.parquet(path).count() if with_counts else None
-    return {"path": path, "rows_before": rows_before, "rows_after": rows_after, **stats}
 
 
 # ---------------------------------------------------------------------------
 # Bucketed copy-on-write MERGE
 # ---------------------------------------------------------------------------
-# merge_upsert rewrites the WHOLE table per change batch — the honest
-# cost of a flat parquet snapshot, but a full-table write at 100 TB for
-# a 0.01% change batch is the one remaining full-table cost in the CDC
-# path.  Laying the table out as hash-bucket DIRECTORIES (the directory
-# analog of Iceberg's bucket partition transform, same pmod(xxhash64)
-# family as bucketing.py's metastore layout) lets MERGE rewrite ONLY
-# the buckets whose keys changed: the other bucket directories are
-# never read, never written, byte-identical after the merge — the
-# file-level pruning that makes Iceberg copy-on-write affordable.
+# A flat parquet snapshot makes every keyed MERGE a whole-table rewrite:
+# a full-table write at 100 TB for a 0.01% change batch.  Laying the
+# table out as hash-bucket DIRECTORIES (the directory analog of
+# Iceberg's bucket partition transform, same pmod(xxhash64) family as
+# bucketing.py's metastore layout) lets MERGE rewrite ONLY the buckets
+# whose keys changed: the other bucket directories are never read,
+# never written, byte-identical after the merge — the file-level
+# pruning that makes Iceberg copy-on-write affordable.  This is the one
+# keyed MERGE; the streaming CDC sink (run_merge_stream) commits every
+# micro-batch through it.
 
 #: directory partition column carrying the bucket id (key=value layout)
 BUCKET_COL = "_bucket"
@@ -296,13 +231,12 @@ def write_bucketed_snapshot(
     ``spark.read.parquet(path)`` (drop :data:`BUCKET_COL`, it is
     derivable).  Bucket count is a layout constant sized once per table
     family (buckets of several hundred MB at 100 TB), never per batch.
+    An empty ``df`` writes no bucket directory, only the manifest.
     """
-    import json as _json
-
     df.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets)) \
         .write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
     with open(os.path.join(path, _BUCKET_MANIFEST), "w") as f:
-        _json.dump({"key": key, "n_buckets": n_buckets}, f)
+        json.dump({"key": key, "n_buckets": n_buckets}, f)
     return {"path": path, "n_buckets": n_buckets, "key": key}
 
 
@@ -311,26 +245,54 @@ def read_bucketed_snapshot(spark: SparkSession, path: str):
     return spark.read.parquet(path).drop(BUCKET_COL)
 
 
+def bucket_layout(path: str) -> tuple[str, int]:
+    """The (key, n_buckets) the manifest of the snapshot at ``path`` pins.
+
+    A directory without a manifest is a flat parquet table (the layout
+    ``run_merge_stream`` wrote before it merged bucket by bucket): that
+    raises ``ValueError`` naming the path, since it must be
+    re-snapshotted with :func:`write_bucketed_snapshot` first.
+    """
+    manifest = os.path.join(path, _BUCKET_MANIFEST)
+    if os.path.isdir(path) and not os.path.exists(manifest):
+        raise ValueError(
+            f"{path} has no {_BUCKET_MANIFEST}, so it is not a bucketed "
+            "snapshot (a flat parquet table?); re-snapshot it with "
+            "maintenance.write_bucketed_snapshot before merging into it"
+        )
+    with open(manifest) as f:
+        meta = json.load(f)
+    return meta["key"], int(meta["n_buckets"])
+
+
 def merge_upsert_cow(
     spark: SparkSession,
     path: str,
     changes,
     delete_col: str = "_deleted",
-    broadcast_changes: bool = True,
 ) -> dict:
-    """Keyed MERGE on a bucketed snapshot, rewriting ONLY changed
-    buckets (copy-on-write with file-level pruning).
+    """MERGE INTO analog: apply one keyed change batch — full-row
+    upserts plus tombstone deletes — to a bucketed snapshot, rewriting
+    ONLY the buckets whose keys changed (Iceberg copy-on-write with
+    file-level pruning).
 
-    Semantics are identical to :func:`merge_upsert` (same
-    :func:`merge_plan`: tombstone deletes, full-row upserts, NULL
-    delete flag = upsert); the difference is purely which bytes move.
+    ``changes`` carries the target's full schema plus a boolean
+    ``delete_col``: rows with it true remove their key from the table;
+    the rest — including rows where the flag is NULL — replace the
+    matching target row wholesale (or insert when the key is new).
+    Keys must be unique within a batch — enforce upstream;
+    last-writer-wins dedup belongs to the producer.  The key and the
+    bucket count come from the snapshot's manifest (:func:`bucket_layout`).
     Steps:
 
     1. recover any bucket left mid-swap by a previous crash,
-    2. compute the changed-bucket set from ``changes`` (ONE distinct
-       over the change batch; at most ``n_buckets`` values),
-    3. read ONLY those bucket directories, merge, write the result
-       partitioned by the same bucket expression to a temp dir,
+    2. ONE ``groupBy(bucket)`` aggregate over ``changes`` (at most
+       ``n_buckets`` rows) gives the changed-bucket set and the
+       change, delete and upsert counts; no changed bucket (an empty
+       batch) returns here,
+    3. read ONLY those bucket directories, merge (:func:`merge_plan`),
+       write the result partitioned by the same bucket expression to a
+       temp dir,
     4. swap each changed bucket directory with the compaction
        two-rename protocol (crash in any window is resolved by
        :func:`recover_compaction` per bucket).
@@ -341,32 +303,30 @@ def merge_upsert_cow(
     table is never torn within a bucket, and re-running the SAME keyed
     change batch converges (keyed MERGE is replay-idempotent — the
     already-merged buckets merge to themselves), which is exactly the
-    recovery contract the streaming CDC sink (run_merge_stream)
-    already relies on for replayed micro-batches.
+    recovery contract the streaming CDC sink (run_merge_stream) relies
+    on for replayed micro-batches.
     """
-    import json as _json
-
-    with open(os.path.join(path, _BUCKET_MANIFEST)) as f:
-        meta = _json.load(f)
-    key, n_buckets = meta["key"], int(meta["n_buckets"])
+    key, n_buckets = bucket_layout(path)
 
     # 1. self-recover every bucket dir (cheap: n_buckets stat calls) and
     # drop a stale temp dir from a run that crashed before its swaps
     for b in range(n_buckets):
         recover_compaction(os.path.join(path, f"{BUCKET_COL}={b}"))
-    shutil.rmtree(path.rstrip("/") + ".__merge_tmp", ignore_errors=True)
+    tmp = path.rstrip("/") + ".__merge_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
 
-    # 2. changed buckets: bounded by n_buckets, a legitimate driver set
-    changed = sorted(
-        r["b"]
-        for r in changes.select(
-            _bucket_expr(key, n_buckets).alias("b")
-        ).distinct().collect()
-    )
+    # 2. changed buckets and change counts from one aggregate: bounded
+    # by n_buckets, a legitimate driver set
+    per_bucket = changes.groupBy(_bucket_expr(key, n_buckets).alias("b")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(_is_delete(delete_col).cast("long")).alias("d"),
+    ).collect()
+    changed = sorted(r["b"] for r in per_bucket)
+    n = sum(r["n"] for r in per_bucket)
+    d = sum(r["d"] for r in per_bucket)
     stats = {
-        "path": path, "n_buckets": n_buckets,
-        "buckets_rewritten": changed,
-        **_change_stats(changes, delete_col),
+        "path": path, "n_buckets": n_buckets, "buckets_rewritten": changed,
+        "n_changes": n, "n_deletes": d, "n_upserts": n - d,
     }
     if not changed:
         return stats
@@ -381,11 +341,7 @@ def merge_upsert_cow(
         target = spark.read.parquet(*src_dirs)
     else:  # all-new buckets (first rows hashing there)
         target = changes.drop(delete_col).limit(0)
-    merged = merge_plan(target, changes, key, delete_col,
-                        broadcast_changes)
-
-    tmp = path.rstrip("/") + ".__merge_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    merged = merge_plan(target, changes, key, delete_col)
     merged.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets)) \
         .write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp)
 

@@ -358,9 +358,16 @@ def run_merge_stream(
     delete_col: str = "tool",
 ) -> StreamingQuery:
     """CDC-style streaming MERGE sink: drain a stream of keyed change
-    rows and apply each micro-batch to a parquet table with
-    :func:`ocr_spark.maintenance.merge_upsert` (upsert on ``key``,
-    tombstone delete where ``delete_col == 'DELETE'``).
+    rows and apply each micro-batch to a bucketed snapshot with
+    :func:`ocr_spark.maintenance.merge_upsert_cow` (upsert on ``key``,
+    tombstone delete where ``delete_col == 'DELETE'``), rewriting only
+    the buckets the batch touches.
+
+    The table is ``_bucket=K/`` directories plus ``_buckets.json``; read
+    it with ``maintenance.read_bucketed_snapshot``.  A missing table is
+    seeded empty (16 buckets on ``key``, no bucket directory yet); a
+    flat parquet table, or one bucketed on another key, raises
+    ``ValueError`` before the query starts.
 
     Replay safety without batch_id-keyed directories: ``foreachBatch``
     is at-least-once, and a keyed MERGE is IDEMPOTENT — re-applying the
@@ -372,22 +379,24 @@ def run_merge_stream(
     a production CDC feed would carry an explicit op column — the
     ``delete_col == 'DELETE'`` encoding keeps the synthetic schema.
     """
-    from ocr_spark.maintenance import merge_upsert
+    from ocr_spark.maintenance import (
+        bucket_layout,
+        merge_upsert_cow,
+        write_bucketed_snapshot,
+    )
 
-    os.makedirs(os.path.dirname(table_path) or ".", exist_ok=True)
     if not os.path.exists(table_path):
-        # seed an empty table with the change-row data schema
-        empty = spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        empty.write.parquet(table_path)
-
-    changes = read_transcript_stream(spark, input_dir)
+        # an empty RDD has no partitions: the seed write slices nothing
+        empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), TRANSCRIPT_SCHEMA)
+        write_bucketed_snapshot(spark, empty, table_path, key=key)
+    table_key = bucket_layout(table_path)[0]
+    if table_key != key:
+        raise ValueError(f"{table_path} is bucketed on {table_key!r}, not on {key!r}")
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # within one micro-batch, keys must be unique for MERGE: keep
         # the last row per key by max(turn_idx) (arrival-order proxy in
-        # the synthetic feed)
+        # the synthetic feed); an empty batch touches no bucket
         w = Window.partitionBy(key).orderBy(F.col("turn_idx").desc())
         latest = (
             batch_df.withColumn("_rn", F.row_number().over(w))
@@ -397,13 +406,10 @@ def run_merge_stream(
         with_flag = latest.withColumn(
             "_deleted", F.col(delete_col) == F.lit("DELETE")
         )
-        merge_upsert(
-            batch_df.sparkSession, table_path, with_flag,
-            key=key, delete_col="_deleted", with_counts=False,
-        )
+        merge_upsert_cow(batch_df.sparkSession, table_path, with_flag)
 
     q = (
-        changes.writeStream.foreachBatch(commit_batch)
+        read_transcript_stream(spark, input_dir).writeStream.foreachBatch(commit_batch)
         .option(
             "checkpointLocation", table_path.rstrip("/") + "__merge_ckpt"
         )

@@ -1,9 +1,11 @@
 """Small-file compaction: row-multiset preservation, file-count
-reduction, no-op guard, and crash-window recovery in every state."""
+reduction, no-op guard, and crash-window recovery in every state; the
+bucketed copy-on-write keyed MERGE."""
 
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.maintenance import (
@@ -29,12 +31,16 @@ def _rows(spark, path):
     )
 
 
-def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
+def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path, count_jobs):
+    """The rewrite observes its own row count: schema inference, the
+    repartition's map stage and the write, no separate count job."""
     path = str(tmp_path / "frag")
     _write_fragmented(spark, path)
     want = _rows(spark, path)
 
-    stats = compact_parquet_dir(spark, path, target_file_bytes=10**9)
+    stats, jobs = count_jobs(
+        "compact", lambda: compact_parquet_dir(spark, path, target_file_bytes=10**9))
+    assert jobs <= 3
     assert stats["skipped"] is False and stats["rows"] == 2000
     assert stats["files_before"] == 40 and stats["files_after"] == 1
     assert _rows(spark, path) == want
@@ -156,34 +162,9 @@ def test_direct_compact_self_recovers_stale_bak(spark, tmp_path):
     assert not os.path.exists(path + ".__compact_bak")
 
 
-def test_merge_upsert_update_insert_delete(spark, tmp_path):
-    """One change batch: key 3 updated in place, key 100 inserted,
-    key 7 tombstoned — everything else passes through untouched."""
-    from ocr_spark.maintenance import merge_upsert
-
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(i, f"row{i}") for i in range(10)], "doc_id long, text string"
-    ).repartition(3).write.parquet(path)
-
-    changes = spark.createDataFrame(
-        [(3, "row3-v2", False), (100, "row100", False), (7, None, True)],
-        "doc_id long, text string, _deleted boolean",
-    )
-    stats = merge_upsert(spark, path, changes)
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(path).collect()}
-
-    want = {i: f"row{i}" for i in range(10) if i != 7}
-    want[3] = "row3-v2"
-    want[100] = "row100"
-    assert got == want
-    assert stats["rows_before"] == 10 and stats["rows_after"] == 10
-    assert stats["n_upserts"] == 2 and stats["n_deletes"] == 1
-
-
 def test_merge_upsert_target_never_shuffles(spark, tmp_path):
     """The anti-join must broadcast the change keys: no hash exchange
-    of the target side in the plan merge_upsert actually constructs
+    of the target side in the plan merge_upsert_cow actually constructs
     (asserted on merge_plan, the exact DataFrame the merge writes)."""
     from ocr_spark.maintenance import merge_plan
 
@@ -204,49 +185,6 @@ def test_merge_upsert_target_never_shuffles(spark, tmp_path):
     p = buf.getvalue()
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
     assert "Exchange hashpartitioning" not in p
-
-
-def test_merge_upsert_null_delete_flag_is_upsert(spark, tmp_path):
-    """A change row with a NULL delete flag is an UPSERT, never a
-    silent delete: its key must survive with the new value, and
-    n_deletes must not count it."""
-    from ocr_spark.maintenance import merge_upsert
-
-    path = str(tmp_path / "tbl3")
-    spark.createDataFrame(
-        [(i, f"row{i}") for i in range(4)], "doc_id long, text string"
-    ).write.parquet(path)
-    changes = spark.createDataFrame(
-        [(2, "row2-v2", None), (3, None, True)],
-        "doc_id long, text string, _deleted boolean",
-    )
-    stats = merge_upsert(spark, path, changes)
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(path).collect()}
-    assert got == {0: "row0", 1: "row1", 2: "row2-v2"}
-    assert stats["n_upserts"] == 1 and stats["n_deletes"] == 1
-
-
-def test_merge_upsert_recovers_prior_crash_window(spark, tmp_path):
-    """A crash between the two swap renames leaves the table at
-    <path>.__compact_bak with <path> missing; the next merge_upsert
-    must roll that back first and then apply its changes normally."""
-    import os
-
-    from ocr_spark.maintenance import merge_upsert
-
-    path = str(tmp_path / "tbl4")
-    spark.createDataFrame(
-        [(i, f"row{i}") for i in range(3)], "doc_id long, text string"
-    ).write.parquet(path)
-    os.rename(path, path + ".__compact_bak")  # simulate the crash window
-
-    changes = spark.createDataFrame(
-        [(1, "row1-v2", False)], "doc_id long, text string, _deleted boolean"
-    )
-    stats = merge_upsert(spark, path, changes)
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(path).collect()}
-    assert got == {0: "row0", 1: "row1-v2", 2: "row2"}
-    assert stats["rows_before"] == 3 and not os.path.exists(path + ".__compact_bak")
 
 
 # ---------------------------------------------------------------------------
@@ -315,6 +253,52 @@ def test_cow_merge_rewrites_only_changed_buckets(spark, tmp_path):
     want[3] = "row3-v2"
     want[9999] = "row9999"
     assert got == want
+
+
+def test_merge_upsert_null_delete_flag_is_upsert(spark, tmp_path):
+    """A change row with a NULL delete flag is an UPSERT, never a
+    silent delete: its key must survive with the new value, and
+    n_deletes must not count it."""
+    from ocr_spark.maintenance import merge_upsert_cow, read_bucketed_snapshot
+
+    path = _cow_fixture(spark, tmp_path, n=4, n_buckets=2)
+    changes = spark.createDataFrame(
+        [(2, "row2-v2", None), (3, None, True)],
+        "doc_id long, text string, _deleted boolean",
+    )
+    stats = merge_upsert_cow(spark, path, changes)
+    got = {r["doc_id"]: r["text"]
+           for r in read_bucketed_snapshot(spark, path).collect()}
+    assert got == {0: "row0", 1: "row1", 2: "row2-v2"}
+    assert stats["n_upserts"] == 1 and stats["n_deletes"] == 1
+
+
+def test_merge_into_flat_table_raises(spark, tmp_path):
+    """A flat parquet table (the layout run_merge_stream wrote before it
+    merged bucket by bucket) has no bucket manifest: both the merge and
+    the stream sink refuse it with a ValueError naming the path, before
+    the stream starts.  The sink also refuses a snapshot bucketed on
+    another key than its own."""
+    from ocr_spark.maintenance import merge_upsert_cow
+    from ocr_spark.streaming import run_merge_stream
+
+    path = str(tmp_path / "flat")
+    spark.createDataFrame([(1, "row1")], "doc_id long, text string").write.parquet(path)
+    changes = spark.createDataFrame(
+        [(1, "row1-v2", False)], "doc_id long, text string, _deleted boolean")
+    with pytest.raises(ValueError, match="write_bucketed_snapshot") as err:
+        merge_upsert_cow(spark, path, changes)
+    assert path in str(err.value)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    with pytest.raises(ValueError, match="write_bucketed_snapshot"):
+        run_merge_stream(spark, str(inp), path)
+    # a snapshot bucketed on another key would merge on the wrong key
+    other = _cow_fixture(spark, tmp_path, n=4, n_buckets=2)
+    with pytest.raises(ValueError, match="doc_id"):
+        run_merge_stream(spark, str(inp), other, key="conv_id")
+    assert not os.path.exists(path + "__merge_ckpt")
+    assert not os.path.exists(other + "__merge_ckpt")
 
 
 def test_cow_merge_empty_change_batch_touches_nothing(spark, tmp_path):

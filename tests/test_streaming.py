@@ -501,30 +501,38 @@ def test_stream_tool_enrich_left_outer_emits_unmatched(spark, dirs, tmp_path):
 
 
 def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
-    """Two micro-batches of keyed change rows merged into a table:
+    """Two drains of one micro-batch each, merged into a bucketed table:
     batch 2's update wins over batch 1's insert, the DELETE tombstone
     removes its key, and replaying the final change file by hand (the
-    at-least-once case) leaves the table unchanged (MERGE idempotence)."""
-    from ocr_spark.maintenance import merge_upsert
-    from ocr_spark.streaming import TRANSCRIPT_SCHEMA, run_merge_stream
+    at-least-once case) leaves the table unchanged (MERGE idempotence).
+    A micro-batch runs at most 5 Spark jobs into a fresh table and at
+    most 8 into existing buckets."""
+    from ocr_spark.maintenance import merge_upsert_cow, read_bucketed_snapshot
+    from ocr_spark.streaming import run_merge_stream
 
     inp, _ = dirs
     tbl = str(tmp_path / "state_table")
+    sc = spark.sparkContext
 
     def change(cid, turn_idx, text, tool=None, ts="2024-01-01T00:00:00"):
         return {"conv_id": cid, "turn_idx": turn_idx, "role": "assistant",
                 "text": text, "tool": tool, "ts": ts}
 
-    # max_files=1 -> one micro-batch per file, applied in drop order
-    _write_jsonl(os.path.join(inp, "b0.jsonl"),
-                 [change("c1", 0, "v1"), change("c2", 0, "other")])
-    _write_jsonl(os.path.join(inp, "b1.jsonl"),
+    def drain(name, rows):
+        """Drop one change file and drain it; the drain's job count."""
+        _write_jsonl(os.path.join(inp, name), rows)
+        q = run_merge_stream(spark, inp, tbl)
+        assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    # one drain per file, so batch 2 is applied after batch 1 commits
+    assert drain("b0.jsonl", [change("c1", 0, "v1"), change("c2", 0, "other")]) <= 5
+    assert drain("b1.jsonl",                     # c1's and c2's buckets exist
                  [change("c1", 1, "v2"),              # update c1
                   change("c3", 0, "new"),             # insert c3
-                  change("c2", 1, None, tool="DELETE")])  # delete c2
-
-    run_merge_stream(spark, inp, tbl)
-    got = {r["conv_id"]: r["text"] for r in spark.read.parquet(tbl).collect()}
+                  change("c2", 1, None, tool="DELETE")]) <= 8  # delete c2
+    got = {r["conv_id"]: r["text"] for r in read_bucketed_snapshot(spark, tbl).collect()}
     assert got == {"c1": "v2", "c3": "new"}
 
     # replay the LAST batch manually: state must not change
@@ -537,9 +545,8 @@ def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
         "tool string, ts string",
     ).withColumn("ts", F.to_timestamp("ts")).withColumn(
         "_deleted", F.col("tool") == F.lit("DELETE"))
-    merge_upsert(spark, tbl, replay, key="conv_id", delete_col="_deleted",
-                 with_counts=False)
-    again = {r["conv_id"]: r["text"] for r in spark.read.parquet(tbl).collect()}
+    merge_upsert_cow(spark, tbl, replay)
+    again = {r["conv_id"]: r["text"] for r in read_bucketed_snapshot(spark, tbl).collect()}
     assert again == got
 
 
@@ -559,7 +566,11 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     from pyspark.sql import functions as SF
     from pyspark.sql.types import StructField, StringType
 
-    from ocr_spark.maintenance import merge_upsert
+    from ocr_spark.maintenance import (
+        merge_upsert_cow,
+        read_bucketed_snapshot,
+        write_bucketed_snapshot,
+    )
     from ocr_spark.pipeline import EXTRACT_SCHEMA, extract_conversations
     from ocr_spark.streaming import (
         TRANSCRIPT_SCHEMA,
@@ -600,11 +611,11 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     dedup_schema = StructType(
         list(EXTRACT_SCHEMA.fields) + [StructField("fp", StringType())])
 
-    # seed the MERGE target: extraction schema + composite key column
+    # seed the bucketed MERGE target: extraction schema + composite key
     key_schema = StructType(
         list(EXTRACT_SCHEMA.fields) + [StructField("_k", StringType())])
-    if not os.path.exists(table):
-        spark.createDataFrame([], key_schema).write.parquet(table)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), key_schema)
+    write_bucketed_snapshot(spark, empty, table, key="_k")
 
     def drain_stage_b(kill_mid=False):
         def start():
@@ -637,16 +648,13 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
         q.awaitTermination()
 
     def commit_merge(bdf, _bid):
-        if bdf.isEmpty():
-            return
         ch = (
             bdf.drop("fp")
             .withColumn("_k", SF.concat_ws(
                 ":", "conv_id", SF.col("turn_idx").cast("string")))
             .withColumn("_deleted", SF.lit(False))
         )
-        merge_upsert(bdf.sparkSession, table, ch, key="_k",
-                     delete_col="_deleted", with_counts=False)
+        merge_upsert_cow(bdf.sparkSession, table, ch)
 
     def commit_window(bdf, _bid):
         bdf.write.mode("overwrite").parquet(os.path.join(outC, "data"))
@@ -680,7 +688,7 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     _write_jsonl(os.path.join(inp, "p1_turns.jsonl"),
                  [t for c in convs[:9] for t in c])
     drain_all()
-    n_phase1 = spark.read.parquet(os.path.join(table)).count()
+    n_phase1 = read_bucketed_snapshot(spark, table).count()
     assert n_phase1 == 9 * 2
 
     # ---- phase 2: convs 9-17 PLUS byte-identical replays of 0-5 -----------
@@ -697,7 +705,7 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
                            for s in (r["char_spans"] or [])),
                      r["block_class"], r["answer"], r["status"],
                      r["n_tokens"])
-    got = sorted(map(key, spark.read.parquet(table).drop("_k").collect()))
+    got = sorted(map(key, read_bucketed_snapshot(spark, table).drop("_k").collect()))
     batch_in = spark.createDataFrame(
         [(t["conv_id"], t["turn_idx"], t["role"], t["text"], None, None)
          for c in convs for t in c],
@@ -707,7 +715,7 @@ def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
     assert got == want and len(got) == 18 * 2
 
     # (b) the replayed conversations produced NO duplicate keys anywhere
-    dup = (spark.read.parquet(table).groupBy("_k").count()
+    dup = (read_bucketed_snapshot(spark, table).groupBy("_k").count()
            .filter(SF.col("count") > 1).count())
     assert dup == 0
 
