@@ -14,11 +14,13 @@ Sections:
    (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``,
    timed to a noop sink (full plan execution, no driver collect cost).
 
-2. **Extraction throughput** — the flagship conversation-extraction
-   job (groupBy conv_id -> Arrow-batched kernel mapInPandas) over a
-   deterministic synthetic transcript table (ocr_spark.synth, skewed
-   turn counts), reported as turns/sec.  This is the BASELINE.md
-   north-star metric.
+2. **Extraction throughput** — the flagship extraction job
+   (``pipeline.extract_conversations``: scan, native per-turn classify
+   and one ``ArrowEvalPython`` stage for the span and token-count
+   UDFs, no shuffle) over a deterministic synthetic transcript table
+   (ocr_spark.synth, skewed turn counts), reported as turns/sec, next
+   to the native classify alone.  This is the BASELINE.md north-star
+   metric.
 
 3. **Scaling efficiency** — the same extraction job, same input
    parquet, run in fresh CPU-pinned subprocesses at three parallelism
@@ -103,8 +105,8 @@ def run_throughput(cpus: int, data_dir: str) -> dict:
 
     membw_before = membw_canary()
 
-    # 8x cores shuffle partitions: measured 1.5x faster than 4x on the
-    # extraction shuffle (smaller sorter runs, better reduce packing).
+    # The extraction plan has no shuffle; the shuffle partition count
+    # only sizes the final aggregate of the row count below.
     spark = get_spark(
         app_name=f"ocr_bench_tp_{cpus}",
         master=f"local[{cpus}]",
@@ -114,8 +116,8 @@ def run_throughput(cpus: int, data_dir: str) -> dict:
     df = spark.read.parquet(data_dir)
     n_turns = df.count()
 
-    # Warmup = one full pass: pays the one-time JVM JIT, shuffle-file
-    # allocation, and Python worker fork/import cost outside the
+    # Warmup = one full pass: pays the one-time JVM JIT and the
+    # Python worker fork/import cost outside the
     # measured window (on a long-lived cluster job these amortize to
     # zero; measured cold/warm gap is ~2x).  Then best-of-4 measured
     # passes BOTH paths (min-time practice: the steady-state estimate

@@ -14,19 +14,20 @@ protocol is implemented on plain parquet with the same semantics an
 Iceberg writer would give us:
 
 - the conv_id space is split into ``n_buckets`` deterministic buckets
-  (``pmod(xxhash64(conv_id), B)`` — key-derived, stable under retries
-  and partition counts);
-- :func:`stage_by_bucket` materializes the input once, directory-
-  partitioned by bucket (the stand-in for Iceberg hidden partitioning
-  ``bucket(B, conv_id)``) so each batch's scan prunes to its own
-  files rather than rescanning the table;
+  (``maintenance.bucket_expr``: ``pmod(xxhash64(conv_id), B)`` —
+  key-derived, stable under retries and partition counts);
+- ``CheckpointedExtraction.stage_by_bucket`` materializes the input
+  once as a bucketed snapshot on conv_id
+  (``maintenance.write_bucketed_snapshot``, the stand-in for Iceberg
+  hidden partitioning ``bucket(B, conv_id)``), so each commit reads its
+  own bucket directory rather than rescanning the table;
 - each bucket is extracted and written as one atomic commit:
   data parquet -> lineage row -> manifest update via atomic rename
   (the parquet+manifest pair plays the role of an Iceberg snapshot);
   the lineage counters are observed on the data write itself
-  (:func:`observe_lineage`), so a commit runs no job beyond its two
-  writes: the staged table is read once per run (one schema-inference
-  job) and each commit filters it to its bucket;
+  (:func:`observe_lineage`), and the bucket is read with the schema
+  the staged snapshot's manifest records, so a commit runs no job
+  beyond its two writes;
 - a restart reads the manifest and skips committed buckets — the
   anti-join-against-lineage resume of SURVEY.md §2.7.
 
@@ -48,14 +49,17 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark.maintenance import (
+    BUCKET_MANIFEST,
+    bucket_expr,
+    bucket_layout,
+    read_bucketed_snapshot,
+    write_bucketed_snapshot,
+    write_manifest,
+)
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
 
 MANIFEST = "_manifest.json"
-
-
-def bucket_of(col, n_buckets: int):
-    """Deterministic bucket id for a conv_id column (never random)."""
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
 
 def _manifest_path(output_dir: str) -> str:
@@ -68,15 +72,6 @@ def read_manifest(output_dir: str) -> dict:
         return {"n_buckets": None, "committed": []}
     with open(p) as f:
         return json.load(f)
-
-
-def _write_manifest(output_dir: str, manifest: dict) -> None:
-    """Atomic replace: a reader/restart never sees a torn manifest."""
-    p = _manifest_path(output_dir)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, p)
 
 
 def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -148,7 +143,8 @@ class CheckpointedExtraction:
     Layout under ``output_dir``::
 
         _manifest.json            committed bucket ids (atomic rename)
-        staged/bucket=<i>/...     input staged by bucket (one-time)
+        staged/_bucket=<i>/...    input staged by bucket (one-time), a
+        staged/_buckets.json      bucketed snapshot on conv_id
         data/bucket=<i>/...       extracted output per committed bucket
         lineage/...               parquet metrics table, appended per commit
 
@@ -173,7 +169,6 @@ class CheckpointedExtraction:
         # storage seam (ocr_spark.iceberg): parquet by default; pass an
         # IcebergSnapshotWriter when a real catalog + runtime jar exist
         self.writer = writer or ParquetSnapshotWriter(spark, output_dir)
-        self._staged: DataFrame | None = None
         os.makedirs(output_dir, exist_ok=True)
 
     # -- staging ---------------------------------------------------------
@@ -182,34 +177,23 @@ class CheckpointedExtraction:
         return os.path.join(self.output_dir, "staged")
 
     def is_staged(self) -> bool:
-        """True once stage_by_bucket committed (parquet _SUCCESS marker)."""
-        return os.path.exists(os.path.join(self.staged_dir, "_SUCCESS"))
+        """True once stage_by_bucket committed: the staged snapshot's
+        manifest is written after its data."""
+        return os.path.exists(os.path.join(self.staged_dir, BUCKET_MANIFEST))
 
     def stage_by_bucket(self, transcripts: DataFrame) -> None:
-        """One-time pass: write input partitioned by bucket(conv_id).
+        """One-time pass: write the input as a bucketed snapshot on
+        conv_id, one file per bucket directory.
 
-        Emulates Iceberg hidden partitioning: per-bucket jobs then scan
-        only ``staged/bucket=<i>`` (directory partition pruning) rather
-        than re-reading the whole table per batch.  ``transcripts``
-        follows the class's input contract (turns 0..n-1, no gaps),
-        unchecked.
+        Emulates Iceberg hidden partitioning: each commit then reads
+        only ``staged/_bucket=<i>`` rather than re-reading the whole
+        table per batch.  ``transcripts`` follows the class's input
+        contract (turns 0..n-1, no gaps), unchecked.
         """
-        (
-            transcripts.withColumn("bucket", bucket_of(F.col("conv_id"), self.n_buckets))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.staged_dir)
+        write_bucketed_snapshot(
+            self.spark, transcripts.repartition(bucket_expr("conv_id", self.n_buckets)),
+            self.staged_dir, key="conv_id", n_buckets=self.n_buckets,
         )
-        self._staged = None
-
-    def _staged_table(self) -> DataFrame:
-        """The staged table, read once per object: its schema inference
-        is one Spark job, and a ``bucket == b`` filter prunes the scan
-        to ``staged/bucket=<b>``."""
-        if self._staged is None:
-            self._staged = self.spark.read.parquet(self.staged_dir)
-        return self._staged
 
     # -- commit loop -----------------------------------------------------
     def pending_buckets(self) -> list[int]:
@@ -223,7 +207,11 @@ class CheckpointedExtraction:
 
     def run(self, fail_after: int | None = None) -> list[BucketStats]:
         """Process all pending buckets; ``fail_after`` injects a crash
-        after N commits (kill/restart testing, SURVEY.md §5)."""
+        after N commits (kill/restart testing, SURVEY.md §5).  Input
+        staged in another bucket count raises: the run would commit part."""
+        staged = bucket_layout(self.staged_dir)[1]
+        if staged != self.n_buckets:
+            raise ValueError(f"staged n_buckets={staged}, run configured {self.n_buckets}")
         stats: list[BucketStats] = []
         for i, b in enumerate(self.pending_buckets()):
             if fail_after is not None and i >= fail_after:
@@ -233,7 +221,7 @@ class CheckpointedExtraction:
 
     def _commit_bucket(self, b: int) -> BucketStats:
         t0 = time.time()
-        part = self._staged_table().filter(F.col("bucket") == b)
+        part = read_bucketed_snapshot(self.spark, self.staged_dir, [b])
         out, obs = observe_lineage(extract_conversations(part))
         self.writer.write_bucket_data(out, b)
         counters, wall_sec = obs.get, round(time.time() - t0, 3)
@@ -250,7 +238,7 @@ class CheckpointedExtraction:
         m = read_manifest(self.output_dir)
         m["n_buckets"] = self.n_buckets
         m["committed"] = sorted(set(m["committed"]) | {b})
-        _write_manifest(self.output_dir, m)
+        write_manifest(_manifest_path(self.output_dir), m)
         return st
 
     # -- consumers -------------------------------------------------------
@@ -302,7 +290,7 @@ class StepCheckpoint:
         df.write.mode("overwrite").parquet(self._step_dir(step))
         m = read_manifest(self.ckpt_dir)
         m["steps"] = sorted(set(m.get("steps", [])) | {step})
-        _write_manifest(self.ckpt_dir, m)
+        write_manifest(_manifest_path(self.ckpt_dir), m)
 
     def steps(self) -> list[int]:
         """Committed step ids (ascending)."""

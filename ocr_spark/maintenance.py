@@ -26,10 +26,10 @@ recovery via :func:`recover_compaction`).
 
 The keyed MERGE (:func:`merge_upsert_cow`) is the ``MERGE INTO``
 analog on a hash-bucketed snapshot (:func:`write_bucketed_snapshot`:
-``_bucket=K/`` directories plus a ``_buckets.json`` manifest): it
-rewrites only the buckets a change batch touches and swaps each one in
-with the same two-rename protocol, so :func:`recover_compaction`
-resolves a crash in the swap window for both operations.
+``_bucket=K/`` directories plus a ``_buckets.json`` manifest of key,
+bucket count and schema): it rewrites only the buckets a change batch
+touches and swaps each one in with the same two-rename protocol, so
+:func:`recover_compaction` resolves a crash in the swap window for both.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ import shutil
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: default compacted file size — parquet works best at 128M-1G; the
 #: default errs small so tests exercise multi-file output.
@@ -66,14 +67,13 @@ def compact_parquet_dir(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = DEFAULT_TARGET_BYTES,
-    min_files_to_compact: int = 2,
 ) -> dict:
     """Rewrite a parquet directory into ~``target_file_bytes`` files.
 
     Returns a stats dict (files/bytes before and after, rows, skipped
     flag) suitable for a lineage/metrics row.  No-op (skipped=True)
-    when the directory already has fewer than ``min_files_to_compact``
-    data files or fewer files than the target implies.
+    when fewer than two of its parquet files are smaller than
+    ``target_file_bytes``.
 
     Partition-column layouts (``key=value`` subdirectories, e.g. the
     streaming sink's ``batch_id=N``) are rewritten FLAT: partition
@@ -95,7 +95,7 @@ def compact_parquet_dir(
     # at a 128MB target (n_out=41 > 40), exactly the small-file mess
     # this pass exists to remove.  Compact whenever enough sub-target
     # fragments exist; a directory of all >= target files is compact.
-    if small_files < min_files_to_compact:
+    if small_files < 2:
         return {
             "path": path, "skipped": True,
             "files_before": before_files, "files_after": before_files,
@@ -138,9 +138,9 @@ def _swap_in(new: str, live: str) -> None:
     shutil.rmtree(bak, ignore_errors=True)
 
 
-def _is_delete(delete_col: str):
+def _is_delete():
     """The tombstone flag, NULL read as false (an upsert)."""
-    return F.coalesce(F.col(delete_col), F.lit(False))
+    return F.coalesce(F.col(DELETE_COL), F.lit(False))
 
 
 def recover_compaction(path: str) -> str:
@@ -171,7 +171,7 @@ def recover_compaction(path: str) -> str:
     return "clean"
 
 
-def merge_plan(target, changes, key: str, delete_col: str):
+def merge_plan(target, changes, key: str):
     """Build the merged rows :func:`merge_upsert_cow` writes.
 
     Exposed separately so the no-target-shuffle plan shape can be
@@ -179,19 +179,19 @@ def merge_plan(target, changes, key: str, delete_col: str):
     (tests/test_maintenance.py explains this, not a hand copy).  The
     target is NEVER shuffled: matched rows leave via one ``left_anti``
     join against the broadcast change-key set, and the rewrite is a
-    scan + union + write.  A NULL ``delete_col`` is treated as false
+    scan + union + write.  A NULL :data:`DELETE_COL` is treated as false
     (an upsert): ``~NULL`` is NULL, and a bare ``filter(~col)`` would
     silently drop the row from the upsert side while its key still
     anti-joins the target row away — data loss disguised as a delete.
     """
     data_cols = target.columns
     kept = target.join(F.broadcast(changes.select(key)), on=key, how="left_anti")
-    upserts = changes.filter(~_is_delete(delete_col)).select(*data_cols)
+    upserts = changes.filter(~_is_delete()).select(*data_cols)
     return kept.unionByName(upserts)
 
 
 # ---------------------------------------------------------------------------
-# Bucketed copy-on-write MERGE
+# Bucketed snapshots and the copy-on-write MERGE
 # ---------------------------------------------------------------------------
 # A flat parquet snapshot makes every keyed MERGE a whole-table rewrite:
 # a full-table write at 100 TB for a 0.01% change batch.  Laying the
@@ -200,18 +200,34 @@ def merge_plan(target, changes, key: str, delete_col: str):
 # bucketing.py's metastore layout) lets MERGE rewrite ONLY the buckets
 # whose keys changed: the other bucket directories are never read,
 # never written, byte-identical after the merge — the file-level
-# pruning that makes Iceberg copy-on-write affordable.  This is the one
-# keyed MERGE; the streaming CDC sink (run_merge_stream) commits every
-# micro-batch through it.
+# pruning that makes Iceberg copy-on-write affordable.  It is the one
+# bucketed layout: checkpoint staging (lineage), MERGE change batches
+# and MERGE targets (streaming.run_merge_stream) all use it.
 
 #: directory partition column carrying the bucket id (key=value layout)
 BUCKET_COL = "_bucket"
-_BUCKET_MANIFEST = "_buckets.json"
+#: the change batch's tombstone flag (:func:`merge_upsert_cow`)
+DELETE_COL = "_deleted"
+BUCKET_MANIFEST = "_buckets.json"
 
 
-def _bucket_expr(key: str, n_buckets: int):
+def bucket_expr(key: str, n_buckets: int):
+    """The bucket id of column ``key``: ``pmod(xxhash64(string(key)), n_buckets)``."""
     return F.pmod(F.xxhash64(F.col(key).cast("string")),
                   F.lit(n_buckets)).cast("int")
+
+
+def write_manifest(path: str, manifest: dict) -> None:
+    """Write ``manifest`` as JSON at ``path`` by atomic replace: a
+    reader or a restart never sees a torn manifest."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, path)
+
+
+def _bucket_dir(path: str, b: int) -> str:
+    return os.path.join(path, f"{BUCKET_COL}={b}")
 
 
 def write_bucketed_snapshot(
@@ -223,132 +239,130 @@ def write_bucketed_snapshot(
 ) -> dict:
     """Write ``df`` as a hash-bucketed directory snapshot.
 
-    Layout: ``<path>/_bucket=K/*.parquet`` with
-    ``K = pmod(xxhash64(key), n_buckets)``, plus a ``_buckets.json``
-    manifest pinning (key, n_buckets) so every later MERGE computes the
-    SAME bucket assignment — the co-location contract lives with the
-    data, not in call sites.  Reading the snapshot is plain
-    ``spark.read.parquet(path)`` (drop :data:`BUCKET_COL`, it is
-    derivable).  Bucket count is a layout constant sized once per table
+    Layout: ``<path>/_bucket=K/*.parquet`` with ``K =``
+    :func:`bucket_expr`, plus a ``_buckets.json`` manifest, written
+    after the data by atomic replace, pinning the key, ``n_buckets`` and
+    ``df``'s schema: every later MERGE computes the SAME bucket
+    assignment, and :func:`read_bucketed_snapshot` never infers the
+    schema.  Bucket count is a layout constant sized once per table
     family (buckets of several hundred MB at 100 TB), never per batch.
     An empty ``df`` writes no bucket directory, only the manifest.
     """
-    df.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets)) \
+    df.withColumn(BUCKET_COL, bucket_expr(key, n_buckets)) \
         .write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-    with open(os.path.join(path, _BUCKET_MANIFEST), "w") as f:
-        json.dump({"key": key, "n_buckets": n_buckets}, f)
+    write_manifest(os.path.join(path, BUCKET_MANIFEST), {
+        "key": key, "n_buckets": n_buckets, "schema": df.schema.jsonValue(),
+    })
     return {"path": path, "n_buckets": n_buckets, "key": key}
 
 
-def read_bucketed_snapshot(spark: SparkSession, path: str):
-    """Read a bucketed snapshot back as data rows (bucket col dropped)."""
-    return spark.read.parquet(path).drop(BUCKET_COL)
-
-
-def bucket_layout(path: str) -> tuple[str, int]:
-    """The (key, n_buckets) the manifest of the snapshot at ``path`` pins.
-
-    A directory without a manifest is a flat parquet table (the layout
-    ``run_merge_stream`` wrote before it merged bucket by bucket): that
-    raises ``ValueError`` naming the path, since it must be
-    re-snapshotted with :func:`write_bucketed_snapshot` first.
-    """
-    manifest = os.path.join(path, _BUCKET_MANIFEST)
+def _manifest(path: str) -> dict:
+    """The manifest of the snapshot at ``path``; ``ValueError`` for a
+    flat parquet table (no manifest) or a manifest from before it
+    recorded the schema: re-snapshot those first."""
+    manifest = os.path.join(path, BUCKET_MANIFEST)
+    fix = "re-snapshot it with maintenance.write_bucketed_snapshot"
     if os.path.isdir(path) and not os.path.exists(manifest):
         raise ValueError(
-            f"{path} has no {_BUCKET_MANIFEST}, so it is not a bucketed "
-            "snapshot (a flat parquet table?); re-snapshot it with "
-            "maintenance.write_bucketed_snapshot before merging into it"
+            f"{path} has no {BUCKET_MANIFEST}, so it is not a bucketed "
+            f"snapshot (a flat parquet table?); {fix}"
         )
     with open(manifest) as f:
         meta = json.load(f)
+    if "schema" not in meta:
+        raise ValueError(f"{manifest} records no schema; {fix}")
+    return meta
+
+
+def bucket_layout(path: str) -> tuple[str, int]:
+    """The (key, n_buckets) the manifest of the snapshot at ``path`` pins."""
+    meta = _manifest(path)
     return meta["key"], int(meta["n_buckets"])
 
 
-def merge_upsert_cow(
-    spark: SparkSession,
-    path: str,
-    changes,
-    delete_col: str = "_deleted",
-) -> dict:
+def read_bucketed_snapshot(spark: SparkSession, path: str, buckets=None):
+    """The data rows of the snapshot at ``path``, read with the
+    manifest's schema: no inference job, and a snapshot with no bucket
+    directory reads as 0 rows.  ``buckets`` reads only those bucket
+    directories (an absent one holds no rows), each by its path: a root
+    read lists every bucket directory, in a Spark job above 32 of them.
+    """
+    reader = spark.read.schema(StructType.fromJson(_manifest(path)["schema"]))
+    if buckets is None:
+        return reader.parquet(path).drop(BUCKET_COL)
+    dirs = [_bucket_dir(path, b) for b in buckets]
+    return reader.parquet(*(d for d in dirs if os.path.isdir(d)))
+
+
+def merge_upsert_cow(spark: SparkSession, path: str, changes) -> dict:
     """MERGE INTO analog: apply one keyed change batch — full-row
     upserts plus tombstone deletes — to a bucketed snapshot, rewriting
     ONLY the buckets whose keys changed (Iceberg copy-on-write with
     file-level pruning).
 
-    ``changes`` carries the target's full schema plus a boolean
-    ``delete_col``: rows with it true remove their key from the table;
-    the rest — including rows where the flag is NULL — replace the
-    matching target row wholesale (or insert when the key is new).
+    ``changes`` carries the target's full schema plus the boolean
+    :data:`DELETE_COL`: rows with it true remove their key from the
+    table; the rest — including rows where the flag is NULL — replace
+    the matching target row wholesale (or insert when the key is new).
     Keys must be unique within a batch — enforce upstream;
     last-writer-wins dedup belongs to the producer.  The key and the
     bucket count come from the snapshot's manifest (:func:`bucket_layout`).
     Steps:
 
     1. recover any bucket left mid-swap by a previous crash,
-    2. ONE ``groupBy(bucket)`` aggregate over ``changes`` (at most
-       ``n_buckets`` rows) gives the changed-bucket set and the
-       change, delete and upsert counts; no changed bucket (an empty
-       batch) returns here,
-    3. read ONLY those bucket directories, merge (:func:`merge_plan`),
-       write the result partitioned by the same bucket expression to a
-       temp dir,
+    2. write ``changes`` ONCE, as a bucketed snapshot on the table's
+       key and bucket count (``<path>.__merge_changes``): the change
+       and delete counts are observed on that write, and its
+       ``_bucket=K`` directories are the changed buckets.  No changed
+       bucket (an empty batch) skips steps 3 and 4,
+    3. read ONLY those bucket directories of the table, merge them with
+       the staged changes (:func:`merge_plan`), write the result as a
+       bucketed snapshot to a temp dir,
     4. swap each changed bucket directory with the compaction
        two-rename protocol (crash in any window is resolved by
        :func:`recover_compaction` per bucket).
 
-    Unchanged buckets are untouched — not read, not rewritten; the
-    test pins their files byte-identical.  A crash between bucket
-    swaps leaves SOME buckets merged: per-bucket swaps are atomic, the
-    table is never torn within a bucket, and re-running the SAME keyed
-    change batch converges (keyed MERGE is replay-idempotent — the
-    already-merged buckets merge to themselves), which is exactly the
-    recovery contract the streaming CDC sink (run_merge_stream) relies
-    on for replayed micro-batches.
+    ``changes`` is evaluated once, by the write of step 2.  Unchanged
+    buckets are not read, not rewritten; the test pins their files
+    byte-identical.  A crash between bucket swaps leaves SOME buckets
+    merged: per-bucket swaps are atomic, the table is never torn within
+    a bucket, and re-running the SAME keyed change batch converges
+    (keyed MERGE is replay-idempotent — the already-merged buckets
+    merge to themselves), which is exactly the recovery contract the
+    streaming CDC sink (run_merge_stream) relies on for replayed
+    micro-batches.
     """
     key, n_buckets = bucket_layout(path)
 
-    # 1. self-recover every bucket dir (cheap: n_buckets stat calls) and
-    # drop a stale temp dir from a run that crashed before its swaps
+    # 1. self-recover every bucket dir (cheap: n_buckets stat calls); a
+    # stale temp dir is replaced by the overwrite of step 3
     for b in range(n_buckets):
-        recover_compaction(os.path.join(path, f"{BUCKET_COL}={b}"))
+        recover_compaction(_bucket_dir(path, b))
+    staged = path.rstrip("/") + ".__merge_changes"
     tmp = path.rstrip("/") + ".__merge_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
 
-    # 2. changed buckets and change counts from one aggregate: bounded
-    # by n_buckets, a legitimate driver set
-    per_bucket = changes.groupBy(_bucket_expr(key, n_buckets).alias("b")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(_is_delete(delete_col).cast("long")).alias("d"),
-    ).collect()
-    changed = sorted(r["b"] for r in per_bucket)
-    n = sum(r["n"] for r in per_bucket)
-    d = sum(r["d"] for r in per_bucket)
+    # 2. the change batch, bucketed once; its counts observed on the write
+    obs = Observation()
+    write_bucketed_snapshot(spark, changes.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.count_if(_is_delete()).alias("d"),
+    ), staged, key, n_buckets)
+    n, d = obs.get["n"], obs.get["d"]
+    changed = sorted(int(d.split("=")[1]) for d in os.listdir(staged)
+                     if d.startswith(f"{BUCKET_COL}="))
     stats = {
         "path": path, "n_buckets": n_buckets, "buckets_rewritten": changed,
         "n_changes": n, "n_deletes": d, "n_upserts": n - d,
     }
-    if not changed:
-        return stats
 
-    # 3. merge ONLY the changed buckets' rows
-    src_dirs = [
-        os.path.join(path, f"{BUCKET_COL}={b}")
-        for b in changed
-        if os.path.isdir(os.path.join(path, f"{BUCKET_COL}={b}"))
-    ]
-    if src_dirs:
-        target = spark.read.parquet(*src_dirs)
-    else:  # all-new buckets (first rows hashing there)
-        target = changes.drop(delete_col).limit(0)
-    merged = merge_plan(target, changes, key, delete_col)
-    merged.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets)) \
-        .write.partitionBy(BUCKET_COL).mode("overwrite").parquet(tmp)
-
-    # 4. per-bucket atomic swaps (two-rename protocol per bucket);
-    # partitionBy writes no directory for a bucket emptied by deletes
-    for b in changed:
-        part = f"{BUCKET_COL}={b}"
-        _swap_in(os.path.join(tmp, part), os.path.join(path, part))
+    # 3. merge ONLY the changed buckets' rows; 4. per-bucket atomic
+    # swaps (two-rename protocol per bucket).  The temp snapshot has no
+    # directory for a bucket emptied by deletes, so its swap removes it
+    if changed:
+        merged = merge_plan(read_bucketed_snapshot(spark, path, changed),
+                            read_bucketed_snapshot(spark, staged), key)
+        write_bucketed_snapshot(spark, merged, tmp, key, n_buckets)
+        for b in changed:
+            _swap_in(_bucket_dir(tmp, b), _bucket_dir(path, b))
     shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(staged, ignore_errors=True)
     return stats

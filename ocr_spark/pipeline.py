@@ -33,7 +33,7 @@ from typing import Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ocr_spark.kernels import find_spans
+from ocr_spark.kernels.extract import DIRECTION_WORDS, DISTANCE_SUFFIXES
 from ocr_spark.synth import CITY_IDS, FN_NAMES
 
 #: Default vocabulary for span marking: the 5 city codenames
@@ -129,9 +130,9 @@ def oversized_conv_ids(df: DataFrame, max_turns: int = MAX_RENDER_TURNS) -> Data
 # ---------------------------------------------------------------------------
 
 def salted_repartition(
-    df: DataFrame, num_partitions: int, key: str = "conv_id", salt_mod: int = 16
+    df: DataFrame, num_partitions: int, salt_mod: int = 16
 ) -> DataFrame:
-    """Repartition by (key, salt) to spread skewed keys (north_rule).
+    """Repartition by (conv_id, salt) to spread skewed conversations (north_rule).
 
     The salt is key-derived (``xxhash64(turn_idx)``), never random, so
     placement is deterministic under retries.  ``sortWithinPartitions``
@@ -139,8 +140,8 @@ def salted_repartition(
     """
     salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salt_mod))
     return (
-        df.repartition(num_partitions, F.col(key), salt)
-        .sortWithinPartitions(key, "turn_idx")
+        df.repartition(num_partitions, F.col("conv_id"), salt)
+        .sortWithinPartitions("conv_id", "turn_idx")
     )
 
 
@@ -198,24 +199,6 @@ def _extract_udfs(sc, vocab: tuple):
 # native per-turn classify (no Python, no shuffle)
 # ---------------------------------------------------------------------------
 
-DIRECTION_WORDS = [" North", " South", " East", " West"]
-DISTANCE_SUFFIXES = ["km", "ilometers", "mi", "iles"]
-
-
-def direction_flag(text: Column) -> Column:
-    c = F.lit(False)
-    for w in DIRECTION_WORDS:
-        c = c | text.contains(w)
-    return c
-
-
-def distance_flag(text: Column) -> Column:
-    c = F.lit(False)
-    for sfx in DISTANCE_SUFFIXES:
-        c = c | text.endswith(sfx)
-    return c
-
-
 def classify_turns(df: DataFrame) -> DataFrame:
     """Per-turn block classification + answer extraction, JVM-only.
 
@@ -223,11 +206,15 @@ def classify_turns(df: DataFrame) -> DataFrame:
     X2 (utils.py:131-147): whole-stage-codegen friendly, zero shuffle,
     scales linearly with input splits.  ``answer`` uses the
     first-A-E-after-anything semantics applied to the bare turn text
-    (assistant turns are the completion by construction).
+    (assistant turns are the completion by construction).  The word
+    lists are the X8 kernel's (``kernels.extract``).
     """
+    text = F.col("text")
     is_assistant = F.col("role") == "assistant"
-    has_dir = direction_flag(F.col("text"))
-    has_dist = distance_flag(F.col("text"))
+    has_dir = functools.reduce(
+        lambda c, w: c | text.contains(w), DIRECTION_WORDS, F.lit(False))
+    has_dist = functools.reduce(
+        lambda c, sfx: c | text.endswith(sfx), DISTANCE_SUFFIXES, F.lit(False))
     block_class = (
         F.when(~is_assistant, F.lit("other"))
         .when(has_dir & ~has_dist, F.lit("direction"))

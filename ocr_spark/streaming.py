@@ -270,12 +270,11 @@ def run_clean_stream(
     input_dir: str,
     output_dir: str,
     watermark: str | None = None,
-    max_files: int = 1,
 ) -> int:
     """Drain a turn drop directory through the streaming clean pipeline
     into ``output_dir`` (same layout/contract as
     :func:`run_dedup_stream`); returns rows emitted by THIS drain."""
-    stream = read_transcript_stream(spark, input_dir, max_files=max_files)
+    stream = read_transcript_stream(spark, input_dir, max_files=1)
     return _drain_rows(stream_clean(stream, watermark), output_dir)
 
 
@@ -284,17 +283,17 @@ def run_dedup_stream(
     input_dir: str,
     output_dir: str,
     watermark: str | None = None,
-    max_files: int = 1,
 ) -> int:
     """Drain a turn drop directory through the streaming exact-dedup
-    into ``output_dir`` (layout as :func:`_drain`: ``data/batch_id=<id>``
-    rows and an ``n_turns`` lineage row per micro-batch), with the
-    state checkpoint under ``output_dir/_checkpoint`` so repeated
-    drains keep suppressing previously-seen content.  Returns the
+    into ``output_dir``, one micro-batch per drop file (layout as
+    :func:`_drain`: ``data/batch_id=<id>`` rows and an ``n_turns``
+    lineage row per micro-batch), with the state checkpoint under
+    ``output_dir/_checkpoint`` so repeated drains keep suppressing
+    previously-seen content.  Returns the
     number of rows emitted by THIS drain (not the cumulative total):
     the sum of its micro-batches' observed ``n_turns``.
     """
-    stream = read_transcript_stream(spark, input_dir, max_files=max_files)
+    stream = read_transcript_stream(spark, input_dir, max_files=1)
     return _drain_rows(stream_dedup_exact(stream, watermark), output_dir)
 
 
@@ -355,19 +354,19 @@ def run_merge_stream(
     input_dir: str,
     table_path: str,
     key: str = "conv_id",
-    delete_col: str = "tool",
 ) -> StreamingQuery:
     """CDC-style streaming MERGE sink: drain a stream of keyed change
     rows and apply each micro-batch to a bucketed snapshot with
     :func:`ocr_spark.maintenance.merge_upsert_cow` (upsert on ``key``,
-    tombstone delete where ``delete_col == 'DELETE'``), rewriting only
-    the buckets the batch touches.
+    tombstone delete where ``tool == 'DELETE'``), rewriting only the
+    buckets the batch touches.
 
     The table is ``_bucket=K/`` directories plus ``_buckets.json``; read
     it with ``maintenance.read_bucketed_snapshot``.  A missing table is
-    seeded empty (16 buckets on ``key``, no bucket directory yet); a
-    flat parquet table, or one bucketed on another key, raises
-    ``ValueError`` before the query starts.
+    seeded empty (16 buckets on ``key``, no bucket directory yet; it
+    reads as 0 rows of ``TRANSCRIPT_SCHEMA``); a flat parquet table, or
+    one bucketed on another key, raises ``ValueError`` before the query
+    starts.
 
     Replay safety without batch_id-keyed directories: ``foreachBatch``
     is at-least-once, and a keyed MERGE is IDEMPOTENT — re-applying the
@@ -377,9 +376,10 @@ def run_merge_stream(
     is the streaming WAL's (file-source offsets), so last-writer-wins
     follows arrival order.  The change schema is the transcript shape;
     a production CDC feed would carry an explicit op column — the
-    ``delete_col == 'DELETE'`` encoding keeps the synthetic schema.
+    ``tool == 'DELETE'`` encoding keeps the synthetic schema.
     """
     from ocr_spark.maintenance import (
+        DELETE_COL,
         bucket_layout,
         merge_upsert_cow,
         write_bucketed_snapshot,
@@ -403,9 +403,7 @@ def run_merge_stream(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        with_flag = latest.withColumn(
-            "_deleted", F.col(delete_col) == F.lit("DELETE")
-        )
+        with_flag = latest.withColumn(DELETE_COL, F.col("tool") == F.lit("DELETE"))
         merge_upsert_cow(batch_df.sparkSession, table_path, with_flag)
 
     q = (

@@ -10,7 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.lineage import CheckpointedExtraction, bucket_of, read_manifest
+from ocr_spark.lineage import CheckpointedExtraction, read_manifest
+from ocr_spark.maintenance import bucket_expr
 from ocr_spark.pipeline import MAX_RENDER_TURNS, extract_conversations
 from ocr_spark.synth import transcripts
 
@@ -101,7 +102,7 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
             F.sum((F.col("status") == "ok").cast("long")).alias("ok"),
             F.sum((F.col("status") == "fallback").cast("long")).alias("fb"),
         )
-        .withColumn("bucket", bucket_of(F.col("conv_id"), N_BUCKETS))
+        .withColumn("bucket", bucket_expr("conv_id", N_BUCKETS))
     )
     want = {
         r["bucket"]: tuple(r[c] for c in cols)
@@ -125,17 +126,44 @@ def test_lineage_counters_conserve_turns(spark, tmp_path):
     assert all(r["wall_sec"] >= 0 for r in rows)
 
 
-def test_commit_bucket_is_two_jobs_without_persist(spark, ckpt, count_jobs):
-    """Once the run has read its staged table (the schema inference is
-    one job per run), a bucket commit runs the data write and the
-    lineage row write and nothing else: its counters are observed on
-    the data write, with no cached output and no counter job."""
+def test_commit_bucket_is_two_jobs_without_persist(spark, ckpt, count_jobs, tmp_path):
+    """A bucket commit on a fresh object runs the data write and the
+    lineage row write and nothing else: the bucket is read with the
+    staged manifest's schema (no inference job), by its own directory
+    (no listing job, also at 64 buckets), and its counters are observed
+    on the data write, with no cached output and no counter job."""
     persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    ckpt._staged_table()
-    st, commit_jobs = count_jobs("lineage-commit", lambda: ckpt._commit_bucket(0))
+    fresh = CheckpointedExtraction(spark, ckpt.output_dir, n_buckets=N_BUCKETS)
+    st, commit_jobs = count_jobs("lineage-commit", lambda: fresh._commit_bucket(0))
     assert commit_jobs == 2
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted_before
-    assert st.n_turns == ckpt.read_output().count() > 0
+    assert st.n_turns == fresh.read_output().count() > 0
+
+    wide = CheckpointedExtraction(spark, str(tmp_path / "wide"), n_buckets=64)
+    wide.stage_by_bucket(transcripts(spark, N_CONVS, seed=42))
+    fresh = CheckpointedExtraction(spark, wide.output_dir, n_buckets=64)
+    st, commit_jobs = count_jobs("lineage-commit-64", lambda: fresh._commit_bucket(0))
+    assert commit_jobs == 2
+    assert st.n_turns == fresh.read_output().count() > 0
+
+
+def test_run_job_count(spark, ckpt, count_jobs):
+    """An 8-bucket run is its commits' jobs and nothing else: 2 per
+    bucket, no per-run read of the staged table."""
+    fresh = CheckpointedExtraction(spark, ckpt.output_dir, n_buckets=N_BUCKETS)
+    stats, jobs = count_jobs("lineage-run", fresh.run)
+    assert len(stats) == N_BUCKETS
+    assert jobs == 2 * N_BUCKETS
+
+
+def test_restart_with_other_bucket_count_raises(spark, ckpt):
+    """Input staged in 8 buckets and then run with 2 would commit only
+    staged buckets 0 and 1 and report success: the run refuses it
+    before committing anything."""
+    other = CheckpointedExtraction(spark, ckpt.output_dir, n_buckets=2)
+    with pytest.raises(ValueError, match="n_buckets=8"):
+        other.run()
+    assert read_manifest(ckpt.output_dir)["committed"] == []
 
 
 def test_idempotent_rerun_is_noop(spark, ckpt):

@@ -175,9 +175,7 @@ def test_merge_upsert_target_never_shuffles(spark, tmp_path):
     changes = spark.createDataFrame(
         [(1, "x", False)], "doc_id long, text string, _deleted boolean"
     )
-    merged = merge_plan(
-        spark.read.parquet(path), changes, "doc_id", "_deleted"
-    )
+    merged = merge_plan(spark.read.parquet(path), changes, "doc_id")
     import contextlib, io
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -301,6 +299,27 @@ def test_merge_into_flat_table_raises(spark, tmp_path):
     assert not os.path.exists(other + "__merge_ckpt")
 
 
+def test_snapshot_without_schema_raises(spark, tmp_path):
+    """A manifest written before manifests recorded the schema has no
+    inference fallback: reading or merging raises a ValueError that
+    names write_bucketed_snapshot."""
+    from ocr_spark.maintenance import (
+        BUCKET_MANIFEST,
+        merge_upsert_cow,
+        read_bucketed_snapshot,
+        write_manifest,
+    )
+
+    path = _cow_fixture(spark, tmp_path, n=4, n_buckets=2)
+    write_manifest(os.path.join(path, BUCKET_MANIFEST), {"key": "doc_id", "n_buckets": 2})
+    with pytest.raises(ValueError, match="write_bucketed_snapshot"):
+        read_bucketed_snapshot(spark, path)
+    changes = spark.createDataFrame(
+        [(1, "row1-v2", False)], "doc_id long, text string, _deleted boolean")
+    with pytest.raises(ValueError, match="write_bucketed_snapshot"):
+        merge_upsert_cow(spark, path, changes)
+
+
 def test_cow_merge_empty_change_batch_touches_nothing(spark, tmp_path):
     from ocr_spark.maintenance import merge_upsert_cow
 
@@ -318,7 +337,7 @@ def test_cow_merge_bucket_emptied_by_deletes(spark, tmp_path):
     buckets untouched."""
     from ocr_spark.maintenance import (
         BUCKET_COL,
-        _bucket_expr,
+        bucket_expr,
         merge_upsert_cow,
         read_bucketed_snapshot,
     )
@@ -331,7 +350,7 @@ def test_cow_merge_bucket_emptied_by_deletes(spark, tmp_path):
         r["doc_id"]
         for r in spark.createDataFrame(
             [(i,) for i in range(50)], "doc_id long"
-        ).withColumn("b", _bucket_expr("doc_id", 4))
+        ).withColumn("b", bucket_expr("doc_id", 4))
         .filter(F.col("b") == 0).collect()
     ]
     assert ids

@@ -221,7 +221,7 @@ def test_stream_dedup_exact_across_batches_and_restarts(spark, dirs):
     _write_jsonl(os.path.join(inp, "a.jsonl"), a)
     _write_jsonl(os.path.join(inp, "b.jsonl"), b)
 
-    emitted = run_dedup_stream(spark, inp, out, max_files=1)
+    emitted = run_dedup_stream(spark, inp, out)
     got = spark.read.parquet(os.path.join(out, "data"))
     distinct_texts = {(r["role"], r["text"]) for r in got.collect()}
     want = {(r["role"], r["text"]) for r in map(dict, a + b)}
@@ -229,12 +229,12 @@ def test_stream_dedup_exact_across_batches_and_restarts(spark, dirs):
     assert emitted == got.count() == len(want)
     assert got.groupBy("fp").count().filter(F.col("count") > 1).count() == 0
     seen = _check_drain_lineage(spark, out, emitted, set())
-    assert seen == {0, 1}                    # max_files=1: one batch per file
+    assert seen == {0, 1}                    # one micro-batch per file
 
     # restart: replay old content + one genuinely new turn
     c = _turns("c4", 0) + _turns("c5", 2)
     _write_jsonl(os.path.join(inp, "c.jsonl"), c)
-    emitted2 = run_dedup_stream(spark, inp, out, max_files=1)
+    emitted2 = run_dedup_stream(spark, inp, out)
     assert emitted2 == 1                     # only the variant-2 answer is new
     assert spark.read.parquet(os.path.join(out, "data")).count() == len(want) + 1
     assert _check_drain_lineage(spark, out, emitted2, seen) == {0, 1, 2}
@@ -346,14 +346,14 @@ def test_stream_clean_normalize_before_dedup(spark, dirs):
     }
     inp, out = dirs
     _write_jsonl(os.path.join(inp, "a.jsonl"), [mk("c0", raw)])
-    emitted = run_clean_stream(spark, inp, out, max_files=1)
+    emitted = run_clean_stream(spark, inp, out)
     assert emitted == 1
     seen = _check_drain_lineage(spark, out, emitted, set())
 
     # second drain: the byte-variant is suppressed, the fresh one emits
     _write_jsonl(os.path.join(inp, "b.jsonl"),
                  [mk("c1", variant), mk("c2", fresh)])
-    emitted2 = run_clean_stream(spark, inp, out, max_files=1)
+    emitted2 = run_clean_stream(spark, inp, out)
     assert emitted2 == 1
     assert len(_check_drain_lineage(spark, out, emitted2, seen)) == len(seen) + 1
     got = spark.read.parquet(os.path.join(out, "data"))
@@ -505,8 +505,10 @@ def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
     batch 2's update wins over batch 1's insert, the DELETE tombstone
     removes its key, and replaying the final change file by hand (the
     at-least-once case) leaves the table unchanged (MERGE idempotence).
-    A micro-batch runs at most 5 Spark jobs into a fresh table and at
-    most 8 into existing buckets."""
+    A micro-batch runs 4 Spark jobs into a fresh table and into
+    existing buckets alike: the dedup window's map stage, the change
+    batch's one bucketed write (its counts observed there), the
+    broadcast of the staged change keys and the merged write."""
     from ocr_spark.maintenance import merge_upsert_cow, read_bucketed_snapshot
     from ocr_spark.streaming import run_merge_stream
 
@@ -527,11 +529,11 @@ def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
 
     # one drain per file, so batch 2 is applied after batch 1 commits
-    assert drain("b0.jsonl", [change("c1", 0, "v1"), change("c2", 0, "other")]) <= 5
+    assert drain("b0.jsonl", [change("c1", 0, "v1"), change("c2", 0, "other")]) == 4
     assert drain("b1.jsonl",                     # c1's and c2's buckets exist
                  [change("c1", 1, "v2"),              # update c1
                   change("c3", 0, "new"),             # insert c3
-                  change("c2", 1, None, tool="DELETE")]) <= 8  # delete c2
+                  change("c2", 1, None, tool="DELETE")]) == 4  # delete c2
     got = {r["conv_id"]: r["text"] for r in read_bucketed_snapshot(spark, tbl).collect()}
     assert got == {"c1": "v2", "c3": "new"}
 
@@ -548,6 +550,30 @@ def test_run_merge_stream_cdc_upsert_delete(spark, dirs, tmp_path):
     merge_upsert_cow(spark, tbl, replay)
     again = {r["conv_id"]: r["text"] for r in read_bucketed_snapshot(spark, tbl).collect()}
     assert again == got
+
+
+def test_run_merge_stream_seeded_empty_table_reads(spark, dirs, tmp_path):
+    """The table run_merge_stream seeds before any change row arrives
+    has no bucket directory: it reads as 0 rows with the transcript
+    columns, and an all-delete micro-batch into it writes no bucket and
+    leaves it readable."""
+    from ocr_spark.maintenance import BUCKET_COL, read_bucketed_snapshot
+    from ocr_spark.streaming import TRANSCRIPT_SCHEMA, run_merge_stream
+
+    inp, _ = dirs
+    tbl = str(tmp_path / "seeded")
+    run_merge_stream(spark, inp, tbl)            # no input yet: seeds only
+    seeded = read_bucketed_snapshot(spark, tbl)
+    assert seeded.schema == TRANSCRIPT_SCHEMA and seeded.count() == 0
+
+    _write_jsonl(os.path.join(inp, "del.jsonl"), [
+        {"conv_id": c, "turn_idx": 0, "role": "assistant", "text": None,
+         "tool": "DELETE", "ts": "2024-01-01T00:00:00"} for c in ("c1", "c2")])
+    q = run_merge_stream(spark, inp, tbl)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 2
+    assert not [d for d in os.listdir(tbl) if d.startswith(f"{BUCKET_COL}=")]
+    after = read_bucketed_snapshot(spark, tbl)
+    assert after.schema == TRANSCRIPT_SCHEMA and after.count() == 0
 
 
 def test_composed_streaming_job_end_to_end_kill_resume(spark, dirs, tmp_path):
