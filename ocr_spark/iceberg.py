@@ -30,6 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark.lineage import LINEAGE_SCHEMA
+from ocr_spark.pipeline import EXTRACT_SCHEMA
+
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:
     """True when the iceberg-spark runtime jar is loadable by SPARK.
@@ -114,14 +117,13 @@ class ParquetSnapshotWriter(SnapshotWriter):
             os.path.join(self.output_dir, "data", f"bucket={b}")
             for b in committed
         ]
-        return self.spark.read.parquet(*dirs)
+        return self.spark.read.schema(EXTRACT_SCHEMA).parquet(*dirs)
 
     def read_lineage(self) -> DataFrame:
-        # mergeSchema: a run resumed across a lineage-schema widening
-        # (e.g. round 4 added n_rerouted) has old- and new-width files
-        # side by side; without the merge Spark samples ONE footer and
-        # the new column's presence becomes nondeterministic
-        return self.spark.read.option("mergeSchema", "true").parquet(
+        # the declared schema, not inference: no footer job, and a run
+        # resumed across a lineage-schema widening (round 4 added
+        # n_rerouted) reads the older files' missing column as null
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
             os.path.join(self.output_dir, "lineage")
         )
 

@@ -48,6 +48,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ocr_spark.maintenance import (
     BUCKET_MANIFEST,
@@ -94,6 +95,17 @@ def observe_lineage(df: DataFrame) -> tuple[DataFrame, Observation]:
         F.count_if(status == "fallback").alias("n_fallback"),
         F.count_if(turn == MAX_RENDER_TURNS).alias("n_rerouted"),
     ), obs
+
+
+#: a lineage row: the :func:`observe_lineage` counters, then ``wall_sec``
+#: and ``committed_at``.  Lineage tables are read with it, so files from
+#: before a counter existed read that column as null.
+LINEAGE_SCHEMA = StructType([
+    *(StructField(c, LongType())
+      for c in ("n_convs", "n_turns", "n_ok", "n_fallback", "n_rerouted")),
+    StructField("wall_sec", DoubleType()),
+    StructField("committed_at", DoubleType()),
+])
 
 
 def lineage_row(spark: SparkSession, counters: dict, wall_sec: float) -> DataFrame:
@@ -146,7 +158,8 @@ class CheckpointedExtraction:
         staged/_bucket=<i>/...    input staged by bucket (one-time), a
         staged/_buckets.json      bucketed snapshot on conv_id
         data/bucket=<i>/...       extracted output per committed bucket
-        lineage/...               parquet metrics table, appended per commit
+        lineage/bucket=<i>/...    one-row lineage table per bucket,
+                                  overwritten by each commit of it
 
     Input contract: ``(conv_id, turn_idx, role, text)`` rows with each
     conversation's ``turn_idx`` numbered 0..n-1 with no gaps.  The
@@ -248,67 +261,11 @@ class CheckpointedExtraction:
         return self.writer.read_output(m["committed"])
 
     def read_lineage(self) -> DataFrame:
-        """Per-bucket lineage rows; ``bucket`` comes back as the
+        """Lineage rows of the committed buckets (manifest-filtered, like
+        :meth:`read_output`): the row a crash left between its write and
+        the manifest update is not read.  ``bucket`` comes back as the
         discovered partition column (one row per bucket guaranteed by
         the per-bucket overwrite in the parquet writer)."""
-        return self.writer.read_lineage()
+        committed = read_manifest(self.output_dir)["committed"]
+        return self.writer.read_lineage().filter(F.col("bucket").isin(committed))
 
-
-# ===========================================================================
-# S4: step-stamped checkpoint sink + manifest-filtered scan
-# ===========================================================================
-
-class StepCheckpoint:
-    """Step-stamped artifact checkpointing with resume-by-latest-step.
-
-    The reference saves artifacts under ``step_{N}/`` during long runs
-    (train_cities_steering.py:723-727, train_functions_steering.py:401-406)
-    and resumes by loading the latest step's files
-    (train_lee.py:199-203, analyse_depth.py:36-41, analyse_vectors.py:36-43).
-    Spark-side model: each step is one parquet directory written first,
-    then committed by an atomic manifest rename — a reader/restart only
-    ever sees fully-written steps, so a kill between the parquet write
-    and the commit leaves an orphan directory that the next save of the
-    same step simply overwrites (the same unreferenced-file semantics
-    as the bucket commits above).
-    """
-
-    def __init__(self, spark: SparkSession, ckpt_dir: str):
-        self.spark = spark
-        self.ckpt_dir = ckpt_dir
-        os.makedirs(ckpt_dir, exist_ok=True)
-
-    def _step_dir(self, step: int) -> str:
-        return os.path.join(self.ckpt_dir, f"step_{step}")
-
-    def _read_steps(self) -> list[int]:
-        m = read_manifest(self.ckpt_dir)
-        return sorted(m.get("steps", []))
-
-    def save(self, df: DataFrame, step: int) -> None:
-        """Write ``step_{N}`` parquet, then commit it to the manifest."""
-        df.write.mode("overwrite").parquet(self._step_dir(step))
-        m = read_manifest(self.ckpt_dir)
-        m["steps"] = sorted(set(m.get("steps", [])) | {step})
-        write_manifest(_manifest_path(self.ckpt_dir), m)
-
-    def steps(self) -> list[int]:
-        """Committed step ids (ascending)."""
-        return self._read_steps()
-
-    def latest_step(self) -> int | None:
-        steps = self._read_steps()
-        return steps[-1] if steps else None
-
-    def load(self, step: int) -> DataFrame:
-        if step not in self._read_steps():
-            raise ValueError(f"step {step} is not committed in {self.ckpt_dir}")
-        return self.spark.read.parquet(self._step_dir(step))
-
-    def load_latest(self) -> DataFrame:
-        """Resume point: the newest COMMITTED step (uncommitted orphan
-        directories from a crash are invisible here)."""
-        step = self.latest_step()
-        if step is None:
-            raise ValueError(f"no committed steps in {self.ckpt_dir}")
-        return self.load(step)

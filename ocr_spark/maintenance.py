@@ -196,8 +196,7 @@ def merge_plan(target, changes, key: str):
 # A flat parquet snapshot makes every keyed MERGE a whole-table rewrite:
 # a full-table write at 100 TB for a 0.01% change batch.  Laying the
 # table out as hash-bucket DIRECTORIES (the directory analog of
-# Iceberg's bucket partition transform, same pmod(xxhash64) family as
-# bucketing.py's metastore layout) lets MERGE rewrite ONLY the buckets
+# Iceberg's bucket partition transform) lets MERGE rewrite ONLY the buckets
 # whose keys changed: the other bucket directories are never read,
 # never written, byte-identical after the merge — the file-level
 # pruning that makes Iceberg copy-on-write affordable.  It is the one
@@ -318,9 +317,10 @@ def merge_upsert_cow(spark: SparkSession, path: str, changes) -> dict:
     3. read ONLY those bucket directories of the table, merge them with
        the staged changes (:func:`merge_plan`), write the result as a
        bucketed snapshot to a temp dir,
-    4. swap each changed bucket directory with the compaction
-       two-rename protocol (crash in any window is resolved by
-       :func:`recover_compaction` per bucket).
+    4. swap each changed bucket that has a table or a merged directory
+       (``buckets_rewritten``) with the compaction two-rename protocol
+       (crash in any window is resolved by :func:`recover_compaction`
+       per bucket).
 
     ``changes`` is evaluated once, by the write of step 2.  Unchanged
     buckets are not read, not rewritten; the test pins their files
@@ -349,20 +349,24 @@ def merge_upsert_cow(spark: SparkSession, path: str, changes) -> dict:
     n, d = obs.get["n"], obs.get["d"]
     changed = sorted(int(d.split("=")[1]) for d in os.listdir(staged)
                      if d.startswith(f"{BUCKET_COL}="))
-    stats = {
-        "path": path, "n_buckets": n_buckets, "buckets_rewritten": changed,
-        "n_changes": n, "n_deletes": d, "n_upserts": n - d,
-    }
 
     # 3. merge ONLY the changed buckets' rows; 4. per-bucket atomic
     # swaps (two-rename protocol per bucket).  The temp snapshot has no
-    # directory for a bucket emptied by deletes, so its swap removes it
+    # directory for a bucket emptied by deletes, so its swap removes it;
+    # a bucket with neither a target nor a merged directory (deletes of
+    # absent keys) is not rewritten
+    rewritten = []
     if changed:
         merged = merge_plan(read_bucketed_snapshot(spark, path, changed),
                             read_bucketed_snapshot(spark, staged), key)
         write_bucketed_snapshot(spark, merged, tmp, key, n_buckets)
-        for b in changed:
+        rewritten = [b for b in changed if os.path.isdir(_bucket_dir(path, b))
+                     or os.path.isdir(_bucket_dir(tmp, b))]
+        for b in rewritten:
             _swap_in(_bucket_dir(tmp, b), _bucket_dir(path, b))
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(staged, ignore_errors=True)
-    return stats
+    return {
+        "path": path, "n_buckets": n_buckets, "buckets_rewritten": rewritten,
+        "n_changes": n, "n_deletes": d, "n_upserts": n - d,
+    }

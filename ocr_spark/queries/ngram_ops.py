@@ -403,8 +403,8 @@ def exact_substr_excise(spark, sf_dir):
     Plan: shuffle 1 = the span-text window (dup detection, same shape
     as dedup_span_ngram); shuffle 2 = per-doc start-list aggregation
     (sorted int array, tiny rows); shuffle 3 = doc_id equi-join of the
-    start lists back to the corpus — exchange-free when the table is
-    bucketed by doc_id (ocr_spark/bucketing.py).  The
+    start lists back to the corpus — exchange-free when both sides are
+    bucketed by doc_id in a metastore table (``bucketBy``).  The
     coverage test + rebuild are native higher-order expressions
     (exists/filter with index), map-side after the join."""
     return exact_substr_core(_t(spark, sf_dir, "documents"))

@@ -65,6 +65,50 @@ def test_kill_restart_no_reprocessing(spark, ckpt):
         assert lineage2[b] == ts
 
 
+def test_crash_before_manifest_hides_dangling_lineage_row(spark, ckpt, monkeypatch):
+    """A crash after a bucket's lineage row is written but before the
+    manifest commits it leaves a dangling row on disk: read_lineage
+    holds exactly the committed buckets, as read_output does."""
+    import ocr_spark.lineage as lineage
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ckpt.run(fail_after=3)
+
+    def crash(path, manifest):
+        raise OSError("injected crash in write_manifest")
+
+    monkeypatch.setattr(lineage, "write_manifest", crash)
+    resumed = CheckpointedExtraction(spark, ckpt.output_dir, n_buckets=N_BUCKETS)
+    with pytest.raises(OSError, match="injected crash"):
+        resumed.run()
+    committed = read_manifest(ckpt.output_dir)["committed"]
+    assert len(committed) == 3
+    assert sorted(r["bucket"] for r in resumed.read_lineage().collect()) == committed
+
+
+def test_reads_run_no_job(spark, ckpt, count_jobs):
+    """read_output and read_lineage build their frames with declared
+    schemas: no inference or footer job at 8 buckets (above 32 paths
+    Spark lists them in a job), and the lineage frame has the counter
+    columns plus the bucket partition column."""
+    ckpt.run()
+    out, jobs = count_jobs("lineage-read-output", ckpt.read_output)
+    assert jobs == 0
+    lin, jobs = count_jobs("lineage-read-lineage", ckpt.read_lineage)
+    assert jobs == 0
+    assert out.count() > 0 and lin.count() == N_BUCKETS
+    assert lin.columns == [
+        "n_convs", "n_turns", "n_ok", "n_fallback", "n_rerouted",
+        "wall_sec", "committed_at", "bucket",
+    ]
+    # a row written before n_rerouted existed reads it as null
+    old = os.path.join(ckpt.output_dir, "lineage", "bucket=0")
+    lin.filter("bucket = 0").drop("n_rerouted", "bucket").localCheckpoint() \
+        .write.mode("overwrite").parquet(old)
+    got = {r["bucket"]: r["n_rerouted"] for r in ckpt.read_lineage().collect()}
+    assert got[0] is None and all(v is not None for b, v in got.items() if b)
+
+
 def test_resumed_output_equals_single_run(spark, ckpt):
     with pytest.raises(RuntimeError):
         ckpt.run(fail_after=2)
@@ -185,39 +229,6 @@ def test_bucket_count_mismatch_rejected(spark, ckpt):
     other = CheckpointedExtraction(spark, ckpt.output_dir, n_buckets=4)
     with pytest.raises(ValueError, match="n_buckets"):
         other.pending_buckets()
-
-
-def test_step_checkpoint_resume(spark, tmp_path):
-    """S4: step-stamped checkpoint scan (reference train_lee.py:199-203
-    resume-by-latest-step): save two synthetic steps, plant an orphan
-    uncommitted step dir (crash between write and manifest commit),
-    and assert the reader resumes from the latest COMMITTED step."""
-    from ocr_spark.lineage import StepCheckpoint
-
-    ck = StepCheckpoint(spark, str(tmp_path / "ckpt"))
-    with pytest.raises(ValueError, match="no committed steps"):
-        ck.load_latest()
-
-    v0 = spark.createDataFrame([(i, float(i) / 10) for i in range(20)], "cid int, v double")
-    v1 = spark.createDataFrame([(i, float(i) / 5) for i in range(20)], "cid int, v double")
-    ck.save(v0, step=100)
-    ck.save(v1, step=200)
-    assert ck.steps() == [100, 200]
-
-    # crash-orphan: parquet written but never committed to the manifest
-    v1.write.mode("overwrite").parquet(os.path.join(ck.ckpt_dir, "step_300"))
-    assert ck.latest_step() == 200
-
-    # a fresh reader (restart) resumes from step 200, not the orphan
-    resumed = StepCheckpoint(spark, ck.ckpt_dir)
-    got = sorted((r["cid"], r["v"]) for r in resumed.load_latest().collect())
-    want = sorted((r["cid"], r["v"]) for r in v1.collect())
-    assert got == want
-    assert sorted((r["cid"], r["v"]) for r in resumed.load(100).collect()) == sorted(
-        (r["cid"], r["v"]) for r in v0.collect()
-    )
-    with pytest.raises(ValueError, match="not committed"):
-        resumed.load(300)
 
 
 def test_parquet_writer_seam_identical(spark, ckpt):

@@ -321,7 +321,13 @@ def test_snapshot_without_schema_raises(spark, tmp_path):
 
 
 def test_cow_merge_empty_change_batch_touches_nothing(spark, tmp_path):
-    from ocr_spark.maintenance import merge_upsert_cow
+    """An empty batch rewrites no bucket, and neither does a tombstone
+    into an empty snapshot: its bucket has no directory before or after."""
+    from ocr_spark.maintenance import (
+        merge_upsert_cow,
+        read_bucketed_snapshot,
+        write_bucketed_snapshot,
+    )
 
     path = _cow_fixture(spark, tmp_path)
     before = _file_fingerprint(path)
@@ -330,6 +336,15 @@ def test_cow_merge_empty_change_batch_touches_nothing(spark, tmp_path):
     stats = merge_upsert_cow(spark, path, changes)
     assert stats["buckets_rewritten"] == []
     assert _file_fingerprint(path) == before
+
+    empty = str(tmp_path / "empty")
+    write_bucketed_snapshot(spark, changes.drop("_deleted"), empty,
+                            key="doc_id", n_buckets=4)
+    tombstone = spark.createDataFrame(
+        [(1, None, True)], "doc_id long, text string, _deleted boolean")
+    stats = merge_upsert_cow(spark, empty, tombstone)
+    assert stats["buckets_rewritten"] == [] and stats["n_deletes"] == 1
+    assert read_bucketed_snapshot(spark, empty).count() == 0
 
 
 def test_cow_merge_bucket_emptied_by_deletes(spark, tmp_path):
