@@ -4,7 +4,7 @@ One extraction path over the canonical transcript table
 ``(conv_id, turn_idx, role, text, tool, ts)``: :func:`extract_turns`
 (and the flagship :func:`extract_conversations`, which runs it) is a
 scan, the native per-turn classify of :func:`classify_turns`
-(contains / endswith / regexp_extract; mirrors of the kernels X8
+(contains / endswith / regexp_substr; mirrors of the kernels X8
 train_cities.py:69-95 and X2 utils.py:131-147), and ONE
 ``ArrowEvalPython`` stage that evaluates the span (X6,
 utils.py:160-196) and token-count (X13) Arrow UDFs, then the sink.
@@ -200,14 +200,17 @@ def _extract_udfs(sc, vocab: tuple):
 # ---------------------------------------------------------------------------
 
 def classify_turns(df: DataFrame) -> DataFrame:
-    """Per-turn block classification + answer extraction, JVM-only.
+    """Per-turn block classification + answer extraction, JVM-only: the
+    one Spark statement of kernels X8 (train_cities.py:69-95) and X2
+    (utils.py:131-147).
 
-    Native-expression mirror of kernels X8 (train_cities.py:69-95) and
-    X2 (utils.py:131-147): whole-stage-codegen friendly, zero shuffle,
-    scales linearly with input splits.  ``answer`` uses the
-    first-A-E-after-anything semantics applied to the bare turn text
-    (assistant turns are the completion by construction).  The word
-    lists are the X8 kernel's (``kernels.extract``).
+    ``block_class`` and ``answer`` are one projection and ``status``
+    reads those columns in a second, so each predicate runs once per
+    turn (Spark keeps the projections apart because both columns are
+    referenced twice).  ``answer`` is the first A-E of the bare turn
+    text (assistant turns are the completion by construction), null
+    when there is none.  The word lists are the X8 kernel's
+    (``kernels.extract``).  Whole-stage-codegen friendly, zero shuffle.
     """
     text = F.col("text")
     is_assistant = F.col("role") == "assistant"
@@ -221,15 +224,13 @@ def classify_turns(df: DataFrame) -> DataFrame:
         .when(has_dist & ~has_dir, F.lit("distance"))
         .otherwise(F.lit("other"))
     )
-    answer = F.when(
-        is_assistant, F.nullif(F.regexp_extract(F.col("text"), "([A-E])", 1), F.lit(""))
-    ).otherwise(F.lit(None).cast("string"))
+    answer = F.when(is_assistant, F.regexp_substr(text, F.lit("[A-E]")))
     status = F.when(
-        is_assistant & (block_class == "other") & answer.isNull(), F.lit("fallback")
+        is_assistant & (F.col("block_class") == "other") & F.col("answer").isNull(),
+        F.lit("fallback"),
     ).otherwise(F.lit("ok"))
-    return df.select(
-        "*", block_class.alias("block_class"), answer.alias("answer"), status.alias("status")
-    )
+    classified = df.select("*", block_class.alias("block_class"), answer.alias("answer"))
+    return classified.select("*", status.alias("status"))
 
 
 def _has_border(key: str) -> bool:

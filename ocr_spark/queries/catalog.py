@@ -204,22 +204,11 @@ FROM (
 )
 def x8_block_classify(spark, sf_dir):
     """X8: direction-XOR-distance completion classification
-    (train_cities.py:69-95)."""
-    t = derived_transcripts(spark, sf_dir).filter(F.col("role") == "assistant")
-    has_dir = (
-        F.col("text").contains(" North") | F.col("text").contains(" South")
-        | F.col("text").contains(" East") | F.col("text").contains(" West")
-    )
-    has_dist = (
-        F.col("text").endswith("km") | F.col("text").endswith("ilometers")
-        | F.col("text").endswith("mi") | F.col("text").endswith("iles")
-    )
-    cls = (
-        F.when(has_dir & ~has_dist, F.lit("direction"))
-        .when(has_dist & ~has_dir, F.lit("distance"))
-        .otherwise(F.lit("other"))
-    )
-    return t.select("conv_id", cls.alias("block_class"))
+    (train_cities.py:69-95), by the flagship's ``classify_turns``."""
+    from ocr_spark.pipeline import classify_turns
+
+    t = classify_turns(derived_transcripts(spark, sf_dir))
+    return t.filter(F.col("role") == "assistant").select("conv_id", "block_class")
 
 
 @_register(

@@ -127,14 +127,6 @@ def read_csv_checked(
     return df
 
 
-def extract_from_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """End-to-end reference workflow: JSONL conversations in, extracted
-    per-turn rows out (S1 -> the flagship pipeline)."""
-    from ocr_spark.pipeline import extract_conversations
-
-    return extract_conversations(load_conversations_jsonl(spark, path))
-
-
 #: Declared schema of one feature-explanation record (S9).  The
 #: reference's API export is a JSON array of objects with these fields
 #: (kl.py:458-467); extra fields are pruned by the declared schema.

@@ -61,15 +61,20 @@ def _golden_rows(turn_rows):
                 if split is None:
                     status = "fallback"
                 else:
-                    block_class, ok = classify_completion(r["text"] + "<end_of_turn>\n")
-                    answer = extract_answer("<start_of_turn>model\n" + r["text"])
-                    if not ok and answer is None:
-                        status = "fallback"
+                    block_class, answer, status = _kernel_classify(r["text"])
             out.append(
                 (conv_id, r["turn_idx"], r["role"], r["text"], spans,
                  block_class, answer, status, len(tok.encode(r["text"])))
             )
     return sorted(out)
+
+
+def _kernel_classify(text):
+    """(block_class, answer, status) of one assistant turn by the X8/X2
+    kernels, fed the rendered completion and model turn it stands for."""
+    block_class, ok = classify_completion(text + "<end_of_turn>\n")
+    answer = extract_answer("<start_of_turn>model\n" + text)
+    return block_class, answer, "ok" if ok or answer is not None else "fallback"
 
 
 def _spark_rows(df):
@@ -254,8 +259,48 @@ def test_giant_conversation_reroute(spark):
 
 
 # ---------------------------------------------------------------------------
-# Arrow UDF equivalence fuzz: each UDF's function against its kernel
+# Equivalence fuzz: the native classify and each Arrow UDF's function
+# against its kernel
 # ---------------------------------------------------------------------------
+
+#: direction words with and without their leading space, distance
+#: suffixes with and without a trailing newline, answer letters and
+#: their lowercase and out-of-range neighbours, astral code points
+_CLASSIFY_PIECES = [" North", "North", " South", " East", " West", "km", "km\n", "ilometers",
+                    "iles", "mi", " ", "\n", "A", "B", "C", "D", "E", "F", "a", "b", "c", "d",
+                    "e", "😀", "𝔸", ""]
+_classify_text = st.lists(st.sampled_from(_CLASSIFY_PIECES), max_size=8).map("".join) | st.text(
+    max_size=20)
+_TURN_SCHEMA = "conv_id string, turn_idx int, role string, text string"
+
+
+@settings(max_examples=40, deadline=None)
+@given(turns=st.lists(st.tuples(st.sampled_from(["system", "user", "assistant"]), _classify_text),
+                      min_size=1, max_size=12))
+def test_classify_turns_equals_kernels(spark, turns):
+    """classify_turns == kernels X8/X2 per turn (the _golden_rows rule):
+    assistant turns classified by classify_completion and
+    extract_answer, every other role other / null / ok."""
+    from ocr_spark.pipeline import classify_turns
+
+    df = spark.createDataFrame(  # from pandas: a list is sliced into default.parallelism tasks
+        pd.DataFrame([("c", i, role, text) for i, (role, text) in enumerate(turns)]),
+        _TURN_SCHEMA)
+    got = sorted((r["turn_idx"], r["block_class"], r["answer"], r["status"])
+                 for r in classify_turns(df).collect())
+    want = [(i, *(_kernel_classify(text) if role == "assistant" else ("other", None, "ok")))
+            for i, (role, text) in enumerate(turns)]
+    assert got == want
+
+
+def test_classify_turns_null_assistant_text(spark):
+    """An assistant turn with null text is other / null / fallback."""
+    from ocr_spark.pipeline import classify_turns
+
+    df = spark.createDataFrame(pd.DataFrame([("c", 0, "assistant", None)]), _TURN_SCHEMA)
+    r = classify_turns(df).first()
+    assert (r["block_class"], r["answer"], r["status"]) == ("other", None, "fallback")
+
 
 #: overlapping / adjacent keys, multi-byte (é, 中) and astral (😀, 𝔸)
 #: neighbours, key fragments that must not count as hits, regex

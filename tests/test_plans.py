@@ -126,6 +126,20 @@ def test_native_path_has_no_exchange_or_python(spark):
     assert "Python" not in plan and "MapInPandas" not in plan
 
 
+def test_classify_predicates_evaluated_once(spark):
+    """classify_turns' ``status`` reads the computed ``block_class`` and
+    ``answer`` columns: its plan holds no more contains / endswith /
+    regexp calls than one that selects only those two columns (a
+    ``status`` that restates them doubles every count)."""
+    from ocr_spark.pipeline import classify_turns
+    from ocr_spark.synth import transcripts
+
+    c = classify_turns(transcripts(spark, 50, seed=42))
+    full, two = _plan(c), _plan(c.drop("status"))
+    for call in ("Contains(", "EndsWith(", "regexp_"):
+        assert 0 < full.count(call) <= two.count(call), call
+
+
 def test_simhash_is_one_aggregation_no_crossjoin(spark):
     """dedup_simhash (round 3): the 16 bit votes are conditional
     aggregates in ONE groupBy(doc_id) — the words x bits crossJoin of

@@ -8,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.kernels import classify_completion, merge_system_turn, render_chat_template, split_completion
+from ocr_spark.pipeline import extract_turns
 from ocr_spark.sources import (
-    extract_from_jsonl,
     load_conversations_jsonl,
     read_csv_checked,
     write_conversations_jsonl,
@@ -104,7 +104,7 @@ def test_reference_jsonl_end_to_end(spark):
     """The real reference corpus through S1 + the flagship pipeline:
     same direction/distance split the reference's tighten_mask sees
     (520/525 over 1045 conversations)."""
-    ex = extract_from_jsonl(spark, REFERENCE_JSONL)
+    ex = extract_turns(load_conversations_jsonl(spark, REFERENCE_JSONL))
     counts = {
         r["block_class"]: r["n"]
         for r in ex.filter(F.col("role") == "assistant")
@@ -118,7 +118,7 @@ def test_reference_jsonl_end_to_end(spark):
 def test_reference_jsonl_matches_pure_kernels(spark):
     """Spark S1 loader + pipeline == pure-Python kernel drive over the
     same file (the per-turn text-equality contract on REAL data)."""
-    ex = extract_from_jsonl(spark, REFERENCE_JSONL)
+    ex = extract_turns(load_conversations_jsonl(spark, REFERENCE_JSONL))
     got = {}
     for r in ex.filter(F.col("role") == "assistant").collect():
         got[r["clean_text"]] = (r["block_class"], r["status"])
