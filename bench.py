@@ -23,16 +23,17 @@ Sections:
    metric.
 
 3. **Scaling efficiency** — the same extraction job, same input
-   parquet, run in fresh CPU-pinned subprocesses at three parallelism
-   levels (cpus/16, cpus/4, cpus), yielding two N-vs-4N pairs
-   (sandbox stand-in for N vs 4N executors per the driver
-   instruction).  efficiency = (throughput_4N / throughput_N) / 4;
+   parquet, run in fresh CPU-pinned subprocesses at the parallelism
+   levels cpus/16, cpus/4 and cpus (a single-box stand-in for N vs 4N
+   executors): two N-vs-4N pairs from 16 cores up, one (1 -> 4 on a
+   4-core host) below that.  efficiency = (throughput_4N / throughput_N) / 4;
    the north_rule gate is >= 0.8.  Timing excludes JVM/session
    startup and first-pass warmup (JIT + Python worker fork) at every
    level.  See BENCH.md for why the top pair underestimates a real
    cluster (shared single-box DRAM bandwidth).
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs
+this process may run on, ``len(os.sched_getaffinity(0))``),
 OCR_BENCH_CONVS (synthetic conversation count, default 1000000 ->
 ~16.5M turns; sized so compute dominates the per-job serial floor at
 4N cores), OCR_BENCH_SKIP_SCALING=1 to skip section 3.
@@ -170,7 +171,8 @@ def _spawn_throughput(cpus: int, data_dir: str) -> dict:
     cmd = [sys.executable, os.path.abspath(__file__), "--throughput-worker",
            "--cpus", str(cpus), "--data", data_dir]
     if shutil.which("taskset"):
-        cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+        allowed = sorted(os.sched_getaffinity(0))[:cpus]
+        cmd = ["taskset", "-c", ",".join(map(str, allowed))] + cmd
     out = subprocess.run(
         cmd, capture_output=True, text=True, timeout=3600,
         cwd=os.path.dirname(os.path.abspath(__file__)),
@@ -235,7 +237,7 @@ def main() -> None:
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_convs = int(os.environ.get("OCR_BENCH_CONVS", "1000000"))
     skip_scaling = args.skip_scaling or os.environ.get("OCR_BENCH_SKIP_SCALING") == "1"
 

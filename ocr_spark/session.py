@@ -96,6 +96,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column / functions call to walk the Python
+        # stack and send the call site to the JVM: 4-5 extra py4j round
+        # trips per op.  Off, building extract_conversations sends ~215
+        # py4j commands instead of ~675, and a warm render_skewed pass
+        # ~600 instead of ~2,900, not counting py4j's memory commands
+        # (0.2-0.3 s less driver + py4j-thread CPU per pass, 4-core
+        # VM).  Lost: an error's DataFrame query context names the
+        # operator but no longer the Python file:line.  extra_conf can
+        # turn it back on while debugging (PySpark reads it once per
+        # process, at the first Column call).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

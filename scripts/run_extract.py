@@ -42,10 +42,15 @@ def main() -> int:
     args = ap.parse_args()
 
     # Under spark-submit the session is configured by submit args; this
-    # only fills in app-level SQL conf defaults.
+    # sets one app-level conf, as session.get_spark does: PySpark's
+    # per-Column call-site capture off (4-5 py4j round trips per op).
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("ocr_spark_extract").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ocr_spark_extract")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     from ocr_spark.lineage import CheckpointedExtraction

@@ -9,6 +9,7 @@ import contextlib
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.queries import QUERIES
@@ -74,6 +75,49 @@ def test_flagship_guard_resolves_to_cheapest_plan(spark):
         assert sc.statusTracker().getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_flagship_plan_build_py4j_round_trips(spark, monkeypatch):
+    """Building extract_conversations sends about 215 py4j commands to
+    the JVM.  With PySpark's per-Column call-site capture on
+    (``spark.python.sql.dataFrameDebugging.enabled``, the PySpark
+    default) the same build sends about 675: each Column op adds a
+    Python stack walk and 4-5 round trips.  Memory commands ("m\\n…")
+    are not counted: py4j's finalizer thread sends them at
+    nondeterministic times."""
+    from ocr_spark.pipeline import extract_conversations
+    from ocr_spark.synth import transcripts
+
+    t = transcripts(spark, 50, seed=42)
+    extract_conversations(t)  # first build also resolves one-time lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    extract_conversations(t)
+    monkeypatch.undo()
+    n = sum(1 for c in sent if not c.startswith("m\n"))
+    assert 0 < n <= 240, n
+
+
+def test_errors_keep_condition_but_not_python_call_site(spark):
+    """The cost of the call-site capture being off: an error still
+    carries its condition and a DataFrame query context naming the
+    operator, but the context's call site is a JVM frame, not this
+    file's line."""
+    from pyspark.errors import ArithmeticException
+
+    with pytest.raises(ArithmeticException) as info:
+        spark.range(1).select(F.lit(1) / F.lit(0)).collect()
+    assert info.value.getCondition() == "DIVIDE_BY_ZERO"
+    contexts = info.value.getQueryContext()
+    assert [c.fragment() for c in contexts] == ["divide"]
+    assert not any(__file__ in c.callSite() for c in contexts)
 
 
 def test_flagship_runs_one_scan_task_per_core_on_small_files(spark, tmp_path):
